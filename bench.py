@@ -130,9 +130,10 @@ def main() -> None:
     # 36.9 s purely because the host carried residual load from the
     # previous command — a loaded sample read as a 49% regression until
     # a judge A/B refuted it.  The recorded JSON now carries its own
-    # exculpatory evidence: wait (bounded, <=5 min) for 1-min load < 2
-    # before pass 1, and record loadavg at the gate and before every
-    # pass so any future outlier is attributable from the file alone.
+    # exculpatory evidence: wait (bounded, <=600 s) for 1-min load < 1
+    # (SPARK_GRAFT_LOAD_GATE) before pass 1, and record loadavg at the
+    # gate and before every pass so any future outlier is attributable
+    # from the file alone.
     # r14 protocol hardening (r13 verdict #2): the r13 driver bench ran
     # at 1-min load 6.4-9.3 and manufactured 21 phantom regressions the
     # judge had to refute by hand.  Tightened gate (2.0 -> 1.0, wait

@@ -77,11 +77,13 @@ def chunk_documents(
     """Lateral-join the UDTF against every document."""
     spark = documents.sparkSession
     register_udtfs(spark)
-    documents.createOrReplaceTempView("__docs_to_chunk")
+    # {d} binds the DataFrame to a uuid-named view for this one call
     return spark.sql(
-        f"""
-        SELECT d.doc_id, c.chunk_idx, c.chunk, c.n_tokens
-        FROM __docs_to_chunk d,
-             LATERAL chunk_document(d.text, {int(chunk_size)}) c
         """
+        SELECT d.doc_id, c.chunk_idx, c.chunk, c.n_tokens
+        FROM {d} d,
+             LATERAL chunk_document(d.text, {n}) c
+        """,
+        d=documents,
+        n=int(chunk_size),
     )

@@ -4,7 +4,8 @@ The reference computed no local aggregation (trophy totals arrived
 pre-aggregated; /root/reference/main.py:320), so this module supplies the
 engine's aggregation surface directly from Spark: hash aggregate with
 automatic partial (map-side) + final phases, multi-dimensional rollup/
-cube/grouping-sets, distinct and approximate aggregates.
+cube (explicit GROUPING SETS are written in queries/relational.py),
+distinct and approximate aggregates.
 
 Scale notes: groupBy on a low-cardinality key set (returnflag ×
 linestatus = ~6 groups) partial-aggregates down to almost nothing before
@@ -174,20 +175,6 @@ def agg_cube(lineitem: DataFrame) -> DataFrame:
             F.col("l_returnflag").asc_nulls_first(),
             F.col("l_linestatus").asc_nulls_first(),
         )
-    )
-
-
-def agg_grouping_sets(lineitem: DataFrame) -> DataFrame:
-    """Explicit GROUPING SETS — the general form rollup/cube desugar to."""
-    lineitem.createOrReplaceTempView("_gs_lineitem")
-    return lineitem.sparkSession.sql(
-        """
-        SELECT l_returnflag, l_linestatus,
-               round(sum(l_extendedprice), 2) AS sum_price
-        FROM _gs_lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST
-        """
     )
 
 

@@ -32,11 +32,14 @@ pins all three choices.
 
 from __future__ import annotations
 
+import uuid
 from collections.abc import Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
+
+from play_bq_gcp_spark.session import scoped_conf
 
 END_OF_WORD = "▁"  # marks word end so merges can't cross words
 
@@ -127,11 +130,6 @@ def bpe_train(
         # the shuffle and its extra stage from every loop job
         # (measured: 2 stages/job -> 1 at fixture scale)
         wf = wf.coalesce(parts)
-    conf = spark.conf
-    prev_aqe = conf.get("spark.sql.adaptive.enabled")
-    prev_sp = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", str(parts))
     merges: list[tuple[str, str]] = []
     # Each iteration is ONE constant SQL statement over a re-registered
     # temp view instead of a freshly composed Column tree: the nested
@@ -141,39 +139,47 @@ def bpe_train(
     # identical tree — interleaved A/B: 3.8 s → 2.4 s on the 30-merge
     # loop, merge list asserted identical.  The view binds at analysis
     # time (sql() analyzes eagerly), so re-registering it each
-    # iteration cannot retroactively change an earlier plan.
-    pair_sql = """
+    # iteration cannot retroactively change an earlier plan.  The view
+    # name is uuid-suffixed so concurrent trainings on one session
+    # cannot clobber each other; it is spliced in by hand because the
+    # merge SQL embeds corpus symbols, which may contain the braces
+    # ``spark.sql(..., df=...)`` formatting would parse.
+    view = f"__bpe_wf_{uuid.uuid4().hex[:12]}"
+    pair_sql = f"""
         SELECT p, sum(freq) AS n
         FROM (SELECT explode(zip_with(slice(syms, 1, size(syms) - 1),
                                       slice(syms, 2, size(syms) - 1),
                                       (x, y) -> struct(x AS a, y AS b)))
                          AS p,
                      freq
-              FROM __bpe_wf)
+              FROM {view})
         GROUP BY p ORDER BY n DESC, p.a, p.b LIMIT 1
     """
-    try:
-        for it in range(n_merges):
-            wf.createOrReplaceTempView("__bpe_wf")
-            best = spark.sql(pair_sql).first()
-            if best is None or best["n"] < min_pair_count:
-                break
-            a, b = best["p"]["a"], best["p"]["b"]
-            merges.append((a, b))
-            wf = spark.sql(
-                "SELECT " + _merge_fold(a, b) + " AS syms, freq "
-                "FROM __bpe_wf"
-            )
-            if (it + 1) % checkpoint_every == 0:
-                wf = wf.localCheckpoint(eager=True)
-                if parts <= wf.rdd.getNumPartitions():
-                    # re-assert SinglePartition/width after the
-                    # checkpoint (LogicalRDD forgets it — see above)
-                    wf = wf.coalesce(parts)
-    finally:
-        conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        conf.set("spark.sql.shuffle.partitions", prev_sp)
-        spark.catalog.dropTempView("__bpe_wf")
+    loop_conf = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(parts),
+    }
+    with scoped_conf(spark, loop_conf):
+        try:
+            for it in range(n_merges):
+                wf.createOrReplaceTempView(view)
+                best = spark.sql(pair_sql).first()
+                if best is None or best["n"] < min_pair_count:
+                    break
+                a, b = best["p"]["a"], best["p"]["b"]
+                merges.append((a, b))
+                wf = spark.sql(
+                    "SELECT " + _merge_fold(a, b) + " AS syms, freq "
+                    f"FROM {view}"
+                )
+                if (it + 1) % checkpoint_every == 0:
+                    wf = wf.localCheckpoint(eager=True)
+                    if parts <= wf.rdd.getNumPartitions():
+                        # re-assert SinglePartition/width after the
+                        # checkpoint (LogicalRDD forgets it — see above)
+                        wf = wf.coalesce(parts)
+        finally:
+            spark.catalog.dropTempView(view)
     return merges
 
 

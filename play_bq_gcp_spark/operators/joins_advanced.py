@@ -21,11 +21,12 @@ equi-join on bucket + residual filter (``range_join_bucketed``).
 from __future__ import annotations
 
 from collections.abc import Sequence
-from contextlib import contextmanager
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, Window, functions as F
+
+from play_bq_gcp_spark.session import scoped_conf
 
 
 def asof_join(
@@ -219,12 +220,7 @@ def temporal_join(
     return f.join(v, cond).drop(F.col(f"v.{key}"))
 
 
-@contextmanager
-def runtime_bloom_filter(
-    spark,
-    application_side_min_scan: str = "1KB",
-    creation_side_max: str = "100MB",
-):
+def runtime_bloom_filter(spark):
     """Scope Spark's runtime Bloom-filter join pushdown
     (``InjectRuntimeFilter``) to one materialization.
 
@@ -250,26 +246,12 @@ def runtime_bloom_filter(
     confs = {
         "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
         "spark.sql.optimizer.runtime.bloomFilter."
-        "applicationSideScanSizeThreshold": application_side_min_scan,
+        "applicationSideScanSizeThreshold": "1KB",
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold":
-            creation_side_max,
+            "100MB",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    saved = {}
-    for k, v in confs.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:  # noqa: BLE001 - unset conf
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    return scoped_conf(spark, confs)
 
 
 def bloom_pruned_join(

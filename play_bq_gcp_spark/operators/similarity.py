@@ -1279,7 +1279,7 @@ def _int_argmin_assign(vq, cents_lit) -> F.Column:
     expression shared by ``ivf_exact_topk`` and ``ivfpq_exact_topk``
     (ONE definition: a tie-break or cast tweak must move every exact
     twin in lockstep or the composed twin's oracle silently drifts —
-    r11 review finding #2, the ``_run_tws_stream`` dedup precedent)."""
+    r11 review finding #2, the ``_run_tws`` dedup precedent)."""
     return bind(
         vq,
         lambda v: bind(

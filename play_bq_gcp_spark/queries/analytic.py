@@ -496,7 +496,7 @@ def rest_stream_ingest(spark: SparkSession, sf: str) -> DataFrame:
             time.sleep(0.2)
         q.stop()
         q.awaitTermination(30)
-    return (
+    out = (
         spark.table(name)
         .select(
             "title_id", "category", "play_count", "first_played_date_time"
@@ -504,6 +504,8 @@ def rest_stream_ingest(spark: SparkSession, sf: str) -> DataFrame:
         .orderBy("title_id")
         .localCheckpoint(eager=True)
     )
+    spark.catalog.dropTempView(name)
+    return out
 
 
 @register(

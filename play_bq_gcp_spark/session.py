@@ -9,6 +9,8 @@ comparable with the DuckDB oracle and stable across deployments.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -67,3 +69,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set ``conf`` on the session for one block, then put every key
+    back as it was — its explicit value, or unset if it had none —
+    even when the block raises.  The ONE way an operator changes
+    session conf: a plan-time knob set around a lazy plan is a no-op
+    (optimization happens inside the action), so the block must
+    contain the action, and nothing may outlive it."""
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

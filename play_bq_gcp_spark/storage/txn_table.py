@@ -45,6 +45,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from play_bq_gcp_spark.session import scoped_conf
+
 
 class CommitConflict(Exception):
     """Another writer published the version this commit was built
@@ -1039,15 +1041,9 @@ def _write_partition_aligned(
         f.name == part_col and f.dataType.typeName().startswith("timestamp")
         for f in df.schema.fields
     )
-    if part_is_ts:
-        conf = df.sparkSession.conf
-        prev = conf.get(ts_key, "INT96")
-        conf.set(ts_key, "TIMESTAMP_MICROS")
-        try:
-            writer.parquet(out)
-        finally:
-            conf.set(ts_key, prev)
-    else:
+    with scoped_conf(
+        df.sparkSession, {ts_key: "TIMESTAMP_MICROS"} if part_is_ts else {}
+    ):
         writer.parquet(out)
     fs = _fs_for(path)
     files: list[str] = []

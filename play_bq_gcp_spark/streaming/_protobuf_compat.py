@@ -20,10 +20,10 @@ validator to accept a same-major skew and then PROVES usability with a
 serialize/parse round-trip of an actual ``StateMessage`` before
 reporting success — a lying runtime fails the probe, not the query.
 
-Worker use: pyspark calls ``StatefulProcessor.init`` before it builds
-the first protobuf message (``stateful_processor_util.py:80-82``), so a
-processor whose ``init`` calls ``ensure_protobuf()`` bootstraps the
-worker process in time.  The caller must ship this module BY VALUE
+Worker use: a ``StatefulProcessor`` that also subclasses
+``WorkerBootstrap`` runs ``ensure_protobuf()`` in the worker while it
+is being unpickled — before the worker's state client builds its first
+protobuf message.  The caller must ship this module BY VALUE
 (``pyspark.cloudpickle.register_pickle_by_value``) because workers
 cannot import the repo package.
 """
@@ -120,3 +120,27 @@ def ensure_protobuf() -> bool:
         return out.version == 2
     except Exception:  # noqa: BLE001 — any failure means "not usable"
         return False
+
+
+class WorkerBootstrap:
+    """Mixin for transformWithState ``StatefulProcessor`` classes:
+    unpickling an instance stands protobuf up first, then builds a
+    fresh processor.
+
+    Workers deserialize the UDF (the processor) before the state
+    client sends its first protobuf message — in BOTH the executor
+    worker (worker.py read_single_udf precedes the api client) and the
+    PRE_INIT driver worker (transform_with_state_driver_worker.py
+    read_command precedes set_handle_state).  Bootstrapping at unpickle
+    time is therefore always early enough.  ``__reduce__``, not
+    ``__setstate__``: pickle skips ``__setstate__`` entirely when the
+    instance dict is empty, which it is pre-init."""
+
+    def __reduce__(self):
+        return (_rebuild_processor, (type(self),))
+
+
+def _rebuild_processor(cls: type) -> object:
+    if not ensure_protobuf():
+        raise RuntimeError("google.protobuf unusable in worker")
+    return cls()

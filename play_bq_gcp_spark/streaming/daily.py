@@ -18,9 +18,6 @@ sinks are parquet/Kafka via ``foreachBatch``.
 
 from __future__ import annotations
 
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from play_bq_gcp_spark.catalog import (
@@ -30,6 +27,10 @@ from play_bq_gcp_spark.catalog import (
     table_path,
 )
 from play_bq_gcp_spark.scratch import scratch_dir
+from play_bq_gcp_spark.streaming.available_now import (
+    STATE_CONF,
+    run_available_now,
+)
 
 
 _STREAM_DIRS: dict[str, str] = {}
@@ -69,57 +70,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_nanos_ts(raw, ("ts",))
 
 
-def _run_to_memory(
-    df: DataFrame,
-    output_mode: str,
-    state_partitions: int = 8,
-    no_data_batches: bool = True,
-) -> DataFrame:
-    """Drive a streaming DF to completion (AvailableNow) into a memory
-    sink and return the materialized result as a batch DataFrame.
-
-    The state-store partition count is fixed at first start for the
-    query's lifetime; size it to the key space (here: hours×types /
-    users — hundreds), not the batch shuffle setting — every extra
-    partition is an empty state store committed per micro-batch.
-
-    ``no_data_batches=False`` skips AvailableNow's closing no-data
-    micro-batch.  ONLY legal when the query's OUTPUT doesn't depend on
-    the final watermark advance: complete-mode aggregation (the full
-    result re-emits every data batch) or stateless maps.  Append-mode
-    windows, outer-join null completion, and timeout/timer sessions
-    all EMIT in that closing batch — they must keep the default.
-    Measured r5: the closing batch costs ~1.4 s on the dedup-counts
-    entry — pure state-commit overhead for a result already final."""
-    name = f"s_{uuid.uuid4().hex[:12]}"
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_ndb = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    spark.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled",
-        "true" if no_data_batches else "false",
-    )
-    try:
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb
-        )
-    # the memory-sink table stays registered in the session after stop
-    return spark.table(name)
-
-
 def windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time windows per event_type (complete mode
     → every window emitted, deterministic for the oracle)."""
@@ -132,7 +82,7 @@ def windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 4).alias("total_value"),
         )
     )
-    out = _run_to_memory(agg, "complete")
+    out = run_available_now(agg, "complete", STATE_CONF)
     return out.select(
         F.col("w.start").alias("window_start"), "event_type", "n", "total_value"
     )
@@ -148,7 +98,7 @@ def deduped_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = doubled.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    out = _run_to_memory(deduped, "append")
+    out = run_available_now(deduped, "append", STATE_CONF)
     return out.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).orderBy(
         "event_type"
     )
@@ -174,7 +124,9 @@ def windowed_deduped_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # complete mode: the last DATA batch already emits the final
     # result; the closing no-data batch only evicts state (~1.4 s of
     # commit overhead here) — skip it
-    out = _run_to_memory(agg, "complete", no_data_batches=False)
+    out = run_available_now(
+        agg, "complete", STATE_CONF, no_data_batches=False
+    )
     return out.select(
         F.col("w.start").alias("window_start"), "event_type", "n", "total_value"
     )
@@ -218,7 +170,9 @@ def purchase_click_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTES")),
         "inner",
     ).select("purchase_id", "click_id", "p_user", "p_ts", "c_ts")
-    return _run_to_memory(joined, "append").orderBy("purchase_id", "click_id")
+    return run_available_now(joined, "append", STATE_CONF).orderBy(
+        "purchase_id", "click_id"
+    )
 
 
 def purchase_click_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -262,7 +216,7 @@ def purchase_click_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFram
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTES")),
         "left_outer",
     ).select("purchase_id", "click_id", "p_user", "p_ts", "c_ts")
-    return _run_to_memory(joined, "append").orderBy(
+    return run_available_now(joined, "append", STATE_CONF).orderBy(
         "purchase_id", "click_id"
     )
 
@@ -314,7 +268,7 @@ def purchase_click_full_outer_join(
     ).select(
         "purchase_id", "click_id", "p_user", "c_user", "p_ts", "c_ts"
     )
-    return _run_to_memory(joined, "append").orderBy(
+    return run_available_now(joined, "append", STATE_CONF).orderBy(
         "purchase_id", "click_id"
     )
 
@@ -357,7 +311,7 @@ def purchase_click_right_outer_join(
     ).select(
         "purchase_id", "click_id", "c_user", "p_ts", "c_ts"
     )
-    return _run_to_memory(joined, "append").orderBy(
+    return run_available_now(joined, "append", STATE_CONF).orderBy(
         "click_id", "purchase_id"
     )
 
@@ -402,7 +356,7 @@ def purchase_click_left_semi_join(
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 30 MINUTES")),
         "left_semi",
     )
-    return _run_to_memory(joined, "append").orderBy("purchase_id")
+    return run_available_now(joined, "append", STATE_CONF).orderBy("purchase_id")
 
 
 def session_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -414,7 +368,7 @@ def session_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_in_session"))
     )
-    out = _run_to_memory(agg, "complete")
+    out = run_available_now(agg, "complete", STATE_CONF)
     return (
         out.groupBy("user_id")
         .agg(
@@ -465,14 +419,7 @@ def foreach_batch_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             batch_agg.write.mode("overwrite").parquet(state_path)
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            ev.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_available_now(ev, merge_batch)
 
     return (
         spark.read.parquet(state_path)
@@ -560,14 +507,7 @@ def countmin_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         merge_cms_state(spark, state_path, batch_df, epoch_id)
 
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            ev.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_available_now(ev, merge_batch)
 
     sketch = spark.read.parquet(state_path)
     toks = read_table(spark, sf_dir, "events").select(
@@ -605,4 +545,4 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = stream.join(F.broadcast(dim), "user_id").select(
         "event_id", "user_id", "tier"
     )
-    return _run_to_memory(joined, "append").orderBy("event_id")
+    return run_available_now(joined, "append", STATE_CONF).orderBy("event_id")

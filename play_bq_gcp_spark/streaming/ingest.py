@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from play_bq_gcp_spark.catalog import read_table
 from play_bq_gcp_spark.scratch import scratch_dir
+from play_bq_gcp_spark.streaming.available_now import run_available_now
 
 _BATCH_DIRS: dict[tuple[str, int], str] = {}
 
@@ -188,13 +189,7 @@ def run_ingest_stream(
             # batch's writes, before the checkpoint commit
             on_batch(batch_id, time.monotonic() - t0)
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream, handle, checkpoint=os.path.join(work, "ckpt"))
     return spark.read.parquet(os.path.join(verd_dir, "batch_*"))
 
 
@@ -584,13 +579,7 @@ def run_line_stream(
             # handler's logic out-of-line
             on_batch(batch_id, time.monotonic() - t0)
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream, handle, checkpoint=os.path.join(work, "ckpt"))
     return spark.read.parquet(os.path.join(out_dir, "batch_*"))
 
 
@@ -739,11 +728,5 @@ def run_epoch_stream(
             # here to simulate a crash in that window
             on_batch(batch_id, time.monotonic() - t0)
 
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream, handle, checkpoint=os.path.join(work, "ckpt"))
     return spark.read.parquet(os.path.join(out_dir, "batch_*"))

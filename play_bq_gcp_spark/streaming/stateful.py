@@ -27,11 +27,22 @@ import tempfile
 
 import pandas as pd
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.stateful_processor import (
+    StatefulProcessor,
+    StatefulProcessorHandle,
+)
 
 from play_bq_gcp_spark.catalog import ensure_nanos_conf, table_path
 from play_bq_gcp_spark.scratch import scratch_dir
+from play_bq_gcp_spark.streaming import _protobuf_compat
+from play_bq_gcp_spark.streaming._protobuf_compat import WorkerBootstrap
+from play_bq_gcp_spark.streaming.available_now import (
+    STATE_CONF,
+    run_available_now,
+)
 
 _CHUNK_DIRS: dict[tuple[str, int], str] = {}
 
@@ -60,7 +71,6 @@ def running_user_stats(
     spark: SparkSession,
     sf_dir: str,
     n_chunks: int = 4,
-    state_partitions: int = 8,
 ) -> DataFrame:
     """Per-user running (count, sum) maintained in GroupState across
     micro-batches; returns the final per-user totals — which must equal
@@ -93,36 +103,11 @@ def running_user_stats(
     )
 
     # drive to completion; memory sink collects every per-batch update.
-    # State-store partition count is FIXED at first start for a
-    # streaming query's lifetime — size it to the key space (150 users
-    # here), not the session's batch shuffle setting; every extra
-    # partition is an empty state store committed per micro-batch.
-    import uuid
-
-    name = f"s_{uuid.uuid4().hex[:12]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_ndb = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     # NoTimeout + no watermark: the closing no-data micro-batch can
     # never emit or evict anything here — skip its state commit
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                running.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb
-        )
-    updates = spark.table(name)
+    updates = run_available_now(
+        running, "update", STATE_CONF, no_data_batches=False
+    )
 
     # n_events is strictly increasing within a key → the max-count row
     # is the final state
@@ -143,7 +128,6 @@ def running_user_stats_native(
     spark: SparkSession,
     sf_dir: str,
     n_chunks: int = 4,
-    state_partitions: int = 8,
 ) -> DataFrame:
     """``running_user_stats`` restated as a NATIVE streaming
     aggregation — identical input, output schema, and final totals
@@ -181,26 +165,8 @@ def running_user_stats_native(
         F.count(F.lit(1)).alias("n_events"),
         F.sum("value").alias("total_value"),
     )
-    import uuid
-
-    name = f"s_{uuid.uuid4().hex[:12]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
-        spark.table(name)
+        run_available_now(agg, "complete", STATE_CONF)
         .select(
             "user_id",
             "n_events",
@@ -215,101 +181,65 @@ def tws_available() -> bool:
     protobuf; usable iff ``_protobuf_compat.ensure_protobuf`` can stand
     up a runtime (pip-installed, or the public pure-Python runtime the
     host's Cloud SDK ships) and round-trip a real StateMessage."""
-    from play_bq_gcp_spark.streaming._protobuf_compat import ensure_protobuf
-
-    return ensure_protobuf()
+    return _protobuf_compat.ensure_protobuf()
 
 
-def _run_tws_stream(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    state_partitions: int,
-    output_mode: str,
-    skip_no_data: bool = False,
-    ckpt_dir: str | None = None,
-) -> DataFrame:
-    """Memory-sink availableNow harness shared by every
-    transformWithState exemplar: pin shuffle partitions and the
-    RocksDB provider (tws typed state requires it), optionally skip
-    the closing no-data micro-batch (TimeMode "None": it cannot emit
-    or evict anything, so its store commit is pure overhead), drain,
-    restore every session conf, and return the sink table.  ONE
-    definition (r10 self-review #5: five byte-near-identical copies
-    had to move in lockstep — a provider or trigger tweak applied to
-    one twin could silently drift the others)."""
-    import uuid
-
-    name = f"s_{uuid.uuid4().hex[:12]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    _CHANGELOG_KEY = (
-        "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled"
-    )
-    prev_changelog = spark.conf.get(_CHANGELOG_KEY, None)
-    prev_ndb = (
-        spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-        if skip_no_data
-        else None
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    if skip_no_data:
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "false"
-        )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
+# RocksDB is mandatory for tws typed state, so the r10 recovery probe's
+# decision rule applies: ship changelog checkpointing — per-commit
+# upload becomes a changelog append instead of zip+upload of changed
+# SSTs (-58% commit cost measured, SCALING.md r10 recovery probe), with
+# recovery bounded by snapshot cadence.  Pinned in
+# tests/test_streaming.py::test_tws_changelog_checkpointing_*
+_TWS_CONF = {
+    **STATE_CONF,
+    "spark.sql.streaming.stateStore.providerClass": (
         "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    # RocksDB is mandatory for tws typed state, so the r10 recovery
-    # probe's decision rule applies: ship changelog checkpointing —
-    # per-commit upload becomes a changelog append instead of
-    # zip+upload of changed SSTs (-58% commit cost measured,
-    # SCALING.md r10 recovery probe), with recovery bounded by
-    # snapshot cadence.  Pinned in
-    # tests/test_streaming.py::test_tws_changelog_checkpointing_*
-    spark.conf.set(_CHANGELOG_KEY, "true")
-    try:
-        with tempfile.TemporaryDirectory() as tmp:
-            # ckpt_dir injection exists so tests can inspect the kept
-            # checkpoint (changelog files) after the run
-            q = (
-                stream_df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt_dir or tmp)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-        if prev_changelog is None:
-            spark.conf.unset(_CHANGELOG_KEY)
-        else:
-            spark.conf.set(_CHANGELOG_KEY, prev_changelog)
-        if skip_no_data:
-            spark.conf.set(
-                "spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb
-            )
-    return spark.table(name)
+        "RocksDBStateStoreProvider"
+    ),
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": (
+        "true"
+    ),
+}
 
+
+def _run_tws(
+    ev: DataFrame,
+    processor: type[StatefulProcessor],
+    output_schema: str,
+    output_mode: str,
+    time_mode: str,
+    no_data_batches: bool = True,
+    checkpoint: str | None = None,
+) -> DataFrame:
+    """The transformWithState bootstrap and harness shared by every
+    exemplar: refuse without a usable protobuf, ship
+    ``_protobuf_compat`` by value (workers cannot import the repo
+    package) so ``processor`` — a ``WorkerBootstrap`` subclass — stands
+    protobuf up inside each worker, key ``ev`` on user_id, and drain it
+    into a memory sink under ``_TWS_CONF``.  ONE definition (r10
+    self-review #5: five byte-near-identical copies had to move in
+    lockstep).  ``checkpoint`` exists so tests can inspect the kept
+    checkpoint (changelog files) after the run."""
+    if not tws_available():
+        raise RuntimeError(
+            "transformWithStateInPandas needs google.protobuf, which is "
+            "not usable in this environment; the applyInPandasWithState "
+            "twins (running_user_stats, session_close_on_timeout) work "
+            "without it"
+        )
+    cloudpickle.register_pickle_by_value(_protobuf_compat)
+    out = ev.groupBy("user_id").transformWithStateInPandas(
+        processor(), output_schema, output_mode, time_mode
+    )
+    return run_available_now(
+        out, output_mode.lower(), _TWS_CONF, no_data_batches, checkpoint
+    )
 
 
 def running_user_stats_tws(
     spark: SparkSession,
     sf_dir: str,
     n_chunks: int = 4,
-    state_partitions: int = 8,
     ckpt_dir: str | None = None,
 ) -> DataFrame:
     """The same running per-user aggregate on the NEWER arbitrary-state
@@ -320,29 +250,6 @@ def running_user_stats_tws(
     against the same batch GROUP BY truth.
 
     Requires a usable ``google.protobuf`` (see ``tws_available``)."""
-    import uuid
-
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf, which is "
-            "not usable in this environment; use running_user_stats "
-            "(applyInPandasWithState) instead"
-        )
-
-    import pandas as pd
-    from pyspark import cloudpickle
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from play_bq_gcp_spark.streaming import _protobuf_compat
-
-    # workers cannot import the repo package — ship the bootstrap by
-    # value so the processor can stand protobuf up inside the worker
-    cloudpickle.register_pickle_by_value(_protobuf_compat)
-    _boot = _protobuf_compat.ensure_protobuf
-
     chunk_dir = _chunked_events_dir(spark, sf_dir, n_chunks)
     schema = spark.read.parquet(chunk_dir).schema
     ev = (
@@ -352,19 +259,7 @@ def running_user_stats_tws(
         .select("user_id", "value")
     )
 
-    class RunningStats(StatefulProcessor):
-        # Workers deserialize the UDF (this object) before the state
-        # client sends its first protobuf message — in BOTH the
-        # executor worker (worker.py read_single_udf precedes the api
-        # client) and the PRE_INIT driver worker
-        # (transform_with_state_driver_worker.py read_command precedes
-        # set_handle_state).  Bootstrapping protobuf at unpickle time
-        # is therefore always early enough.  __reduce__, not
-        # __setstate__: pickle skips __setstate__ entirely when the
-        # instance dict is empty, which it is pre-init.
-        def __reduce__(self):
-            return (_rebuild_running_stats, ())
-
+    class RunningStats(WorkerBootstrap, StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._agg = handle.getValueState(
                 "agg", "n_events long, total_value double"
@@ -383,22 +278,14 @@ def running_user_stats_tws(
         def close(self) -> None:
             pass
 
-    def _rebuild_running_stats():
-        if not _boot():
-            raise RuntimeError("google.protobuf unusable in worker")
-        return RunningStats()
-
-    running = ev.groupBy("user_id").transformWithStateInPandas(
-        RunningStats(), OUTPUT_SCHEMA, "Update", "None"
-    )
-
-    updates = _run_tws_stream(
-        spark,
-        running,
-        state_partitions,
-        "update",
-        skip_no_data=True,
-        ckpt_dir=ckpt_dir,
+    updates = _run_tws(
+        ev,
+        RunningStats,
+        OUTPUT_SCHEMA,
+        "Update",
+        "None",
+        no_data_batches=False,
+        checkpoint=ckpt_dir,
     )
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
@@ -471,7 +358,6 @@ def session_close_on_timeout(
     sf_dir: str,
     gap_s: int = 1800,
     n_chunks: int = 4,
-    state_partitions: int = 8,
 ) -> DataFrame:
     """Event-time-timeout sessionization (the GroupStateTimeout surface
     ``running_user_stats`` doesn't use): per-user sessions accumulate in
@@ -573,25 +459,9 @@ def session_close_on_timeout(
         GroupStateTimeout.EventTimeTimeout,
     )
 
-    import uuid
-
-    name = f"s_{uuid.uuid4().hex[:12]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        with tempfile.TemporaryDirectory() as ckpt:
-            q = (
-                sessions.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(name).orderBy("user_id", "start_us")
+    return run_available_now(sessions, "append", STATE_CONF).orderBy(
+        "user_id", "start_us"
+    )
 
 
 def session_close_on_timer_tws(
@@ -599,7 +469,6 @@ def session_close_on_timer_tws(
     sf_dir: str,
     gap_s: int = 1800,
     n_chunks: int = 4,
-    state_partitions: int = 8,
 ) -> DataFrame:
     """Timer-based sessionization on the Spark-4 arbitrary-state API —
     the transformWithStateInPandas twin of ``session_close_on_timeout``
@@ -614,27 +483,6 @@ def session_close_on_timer_tws(
     a session DELETES the stale timer and registers the new horizon;
     ``handleExpiredTimer`` double-checks the stored horizon so a timer
     that raced a same-batch extension is ignored, not emitted."""
-    import uuid
-
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf, which is "
-            "not usable in this environment; use session_close_on_timeout "
-            "(applyInPandasWithState) instead"
-        )
-
-    import pandas as pd
-    from pyspark import cloudpickle
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from play_bq_gcp_spark.streaming import _protobuf_compat
-
-    cloudpickle.register_pickle_by_value(_protobuf_compat)
-    _boot = _protobuf_compat.ensure_protobuf
-
     chunk_dir, _ = _time_ordered_chunks(spark, sf_dir, n_chunks)
     schema = spark.read.parquet(chunk_dir).schema
     ev = (
@@ -646,10 +494,7 @@ def session_close_on_timer_tws(
     )
     gap_us = gap_s * 1_000_000
 
-    class TimerSessions(StatefulProcessor):
-        def __reduce__(self):
-            return (_rebuild_timer_sessions, ())
-
+    class TimerSessions(WorkerBootstrap, StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._handle = handle
             self._sess = handle.getValueState(
@@ -715,17 +560,8 @@ def session_close_on_timer_tws(
         def close(self) -> None:
             pass
 
-    def _rebuild_timer_sessions():
-        if not _boot():
-            raise RuntimeError("google.protobuf unusable in worker")
-        return TimerSessions()
-
-    sessions = ev.groupBy("user_id").transformWithStateInPandas(
-        TimerSessions(), SESSION_SCHEMA, "Append", "EventTime"
-    )
-
-    return _run_tws_stream(
-        spark, sessions, state_partitions, "append"
+    return _run_tws(
+        ev, TimerSessions, SESSION_SCHEMA, "Append", "EventTime"
     ).orderBy("user_id", "start_us")
 
 
@@ -739,7 +575,6 @@ def funnel_state_machine_tws(
     sf_dir: str,
     gap_s: int = 1800,
     n_chunks: int = 4,
-    state_partitions: int = 8,
 ) -> DataFrame:
     """Per-event funnel STATE MACHINE with conditional emission and
     event-time timers — the procedural exemplar the r9 verdict asked
@@ -774,26 +609,6 @@ def funnel_state_machine_tws(
     horizon encoding, same stale-timer double-check, RocksDB store,
     AvailableNow, time-ordered chunks so the watermark advances
     deterministically)."""
-    import uuid
-
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf, which is "
-            "not usable in this environment"
-        )
-
-    import pandas as pd
-    from pyspark import cloudpickle
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from play_bq_gcp_spark.streaming import _protobuf_compat
-
-    cloudpickle.register_pickle_by_value(_protobuf_compat)
-    _boot = _protobuf_compat.ensure_protobuf
-
     chunk_dir, _ = _time_ordered_chunks(
         spark, sf_dir, n_chunks,
         cols=("event_id", "user_id", "ts", "event_type"),
@@ -808,10 +623,7 @@ def funnel_state_machine_tws(
     )
     gap_us = gap_s * 1_000_000
 
-    class FunnelMachine(StatefulProcessor):
-        def __reduce__(self):
-            return (_rebuild_funnel_machine, ())
-
+    class FunnelMachine(WorkerBootstrap, StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._handle = handle
             # phase: 0 idle / 1 viewed / 2 clicked; -1 = no value
@@ -910,17 +722,8 @@ def funnel_state_machine_tws(
         def close(self) -> None:
             pass
 
-    def _rebuild_funnel_machine():
-        if not _boot():
-            raise RuntimeError("google.protobuf unusable in worker")
-        return FunnelMachine()
-
-    funnel = ev.groupBy("user_id").transformWithStateInPandas(
-        FunnelMachine(), FUNNEL_SCHEMA, "Append", "EventTime"
-    )
-
-    return _run_tws_stream(
-        spark, funnel, state_partitions, "append"
+    return _run_tws(
+        ev, FunnelMachine, FUNNEL_SCHEMA, "Append", "EventTime"
     ).orderBy("user_id", "end_us", "start_us", "kind")
 
 
@@ -933,7 +736,6 @@ def per_type_user_stats_tws(
     spark: SparkSession,
     sf_dir: str,
     n_chunks: int = 4,
-    state_partitions: int = 8,
 ) -> DataFrame:
     """Per-(user, event_type) running (count, sum) via typed MAP STATE
     on transformWithStateInPandas — the keyed-substate surface
@@ -943,26 +745,6 @@ def per_type_user_stats_tws(
     full-map emission must equal the batch GROUP BY user_id, event_type
     truth (the oracle).  Update mode; the max-count row per
     (user, type) is the final state, monotone within a key."""
-    import uuid
-
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf, which is "
-            "not usable in this environment"
-        )
-
-    import pandas as pd
-    from pyspark import cloudpickle
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from play_bq_gcp_spark.streaming import _protobuf_compat
-
-    cloudpickle.register_pickle_by_value(_protobuf_compat)
-    _boot = _protobuf_compat.ensure_protobuf
-
     chunk_dir = _chunked_events_dir(spark, sf_dir, n_chunks)
     schema = spark.read.parquet(chunk_dir).schema
     ev = (
@@ -972,10 +754,7 @@ def per_type_user_stats_tws(
         .select("user_id", "event_type", "value")
     )
 
-    class PerTypeStats(StatefulProcessor):
-        def __reduce__(self):
-            return (_rebuild_per_type, ())
-
+    class PerTypeStats(WorkerBootstrap, StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._m = handle.getMapState(
                 "per_type", "event_type string", "n long, total double"
@@ -1008,17 +787,13 @@ def per_type_user_stats_tws(
         def close(self) -> None:
             pass
 
-    def _rebuild_per_type():
-        if not _boot():
-            raise RuntimeError("google.protobuf unusable in worker")
-        return PerTypeStats()
-
-    running = ev.groupBy("user_id").transformWithStateInPandas(
-        PerTypeStats(), TYPE_STATS_SCHEMA, "Update", "None"
-    )
-
-    updates = _run_tws_stream(
-        spark, running, state_partitions, "update", skip_no_data=True
+    updates = _run_tws(
+        ev,
+        PerTypeStats,
+        TYPE_STATS_SCHEMA,
+        "Update",
+        "None",
+        no_data_batches=False,
     )
     w = Window.partitionBy("user_id", "event_type").orderBy(
         F.col("n_events").desc()
@@ -1044,7 +819,6 @@ def recent_events_tws(
     sf_dir: str,
     k: int = 3,
     n_chunks: int = 4,
-    state_partitions: int = 8,
 ) -> DataFrame:
     """Per-user most-recent-``k`` events maintained in typed LIST STATE
     on transformWithStateInPandas — the bounded-buffer surface
@@ -1055,26 +829,6 @@ def recent_events_tws(
     buffer tagged with a running seen-count, so the final buffer per
     user is the max-``n_seen`` emission — which must equal the batch
     top-``k``-by-time truth (the oracle)."""
-    import uuid
-
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf, which is "
-            "not usable in this environment"
-        )
-
-    import pandas as pd
-    from pyspark import cloudpickle
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from play_bq_gcp_spark.streaming import _protobuf_compat
-
-    cloudpickle.register_pickle_by_value(_protobuf_compat)
-    _boot = _protobuf_compat.ensure_protobuf
-
     chunk_dir, _ = _time_ordered_chunks(spark, sf_dir, n_chunks)
     schema = spark.read.parquet(chunk_dir).schema
     ev = (
@@ -1084,10 +838,7 @@ def recent_events_tws(
         .select("user_id", "event_id", "ts")
     )
 
-    class RecentEvents(StatefulProcessor):
-        def __reduce__(self):
-            return (_rebuild_recent, ())
-
+    class RecentEvents(WorkerBootstrap, StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._buf = handle.getListState(
                 "recent", "event_id long, ts_us long"
@@ -1124,17 +875,13 @@ def recent_events_tws(
         def close(self) -> None:
             pass
 
-    def _rebuild_recent():
-        if not _boot():
-            raise RuntimeError("google.protobuf unusable in worker")
-        return RecentEvents()
-
-    running = ev.groupBy("user_id").transformWithStateInPandas(
-        RecentEvents(), RECENT_SCHEMA, "Update", "None"
-    )
-
-    updates = _run_tws_stream(
-        spark, running, state_partitions, "update", skip_no_data=True
+    updates = _run_tws(
+        ev,
+        RecentEvents,
+        RECENT_SCHEMA,
+        "Update",
+        "None",
+        no_data_batches=False,
     )
     w = Window.partitionBy("user_id", "pos").orderBy(F.col("n_seen").desc())
     return (
