@@ -94,17 +94,21 @@ _SCAN_CACHE: dict[str, tuple[str, float, DataFrame]] = {}
 
 def _scan_fingerprint(path: str) -> float:
     """Freshness fingerprint for a dataset path: the max mtime across
-    the path itself and (for directories) its immediate entries.  The
-    directory mtime alone changes on file create/delete/rename but NOT
-    on an in-place overwrite of an existing part file (cp/rsync onto
-    the same filename) — taking the max over entry mtimes catches that
-    case too.  One getmtime per entry, driver-side, bounded by the
-    table's file count."""
+    the path itself and, for directories, every entry below it,
+    partition subdirectories included.  A directory mtime changes on
+    file create/delete/rename but NOT on an in-place overwrite of an
+    existing part file (cp/rsync onto the same filename), at any depth
+    — taking the max over all entry mtimes catches that case too.  One
+    stat per entry, driver-side, bounded by the table's file count."""
     m = os.path.getmtime(path)
     if os.path.isdir(path):
         with os.scandir(path) as it:
             for e in it:
-                t = e.stat().st_mtime
+                t = (
+                    _scan_fingerprint(e.path)
+                    if e.is_dir(follow_symlinks=False)
+                    else e.stat().st_mtime
+                )
                 if t > m:
                     m = t
     return m

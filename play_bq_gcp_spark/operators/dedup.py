@@ -42,6 +42,7 @@ from play_bq_gcp_spark.operators.text import (
     token_set,
     tokens,
 )
+from play_bq_gcp_spark.session import cached
 
 _log = logging.getLogger(__name__)
 
@@ -96,7 +97,6 @@ def _bucket_candidate_pairs(
     out_a: str,
     out_b: str,
     max_bucket_size: int,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Expand LSH buckets to distinct candidate pairs, guarding against
     degenerate buckets.
@@ -107,25 +107,21 @@ def _bucket_candidate_pairs(
     exact-dedup first or wider AND-amplification, and the log line says
     so.  The overflow count rides the materializing action as an
     ``Observation`` metric — zero extra jobs, no cache — so the guard
-    costs nothing at any scale.  (With ``checkpoint=False`` nothing
-    runs eagerly, so the cap still filters but the count isn't
-    collected — that mode exists only for plan-inspection tests.)"""
+    costs nothing at any scale."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
     agg = (
         buckets.groupBy(*key_cols)
         .agg(F.collect_set(id_col).alias("ids"))
         .filter(F.size("ids") > 1)
-    )
-    obs = None
-    if checkpoint:
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        agg = agg.observe(
+        .observe(
             obs,
             F.sum(
                 (F.size("ids") > max_bucket_size).cast("long")
             ).alias("n_over"),
         )
+    )
     ids = F.array_sort(F.col("ids"))
     in_bucket_pairs = F.flatten(
         F.transform(
@@ -141,21 +137,20 @@ def _bucket_candidate_pairs(
         .select(F.explode(in_bucket_pairs).alias("p"))
         .select(f"p.{out_a}", f"p.{out_b}")
         .distinct()
-    )
-    if checkpoint:
         # one action materializes pairs AND collects the overflow count
         # (bucket shuffle runs once; downstream never recomputes it)
-        cand = cand.localCheckpoint(eager=True)
-        n_over = _obs_metric(obs, "n_over")
-        if n_over:
-            _log.warning(
-                "%d LSH bucket(s) exceeded max_bucket_size=%d and were "
-                "dropped from pair expansion — run exact dedup first or "
-                "increase AND-amplification (rows per band / bits per "
-                "table)",
-                n_over,
-                max_bucket_size,
-            )
+        .localCheckpoint(eager=True)
+    )
+    n_over = _obs_metric(obs, "n_over")
+    if n_over:
+        _log.warning(
+            "%d LSH bucket(s) exceeded max_bucket_size=%d and were "
+            "dropped from pair expansion — run exact dedup first or "
+            "increase AND-amplification (rows per band / bits per "
+            "table)",
+            n_over,
+            max_bucket_size,
+        )
     return cand
 
 
@@ -221,7 +216,14 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
     derives it — twice; the unordered per-digest min computes the same
     keeper alongside the rows in ONE shuffle on the digest, and doc_id
     is unique so ``doc_id == min per digest`` is exactly the old
-    semi-join survivor set."""
+    semi-join survivor set.
+
+    Wide-row caveat: the window shuffles FULL rows on the digest, where
+    the two-branch form shuffled only (doc_id, digest).  That is the
+    right trade for today's callers — narrow document relations whose
+    derivation is the expensive part — but a caller passing wide rows
+    (many or large columns besides ``text``) should project first, or
+    restore the digest groupBy + semi-join shape."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("__fp")
@@ -238,7 +240,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.7,
     num_bands: int = 25,
     rows_per_band: int = 3,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Exact n-gram (2-token shingle) Jaccard ≥ ``threshold`` pairs.
 
@@ -257,7 +258,6 @@ def ngram_jaccard_pairs(
         rows_per_band=rows_per_band,
         shingle_k=2,
         out_col="jaccard",
-        checkpoint=checkpoint,
     )
 
 
@@ -366,7 +366,6 @@ def minhash_lsh_pairs(
     jaccard_distance: float = 0.6,
     num_bands: int = 25,
     rows_per_band: int = 3,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Banded MinHash near-dup pairs, entirely in native expressions.
 
@@ -399,7 +398,6 @@ def minhash_lsh_pairs(
         rows_per_band=rows_per_band,
         shingle_k=3,
         out_col="jaccard_approx",
-        checkpoint=checkpoint,
     )
 
 
@@ -435,19 +433,12 @@ def _minhash_banded_pairs(
     rows_per_band: int,
     shingle_k: int,
     out_col: str,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Shared banded-MinHash engine for the fuzzy text dedup family
-    (see ``minhash_lsh_pairs`` for the full plan narrative).
-
-    ``checkpoint=False`` skips the cache + eager localCheckpoint and
-    returns the fully LAZY plan — slower to execute (the signature pass
-    would run once per downstream branch) but inspectable end-to-end:
-    the eager checkpoint otherwise truncates ``explain`` to the
-    post-checkpoint tail, hiding the single-tokenize-chain shape from
-    any plan dump (r13 verdict #4).  Execution-path callers always use
-    the default."""
-    docs = (
+    (see ``minhash_lsh_pairs`` for the full plan narrative).  The
+    per-doc shingle-hash arrays are cached for the build, so the
+    signature pass runs once for both the bucket and verify branches."""
+    hashed = (
         # spread ONLY (doc_id, text) across all cores for the signature
         # pass — never the full row — even when the source is a single
         # parquet file
@@ -463,9 +454,7 @@ def _minhash_banded_pairs(
         # min-hash derivations, Jaccard verify) works on the long array
         .select("doc_id", shingle_hashes("text", k=shingle_k).alias("hs"))
     )
-    if checkpoint:
-        docs = docs.cache()
-    try:
+    with cached(hashed) as docs:
         band_keys = _band_keys_expr(num_bands, rows_per_band)
         buckets = docs.select(
             "doc_id", F.posexplode(band_keys).alias("band", "key")
@@ -477,7 +466,6 @@ def _minhash_banded_pairs(
             out_a="doc_a",
             out_b="doc_b",
             max_bucket_size=MAX_BUCKET_SIZE,
-            checkpoint=checkpoint,
         )
         ta = docs.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"))
         tb = docs.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"))
@@ -485,19 +473,14 @@ def _minhash_banded_pairs(
             F.size(F.array_intersect("hs_a", "hs_b")).cast("double")
             / F.size(F.array_union("hs_a", "hs_b")).cast("double")
         )
-        out = (
+        # materialize while docs is cached; surviving pairs are few
+        return (
             cand.join(ta, "doc_a")
             .join(tb, "doc_b")
             .select("doc_a", "doc_b", F.round(jac, 4).alias(out_col))
             .filter(F.col(out_col) >= sim_threshold)
+            .localCheckpoint(eager=True)
         )
-        # materialize while docs is cached; surviving pairs are few
-        if checkpoint:
-            out = out.localCheckpoint(eager=True)
-    finally:
-        if checkpoint:
-            docs.unpersist()
-    return out
 
 
 def auto_planes(
@@ -574,7 +557,6 @@ def embedding_cosine_pairs(
     bits_per_table: int | str = 10,
     dim: int = 64,
     seed: int = 7,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Embedding near-dup pairs: random-hyperplane LSH candidate
     generation + exact-cosine verify — never an all-pairs join.
@@ -608,11 +590,9 @@ def embedding_cosine_pairs(
     hashes stay stable across rounds."""
     from play_bq_gcp_spark.functions.vector import cosine_similarity
 
-    docs = (
+    with cached(
         spread(embeddings.select("vec_id", F.col("embedding").cast("array<double>").alias("v")))
-        .cache()
-    )
-    try:
+    ) as docs:
         if bits_per_table == "auto":
             bits_per_table = auto_planes(docs.count())
         buckets = _sign_bucket_keys(docs, n_tables, bits_per_table, dim, seed)
@@ -623,11 +603,10 @@ def embedding_cosine_pairs(
             out_a="vec_a",
             out_b="vec_b",
             max_bucket_size=MAX_BUCKET_SIZE,
-            checkpoint=checkpoint,
         )
         va = docs.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("v_a"))
         vb = docs.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("v_b"))
-        out = (
+        return (
             cand.join(va, "vec_a")
             .join(vb, "vec_b")
             .select(
@@ -638,14 +617,8 @@ def embedding_cosine_pairs(
                 ).alias("cosine"),
             )
             .filter(F.col("cosine") >= threshold)
+            .localCheckpoint(eager=True)
         )
-        # checkpoint=False keeps the plan inspectable (tests assert the
-        # candidate join is an equi-join, never a nested loop)
-        if checkpoint:
-            out = out.localCheckpoint(eager=True)
-    finally:
-        docs.unpersist()
-    return out
 
 
 def connected_dup_groups(
@@ -669,10 +642,9 @@ def connected_dup_groups(
     component) for every doc in at least one pair."""
     pairs = minhash_lsh_pairs(documents, jaccard_distance)
     fwd = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    edges = fwd.unionByName(
-        fwd.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).cache()
-    try:
+    with cached(
+        fwd.unionByName(fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    ) as edges:
         labels = (
             edges.select(F.col("a").alias("doc_id"))
             .distinct()
@@ -726,8 +698,6 @@ def connected_dup_groups(
                 f"components"
             )
         return labels.select("doc_id", F.col("label").alias("group_id"))
-    finally:
-        edges.unpersist()
 
 
 def incremental_dedup(
@@ -778,9 +748,7 @@ def incremental_dedup(
             shingle_hashes("text", k=shingle_k).alias("hs"),
         )
 
-    new_sig = signed(new_docs).cache()
-    corp_sig = signed(corpus).cache()
-    try:
+    with cached(signed(new_docs), signed(corpus)) as (new_sig, corp_sig):
         # --- layer 1: exact digests --------------------------------------
         corp_fp = corp_sig.groupBy("fp").agg(
             F.count(F.lit(1)).alias("n_matches")
@@ -846,11 +814,7 @@ def incremental_dedup(
             )
         )
         out = exact.unionByName(near).unionByName(fresh)
-        out = out.localCheckpoint(eager=True)
-    finally:
-        new_sig.unpersist()
-        corp_sig.unpersist()
-    return out
+        return out.localCheckpoint(eager=True)
 
 
 def canonical_survivors(
@@ -906,7 +870,6 @@ def containment_pairs(
     n_docs: int | None = None,
     observation=None,
     candidate_budget: int | str = "auto",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Asymmetric CONTAINMENT near-dup pairs: |A∩B| / min(|A|, |B|)
     over trigram-shingle sets (bigrams are too common to index on this
@@ -946,11 +909,11 @@ def containment_pairs(
     or disable AQE for the diagnostic pass.)
 
     ``max_df="auto"`` needs the corpus size; pass ``n_docs`` if known
-    to skip the eager ``documents.count()``.  Plan construction is
-    then fully lazy whenever the auto cap lands on its df<=16 floor
-    (n <= 3200); above it, the governor materializes the df aggregate
-    ONCE (executor-side checkpoint, reused by the rare index) to read
-    its histogram — the one eager step, proportional to distinct
+    to skip the eager ``documents.count()``.  While the auto cap sits
+    on its df<=16 floor (n <= 3200) the only job is the final eager
+    checkpoint of the pairs; above it, the governor first materializes
+    the df aggregate ONCE (executor-side checkpoint, reused by the
+    rare index) to read its histogram — proportional to distinct
     shingles, never to pairs.
 
     Scale: shuffles carry 8-byte shingle hashes and integer ids only;
@@ -987,172 +950,164 @@ def containment_pairs(
     # exploded stream: ~8× fewer cached rows) makes every branch an
     # explode over cached arrays, and the eager checkpoint of the
     # small pair output materializes everything while the cache is
-    # live (``checkpoint=False`` keeps the fully lazy plan for
-    # inspection, as in ``_minhash_banded_pairs``).
-    docs_hs = (
+    # live.
+    with cached(
         spread(documents.select("doc_id", "text"))
         .select("doc_id", shingle_hashes("text", k=shingle_k).alias("hs"))
-    )
-    if checkpoint:
-        docs_hs = docs_hs.cache()
-    sh = docs_hs.select("doc_id", F.explode("hs").alias("g"))
-    dfreq = sh.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
-    if auto_mode and max_df > 16:
-        # Candidate-VOLUME governor (round 8).  The n/200 recall cap
-        # grows with the corpus, but candidate work is Σ df·(df-1)/2
-        # over kept shingles — on a corpus whose growth REPLICATES
-        # structure (boilerplate at web scale), df does not dilute, so
-        # mid-frequency shingles that the 1x cap excluded sail under
-        # the 30x cap and the pair stage explodes quadratically in the
-        # cap (measured: the 30x probe corpus OOMed an 8 GB heap and
-        # cost 1348 s / 22 GB shuffle on 32 GB).  Solve the largest
-        # cap' <= cap whose kept-shingle pair volume fits a
-        # linear-in-corpus budget, from the df HISTOGRAM (<= cap rows
-        # to the driver — a bounded model read, the auto_planes
-        # discipline applied to the df cap).  The floor stays 16: the
-        # r6 sufficiency study put qualifying pairs' rarest shared
-        # shingle at df 15, and the governor drops HIGH-df (lowest
-        # signal) shingles first, so fixture-scale recall is
-        # untouched — the governor only engages when volume actually
-        # explodes, and LOUDLY.
-        #
-        # Gated on max_df > 16 (ADVICE r8): with the cap at its df<=16
-        # floor the governor cannot lower it, so small corpora build a
-        # fully lazy plan — no eager histogram job.  When it CAN bind,
-        # dfreq is materialized ONCE (executor-side checkpoint) and
-        # reused by both the histogram and the rare-shingle index, so
-        # the governor costs one tiny grouped read of checkpointed
-        # data, not a duplicate full aggregation.
-        dfreq = dfreq.localCheckpoint(eager=True)
-        if candidate_budget == "auto":
-            candidate_budget = max(2_000_000, 400 * n)
-        hist = sorted(
-            (r.df, r.c)
-            for r in dfreq.filter(F.col("df") <= max_df)
-            .groupBy("df")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        )
-
-        def _volume(cap: int) -> int:
-            return sum(c * d * (d - 1) // 2 for d, c in hist if d <= cap)
-
-        if _volume(max_df) > candidate_budget:
-            fitted = 16
-            for d, _ in hist:
-                if d <= max_df and _volume(d) <= candidate_budget:
-                    fitted = max(fitted, d)
-            _log.warning(
-                "containment candidate governor: df cap %d -> %d "
-                "(pair volume %d exceeds budget %d; high-df shingles "
-                "dropped first — recall floor df<=16 preserved).  "
-                "NOTE: a governed cap can drop qualifying pairs whose "
-                "rarest shared shingle sits between the fitted and "
-                "ungoverned caps — an oracle modeling the ungoverned "
-                "n/200 cap (or exact all-pairs, as dedup_containment_"
-                "pairs does) may diverge while this governor is "
-                "engaged; the fitted cap is deterministic given the "
-                "corpus, and the dedup_containment_governed registry "
-                "entry replays this entire sizing formula in SQL so a "
-                "governed run stays differential-checkable.  On the "
-                "UNgoverned fixtures it never engages (pinned in "
-                "test_containment_candidate_governor).",
-                max_df, fitted, _volume(max_df), candidate_budget,
+    ) as docs_hs:
+        sh = docs_hs.select("doc_id", F.explode("hs").alias("g"))
+        dfreq = sh.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
+        if auto_mode and max_df > 16:
+            # Candidate-VOLUME governor (round 8).  The n/200 recall cap
+            # grows with the corpus, but candidate work is Σ df·(df-1)/2
+            # over kept shingles — on a corpus whose growth REPLICATES
+            # structure (boilerplate at web scale), df does not dilute, so
+            # mid-frequency shingles that the 1x cap excluded sail under
+            # the 30x cap and the pair stage explodes quadratically in the
+            # cap (measured: the 30x probe corpus OOMed an 8 GB heap and
+            # cost 1348 s / 22 GB shuffle on 32 GB).  Solve the largest
+            # cap' <= cap whose kept-shingle pair volume fits a
+            # linear-in-corpus budget, from the df HISTOGRAM (<= cap rows
+            # to the driver — a bounded model read, the auto_planes
+            # discipline applied to the df cap).  The floor stays 16: the
+            # r6 sufficiency study put qualifying pairs' rarest shared
+            # shingle at df 15, and the governor drops HIGH-df (lowest
+            # signal) shingles first, so fixture-scale recall is
+            # untouched — the governor only engages when volume actually
+            # explodes, and LOUDLY.
+            #
+            # Gated on max_df > 16 (ADVICE r8): with the cap at its df<=16
+            # floor the governor cannot lower it, so small corpora build a
+            # fully lazy plan — no eager histogram job.  When it CAN bind,
+            # dfreq is materialized ONCE (executor-side checkpoint) and
+            # reused by both the histogram and the rare-shingle index, so
+            # the governor costs one tiny grouped read of checkpointed
+            # data, not a duplicate full aggregation.
+            dfreq = dfreq.localCheckpoint(eager=True)
+            if candidate_budget == "auto":
+                candidate_budget = max(2_000_000, 400 * n)
+            hist = sorted(
+                (r.df, r.c)
+                for r in dfreq.filter(F.col("df") <= max_df)
+                .groupBy("df")
+                .agg(F.count(F.lit(1)).alias("c"))
+                .collect()
             )
-            max_df = max(16, fitted)
-    if observation is not None:
-        dfreq = dfreq.observe(
-            observation,
-            F.count(F.lit(1)).alias("shingles_total"),
-            F.sum((F.col("df") > F.lit(max_df)).cast("long")).alias(
-                "shingles_dropped"
-            ),
+
+            def _volume(cap: int) -> int:
+                return sum(c * d * (d - 1) // 2 for d, c in hist if d <= cap)
+
+            if _volume(max_df) > candidate_budget:
+                fitted = 16
+                for d, _ in hist:
+                    if d <= max_df and _volume(d) <= candidate_budget:
+                        fitted = max(fitted, d)
+                _log.warning(
+                    "containment candidate governor: df cap %d -> %d "
+                    "(pair volume %d exceeds budget %d; high-df shingles "
+                    "dropped first — recall floor df<=16 preserved).  "
+                    "NOTE: a governed cap can drop qualifying pairs whose "
+                    "rarest shared shingle sits between the fitted and "
+                    "ungoverned caps — an oracle modeling the ungoverned "
+                    "n/200 cap (or exact all-pairs, as dedup_containment_"
+                    "pairs does) may diverge while this governor is "
+                    "engaged; the fitted cap is deterministic given the "
+                    "corpus, and the dedup_containment_governed registry "
+                    "entry replays this entire sizing formula in SQL so a "
+                    "governed run stays differential-checkable.  On the "
+                    "UNgoverned fixtures it never engages (pinned in "
+                    "test_containment_candidate_governor).",
+                    max_df, fitted, _volume(max_df), candidate_budget,
+                )
+                max_df = max(16, fitted)
+        if observation is not None:
+            dfreq = dfreq.observe(
+                observation,
+                F.count(F.lit(1)).alias("shingles_total"),
+                F.sum((F.col("df") > F.lit(max_df)).cast("long")).alias(
+                    "shingles_dropped"
+                ),
+            )
+        rare = sh.join(
+            dfreq.filter(F.col("df") <= max_df).select("g"),
+            "g",
         )
-    rare = sh.join(
-        dfreq.filter(F.col("df") <= max_df).select("g"),
-        "g",
-    )
-    a = rare.select(F.col("doc_id").alias("doc_a"), "g")
-    b = rare.select(F.col("doc_id").alias("doc_b"), "g")
-    # Candidate scoring + SOUND upper-bound prune (round 8).  The
-    # exact-verify join expands every candidate by its docs' full
-    # shingle lists, and at the 30x probe scale 42M candidates x ~55
-    # shingles = 2.3G verify rows (22 GB shuffle, 1348 s) — with final
-    # yield 24 630 pairs (~0.06% precision: most candidates share ONE
-    # mid-df shingle).  Instead of .distinct(), count the shared rare
-    # shingles per pair (same shuffle), then bound the FULL
-    # intersection: shared shingles are rare or dropped-common, so
-    # |A∩B| <= i_rare + min(common_a, common_b) where common_x is
-    # doc x's count of above-cap shingles.  A pair whose BOUND cannot
-    # reach the threshold can never verify — pruning it is exact, not
-    # approximate (the 1e-4 slack covers the output-side 4-dp round).
-    cand = (
-        a.join(b, "g")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("i_rare"))
-    )
-    # per-doc totals straight off the cached hash arrays — size(hs) ==
-    # the old explode+groupBy count (explode emits one row per element
-    # and hs is never NULL), minus one whole shuffle of the shingle
-    # stream.  A zero-shingle doc now carries an n=0 row the old
-    # aggregate lacked; harmless, since every consumer joins ``bound``
-    # INNER on a doc id that holds >= 1 shingle (it came from a
-    # candidate pair).  Rare counts still need the post-join aggregate.
-    sizes = docs_hs.select("doc_id", F.size("hs").cast("long").alias("n"))
-    n_rare = rare.groupBy("doc_id").agg(F.count(F.lit(1)).alias("r"))
-    bound = sizes.join(n_rare, "doc_id", "left").select(
-        "doc_id", "n", F.coalesce(F.col("r"), F.lit(0)).alias("r")
-    )
-    ba = bound.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("n").alias("__n_a"),
-        (F.col("n") - F.col("r")).alias("__c_a"),
-    )
-    bb = bound.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("n").alias("__n_b"),
-        (F.col("n") - F.col("r")).alias("__c_b"),
-    )
-    pairs = (
-        cand.join(ba, "doc_a")
-        .join(bb, "doc_b")
-        .filter(
-            F.col("i_rare") + F.least(F.col("__c_a"), F.col("__c_b"))
-            >= (threshold - 1e-4) * F.least(F.col("__n_a"), F.col("__n_b"))
+        a = rare.select(F.col("doc_id").alias("doc_a"), "g")
+        b = rare.select(F.col("doc_id").alias("doc_b"), "g")
+        # Candidate scoring + SOUND upper-bound prune (round 8).  The
+        # exact-verify join expands every candidate by its docs' full
+        # shingle lists, and at the 30x probe scale 42M candidates x ~55
+        # shingles = 2.3G verify rows (22 GB shuffle, 1348 s) — with final
+        # yield 24 630 pairs (~0.06% precision: most candidates share ONE
+        # mid-df shingle).  Instead of .distinct(), count the shared rare
+        # shingles per pair (same shuffle), then bound the FULL
+        # intersection: shared shingles are rare or dropped-common, so
+        # |A∩B| <= i_rare + min(common_a, common_b) where common_x is
+        # doc x's count of above-cap shingles.  A pair whose BOUND cannot
+        # reach the threshold can never verify — pruning it is exact, not
+        # approximate (the 1e-4 slack covers the output-side 4-dp round).
+        cand = (
+            a.join(b, "g")
+            .filter(F.col("doc_a") < F.col("doc_b"))
+            .groupBy("doc_a", "doc_b")
+            .agg(F.count(F.lit(1)).alias("i_rare"))
         )
-        .select("doc_a", "doc_b")
-    )
-    sh_a = sh.select(F.col("doc_id").alias("doc_a"), "g")
-    sh_b = sh.select(F.col("doc_id").alias("doc_b"), "g")
-    inter = (
-        pairs.join(sh_a, "doc_a")
-        .join(sh_b, ["doc_b", "g"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    na = bound.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    nb = bound.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
-    out = (
-        inter.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("i") / F.least(F.col("n_a"), F.col("n_b")), 4
-            ).alias("containment"),
+        # per-doc totals straight off the cached hash arrays — size(hs) ==
+        # the old explode+groupBy count (explode emits one row per element
+        # and hs is never NULL), minus one whole shuffle of the shingle
+        # stream.  A zero-shingle doc now carries an n=0 row the old
+        # aggregate lacked; harmless, since every consumer joins ``bound``
+        # INNER on a doc id that holds >= 1 shingle (it came from a
+        # candidate pair).  Rare counts still need the post-join aggregate.
+        sizes = docs_hs.select("doc_id", F.size("hs").cast("long").alias("n"))
+        n_rare = rare.groupBy("doc_id").agg(F.count(F.lit(1)).alias("r"))
+        bound = sizes.join(n_rare, "doc_id", "left").select(
+            "doc_id", "n", F.coalesce(F.col("r"), F.lit(0)).alias("r")
         )
-        .filter(F.col("containment") >= threshold)
-    )
-    if checkpoint:
-        try:
-            # materialize the few surviving pairs while docs_hs is
-            # cached (observation metrics ride this same action)
-            out = out.localCheckpoint(eager=True)
-        finally:
-            docs_hs.unpersist()
-    return out
+        ba = bound.select(
+            F.col("doc_id").alias("doc_a"),
+            F.col("n").alias("__n_a"),
+            (F.col("n") - F.col("r")).alias("__c_a"),
+        )
+        bb = bound.select(
+            F.col("doc_id").alias("doc_b"),
+            F.col("n").alias("__n_b"),
+            (F.col("n") - F.col("r")).alias("__c_b"),
+        )
+        pairs = (
+            cand.join(ba, "doc_a")
+            .join(bb, "doc_b")
+            .filter(
+                F.col("i_rare") + F.least(F.col("__c_a"), F.col("__c_b"))
+                >= (threshold - 1e-4) * F.least(F.col("__n_a"), F.col("__n_b"))
+            )
+            .select("doc_a", "doc_b")
+        )
+        sh_a = sh.select(F.col("doc_id").alias("doc_a"), "g")
+        sh_b = sh.select(F.col("doc_id").alias("doc_b"), "g")
+        inter = (
+            pairs.join(sh_a, "doc_a")
+            .join(sh_b, ["doc_b", "g"])
+            .groupBy("doc_a", "doc_b")
+            .agg(F.count(F.lit(1)).alias("i"))
+        )
+        na = bound.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
+        nb = bound.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
+        out = (
+            inter.join(na, "doc_a")
+            .join(nb, "doc_b")
+            .select(
+                "doc_a",
+                "doc_b",
+                F.round(
+                    F.col("i") / F.least(F.col("n_a"), F.col("n_b")), 4
+                ).alias("containment"),
+            )
+            .filter(F.col("containment") >= threshold)
+        )
+        # materialize the few surviving pairs while docs_hs is cached
+        # (observation metrics ride this same action)
+        return out.localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1476,8 +1431,7 @@ def line_dedup(
     # that materializes it while the cache is live stays small; at
     # 100 TB the cached line view spills MEMORY_AND_DISK — the same
     # materialize-once-vs-recompute-twice trade, made explicit.
-    lined = lined_view(documents).cache()
-    try:
+    with cached(lined_view(documents)) as lined:
         # Corpus-relative threshold: one 1-row aggregate, broadcast by
         # the cross join — never a driver collect.  count(1) prunes
         # text, so this branch never tokenizes.
@@ -1501,8 +1455,6 @@ def line_dedup(
             .orderBy("doc_id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        lined.unpersist()
 
 
 def duplicate_span_profile(

@@ -359,6 +359,7 @@ def lm_perplexity_score(documents: DataFrame, alpha: float = 1.0) -> DataFrame:
     than -inf, so scoring a NEW document against a trained model is
     well-defined."""
     from play_bq_gcp_spark.catalog import spread
+    from play_bq_gcp_spark.session import cached
 
     # Tokenize ONCE (r14 duplicated-branch sweep): the token arrays are
     # referenced from three plan branches (bigram counts, unigram
@@ -370,13 +371,10 @@ def lm_perplexity_score(documents: DataFrame, alpha: float = 1.0) -> DataFrame:
     # 100 TB the same structure holds with the tokenized corpus
     # persisted MEMORY_AND_DISK, or written out once — the model
     # tables themselves stay aggregates either way.)
-    toks = spread(
-        documents.select("doc_id", tokens("text").alias("tk"))
-    ).cache()
-    try:
+    with cached(
+        spread(documents.select("doc_id", tokens("text").alias("tk")))
+    ) as toks:
         return _lm_score_over(toks, alpha)
-    finally:
-        toks.unpersist()
 
 
 def _lm_score_over(toks: DataFrame, alpha: float) -> DataFrame:

@@ -33,6 +33,7 @@ from play_bq_gcp_spark.operators.relational import (
     semi_join,
     snapshot_delta,
 )
+from play_bq_gcp_spark.session import cached
 
 GAME_COLUMNS = [
     "id",
@@ -201,10 +202,9 @@ class PartitionedWarehouse(Warehouse):
         from play_bq_gcp_spark.catalog import dynamic_partition_overwrite
 
         changed = semi_join(snapshot, deltas.select("id"), "id")
-        incoming = self._bucketed(
-            changed.unionByName(fresh.select(changed.columns))
-        ).cache()
-        try:
+        with cached(
+            self._bucketed(changed.unionByName(fresh.select(changed.columns)))
+        ) as incoming:
             buckets = [
                 r[0]
                 for r in incoming.select("__bucket").distinct().collect()
@@ -236,8 +236,6 @@ class PartitionedWarehouse(Warehouse):
                 self.path(table),
                 partition_by=["__bucket"],
             )
-        finally:
-            incoming.unpersist()
 
 
 class TxnWarehouse(Warehouse):
@@ -339,43 +337,43 @@ def run_daily(
     from pyspark.sql import Observation
 
     stats: dict[str, int] = {}
-    snapshot = transform_snapshot(raw_snapshot).cache()
-    stored = wh.read(spark, "game").cache()
-
-    # 2. brand-new games (guarded, P8); 3. play-time deltas
     obs_fresh, obs_deltas = Observation(), Observation()
-    fresh = (
-        new_games(snapshot, stored)
-        .observe(obs_fresh, F.count(F.lit(1)).alias("rows"))
-        .cache()
-    )
-    deltas = (
-        time_play_deltas(stored, snapshot, run_date)
-        .observe(obs_deltas, F.count(F.lit(1)).alias("rows"))
-        .cache()
-    )
-    guard = (
-        fresh.agg(F.count(F.lit(1)).alias("new_games"))
-        .crossJoin(deltas.agg(F.count(F.lit(1)).alias("time_play")))
-        .first()
-    )
-    stats["new_games"] = guard["new_games"]
-    stats["time_play"] = guard["time_play"]
+    with cached(
+        transform_snapshot(raw_snapshot), wh.read(spark, "game")
+    ) as (snapshot, stored):
+        # 2. brand-new games (guarded, P8); 3. play-time deltas
+        with cached(
+            new_games(snapshot, stored).observe(
+                obs_fresh, F.count(F.lit(1)).alias("rows")
+            ),
+            time_play_deltas(stored, snapshot, run_date).observe(
+                obs_deltas, F.count(F.lit(1)).alias("rows")
+            ),
+        ) as (fresh, deltas):
+            guard = (
+                fresh.agg(F.count(F.lit(1)).alias("new_games"))
+                .crossJoin(deltas.agg(F.count(F.lit(1)).alias("time_play")))
+                .first()
+            )
+            stats["new_games"] = guard["new_games"]
+            stats["time_play"] = guard["time_play"]
 
-    # 3. deltas → append-only fact, partitioned by date at scale
-    if stats["time_play"] > 0:
-        wh.append(deltas, "time_play")
+            # 3. deltas → append-only fact, partitioned by date at scale
+            if stats["time_play"] > 0:
+                wh.append(deltas, "time_play")
 
-    # 2+4. next dimension state = stored with changed rows upserted,
-    # plus the new rows — ONE overwrite so appends and updates cannot
-    # clobber each other (the reference relies on BigQuery doing the
-    # append and the UPDATE as separate remote transactions).
-    if stats["new_games"] > 0 or stats["time_play"] > 0:
-        wh.merge_dim(spark, "game", stored, snapshot, deltas, fresh)
-        # free re-derivation off the actions that already ran (the
-        # guard job populated both observations via the caches)
-        stats["new_games_observed"] = int(obs_fresh.get["rows"])
-        stats["time_play_observed"] = int(obs_deltas.get["rows"])
+            # 2+4. next dimension state = stored with changed rows
+            # upserted, plus the new rows — ONE overwrite so appends and
+            # updates cannot clobber each other (the reference relies on
+            # BigQuery doing the append and the UPDATE as separate
+            # remote transactions).
+            if stats["new_games"] > 0 or stats["time_play"] > 0:
+                wh.merge_dim(spark, "game", stored, snapshot, deltas, fresh)
+                # free re-derivation off the actions that already ran
+                # (the guard job populated both observations via the
+                # caches)
+                stats["new_games_observed"] = int(obs_fresh.get["rows"])
+                stats["time_play_observed"] = int(obs_deltas.get["rows"])
 
     # 5. trophy snapshot append (main.py:35-64)
     if trophy_row is not None and is_nonempty(trophy_row):
@@ -385,8 +383,4 @@ def run_daily(
         )
         stats["trophee"] = 1
 
-    snapshot.unpersist()
-    stored.unpersist()
-    deltas.unpersist()
-    fresh.unpersist()
     return stats

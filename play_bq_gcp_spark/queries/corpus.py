@@ -512,6 +512,7 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf: str) -> DataFrame:
         ngram_jaccard_pairs,
     )
     from play_bq_gcp_spark.operators.text import tokens
+    from play_bq_gcp_spark.session import cached
 
     docs = _t(spark, sf, "documents")
     is_eval = F.col("doc_id") % 17 == 3
@@ -529,8 +530,7 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf: str) -> DataFrame:
     # cache holds only (doc_id, source, text) of survivors; the eager
     # checkpoint of the small packed output materializes everything
     # while it is live, then releases it.
-    ex = exact_dedup(pool).select("doc_id", "source", "text").cache()
-    try:
+    with cached(exact_dedup(pool).select("doc_id", "source", "text")) as ex:
         near_drops = (
             ngram_jaccard_pairs(ex, threshold=0.7)
             .select(F.col("doc_b").alias("doc_id"))
@@ -541,9 +541,9 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf: str) -> DataFrame:
             ~F.col("contaminated")
         )
         clean = nd.join(keep.select("doc_id"), "doc_id", "left_semi")
-        out = sequence_pack(clean, budget=256)
-        out = (
-            out.select(
+        return (
+            sequence_pack(clean, budget=256)
+            .select(
                 "doc_id",
                 "source",
                 F.col("n_tokens").cast("long").alias("n_tokens"),
@@ -552,9 +552,6 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf: str) -> DataFrame:
             .orderBy("doc_id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        ex.unpersist()
-    return out
 
 
 def _ingest_oracle_sql(n_batches: int = 4) -> str:

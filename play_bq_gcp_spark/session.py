@@ -12,7 +12,7 @@ import os
 from collections.abc import Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -90,3 +90,21 @@ def scoped_conf(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+@contextmanager
+def cached(*dfs: DataFrame) -> Iterator[DataFrame | tuple[DataFrame, ...]]:
+    """Cache each DataFrame for one block and yield it (one DataFrame
+    yields itself, several yield a tuple); on exit unpersist every one,
+    even when the block raises.  The ONE way an operator caches.  The
+    rule that goes with it: a DataFrame built from a cached input and
+    returned past the block must be materialized inside the block with
+    ``localCheckpoint(eager=True)`` — a lazy plan that escapes would
+    recompute its inputs after the release."""
+    try:
+        for df in dfs:
+            df.cache()
+        yield dfs[0] if len(dfs) == 1 else dfs
+    finally:
+        for df in dfs:
+            df.unpersist()

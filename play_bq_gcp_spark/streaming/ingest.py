@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from play_bq_gcp_spark.catalog import read_table
 from play_bq_gcp_spark.scratch import scratch_dir
+from play_bq_gcp_spark.session import cached
 from play_bq_gcp_spark.streaming.available_now import run_available_now
 
 _BATCH_DIRS: dict[tuple[str, int], str] = {}
@@ -545,10 +546,9 @@ def run_line_stream(
 
         t0 = time.monotonic()
         s = batch_df.sparkSession
-        # reused by the freq partial AND the mark pass — checkpoint so
-        # the batch tokenizes once
-        lined = lined_view(batch_df).localCheckpoint(eager=True)
-        try:
+        # reused by the freq partial AND the mark pass — cached so the
+        # batch tokenizes once
+        with cached(lined_view(batch_df)) as lined:
             (
                 lined.groupBy("line_h")
                 .agg(F.countDistinct("doc_id").alias("c"))
@@ -569,10 +569,6 @@ def run_line_stream(
             finalize_line_outputs(batch_df, per_doc).write.mode(
                 "overwrite"
             ).parquet(os.path.join(out_dir, f"batch_{batch_id:05d}"))
-        finally:
-            # checkpoint blocks otherwise pin executor storage memory
-            # for the stream's lifetime (r10 ADVICE)
-            lined.unpersist()
         if on_batch is not None:
             # probe hook: (batch_id, seconds) — lets the many-batch
             # scale probe record per-batch wall without restating the
@@ -672,22 +668,21 @@ def run_epoch_stream(
                 F.col("doc_id").cast("string"),
             )
         )
-        keyed = (
+        # read by the counts partial AND the ranked write — cached so
+        # the batch is exploded and hashed once
+        with cached(
             batch_df.select(
                 "doc_id",
                 F.explode(
                     F.sequence(F.lit(0), F.lit(int(n_epochs) - 1))
                 ).alias("epoch"),
-            )
-            .select(
+            ).select(
                 F.col("epoch").cast("int").alias("epoch"),
                 "doc_id",
                 h.alias("h"),
                 _md5_fold(h, n_shards).alias("shard"),
             )
-            .localCheckpoint(eager=True)
-        )
-        try:
+        ) as keyed:
             offsets = (
                 _freq_view(
                     s,
@@ -719,8 +714,6 @@ def run_epoch_stream(
                 .write.mode("overwrite")
                 .parquet(os.path.join(out_dir, f"batch_{batch_id:05d}"))
             )
-        finally:
-            keyed.unpersist()
         if on_batch is not None:
             # probe hook, same contract as run_line_stream's:
             # (batch_id, seconds) after the batch's writes complete but

@@ -968,7 +968,7 @@ def test_embedding_auto_bits_cuts_candidates_keeps_planted_pairs(spark):
         buckets = _sign_bucket_keys(docs, 16, bits, 64, 7)
         n_cand[bits] = _bucket_candidate_pairs(
             buckets, ("tbl", "key"), "vec_id", "a", "b",
-            MAX_BUCKET_SIZE, checkpoint=False,
+            MAX_BUCKET_SIZE,
         ).count()
     assert n_cand[bits_auto] * 2 < n_cand[3]  # >2x candidate reduction
 
@@ -1400,7 +1400,7 @@ def test_auto_planes_holds_at_10x_scale(spark):
         buckets = _sign_bucket_keys(docs, 16, bits, 64, 7)
         n_cand[bits] = _bucket_candidate_pairs(
             buckets, ("tbl", "key"), "vec_id", "a", "b",
-            MAX_BUCKET_SIZE, checkpoint=False,
+            MAX_BUCKET_SIZE,
         ).count()
     assert n_cand[bits_auto] * 4 < n_cand[10], n_cand
 

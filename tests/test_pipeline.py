@@ -169,6 +169,24 @@ def test_run_daily_on_txn_warehouse_matches_parquet_and_time_travels(
     assert tt.current_version(wh.path("time_play")) == v_before
 
 
+def test_run_daily_releases_caches_when_a_write_raises(spark, tmp_path):
+    """A failed dimension commit must not leave run_daily's cached
+    relations (snapshot, stored, fresh, deltas) pinned in the session:
+    the conflict propagates and the cache manager is empty after."""
+    from play_bq_gcp_spark.storage.txn_table import CommitConflict
+
+    class ConflictingWarehouse(pipeline.TxnWarehouse):
+        def merge_dim(self, *args):
+            raise CommitConflict("another writer published first")
+
+    wh = ConflictingWarehouse(str(tmp_path / "txn_wh"))
+    pipeline.bootstrap(wh, _snapshot(spark, D1))
+    spark.catalog.clearCache()
+    with pytest.raises(CommitConflict):
+        pipeline.run_daily(wh, spark, _snapshot(spark, D2), "2024-01-02")
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_cli_bootstrap_then_incremental_daily(spark, tmp_path, capsys):
     """python -m play_bq_gcp_spark: first invocation bootstraps, the
     next loads incrementally — growing the API page count between runs

@@ -169,19 +169,44 @@ def test_scalar_suite_is_one_scan_no_shuffle(spark, sf_dir):
     assert hash_exchanges == []
 
 
+def executed_plans(spark, after: int = -1) -> list[str]:
+    """Physical-plan descriptions of the SQL executions with id above
+    ``after``, newest first, as the status store recorded them when
+    they ran (AQE final plan included).  An operator that materializes
+    eagerly returns only a checkpoint scan, so its shape shows in the
+    plans it executed, not in the plan of the DataFrame it returns."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    # the store lists executions in id order
+    runs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = []
+    for i in reversed(range(runs.size())):
+        x = runs.apply(i)
+        if x.executionId() <= after:
+            break
+        plans.append(x.physicalPlanDescription())
+    return plans
+
+
+def newest_execution_id(spark) -> int:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    runs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return runs.last().executionId() if runs.nonEmpty() else -1
+
+
 def test_embedding_dedup_has_no_nested_loop(spark, sf_dir):
     """embedding_cosine_pairs candidates come from LSH bucket
-    equi-joins — a BroadcastNestedLoopJoin or CartesianProduct anywhere
-    in the plan means the all-pairs path crept back.  checkpoint=False
-    keeps the full logical plan inspectable (the production path
-    localCheckpoints, which would hide it)."""
+    equi-joins — a BroadcastNestedLoopJoin or CartesianProduct in any
+    plan the operator executed means the all-pairs path crept back."""
     from play_bq_gcp_spark.operators.dedup import embedding_cosine_pairs
 
     e = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    out = embedding_cosine_pairs(e, threshold=0.9, checkpoint=False)
-    plan = plan_of(out)
+    before = newest_execution_id(spark)
+    embedding_cosine_pairs(e, threshold=0.9)
+    ran = executed_plans(spark, after=before)
+    assert ran  # the candidate and verify checkpoints
+    plan = "\n".join(ran)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert plan.count("SortMergeJoin") + plan.count("BroadcastHashJoin") >= 1

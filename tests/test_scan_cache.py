@@ -6,7 +6,10 @@ invalidation semantics, not any data caching."""
 from __future__ import annotations
 
 import os
+import shutil
 import time
+
+from pyspark.sql import functions as F
 
 from play_bq_gcp_spark import catalog
 
@@ -44,6 +47,46 @@ def test_scan_cache_invalidates_on_inplace_part_rewrite(spark, tmp_path):
     os.utime(path, (dir_stat.st_atime, dir_stat.st_mtime))  # dir unchanged
     df3 = catalog.read_table(spark, base, "t")
     assert df3 is not df1
+
+
+def _crc(f: str) -> str:
+    return os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+
+
+def test_scan_cache_invalidates_on_nested_part_rewrite(spark, tmp_path):
+    """The same hole one level down: in a partitioned dataset the part
+    files live in ``key=x/`` subdirectories, so rewriting one IN PLACE
+    changes neither the root's mtime nor any immediate entry's.  The
+    fingerprint recurses, so the rewrite still forces a fresh scan."""
+    base = str(tmp_path)
+    path = os.path.join(base, "t.parquet")
+
+    def write(dest, rows):
+        (
+            spark.range(rows).toDF("doc_id").withColumn("key", F.lit(0))
+            .coalesce(1).write.mode("overwrite").partitionBy("key")
+            .parquet(dest)
+        )
+        part_dir = os.path.join(dest, "key=0")
+        (part,) = [f for f in os.listdir(part_dir) if f.endswith(".parquet")]
+        return part_dir, os.path.join(part_dir, part)
+
+    part_dir, part = write(path, 5)
+    df1 = catalog.read_table(spark, base, "t")
+    assert df1.count() == 5
+    dir_stats = [(d, os.stat(d)) for d in (path, part_dir)]
+    _, other = write(str(tmp_path / "other.parquet"), 7)
+    # same filenames, same inodes; the checksum sidecar moves with its
+    # part or the local filesystem rejects the read
+    for src, dst in ((other, part), (_crc(other), _crc(part))):
+        shutil.copyfile(src, dst)
+    now = time.time() + 2  # distinct mtime on coarse filesystems too
+    os.utime(part, (now, now))
+    for d, st in dir_stats:  # both directory mtimes unchanged
+        os.utime(d, (st.st_atime, st.st_mtime))
+    df2 = catalog.read_table(spark, base, "t")
+    assert df2 is not df1
+    assert df2.count() == 7
 
 
 def test_scan_cache_holds_one_entry_per_path(spark, tmp_path):

@@ -1,7 +1,8 @@
-"""Session-state hygiene: no operator leaves session conf or temp views
-behind, and only the two session-state helpers — ``session.scoped_conf``
-and ``streaming.available_now.run_available_now`` — change conf or start
-an AvailableNow query."""
+"""Session-state hygiene: no operator leaves session conf, temp views or
+cached relations behind, and only the session-state helpers —
+``session.scoped_conf``, ``session.cached`` and
+``streaming.available_now.run_available_now`` — change conf, cache or
+release a relation, or start an AvailableNow query."""
 
 from __future__ import annotations
 
@@ -102,6 +103,27 @@ def _udtf_chunk_documents(spark, sf_dir, tmp_path):
     assert chunk_documents(docs).collect()
 
 
+def _containment_pairs(spark, sf_dir, tmp_path):
+    from play_bq_gcp_spark.operators.dedup import containment_pairs
+
+    docs = read_table(spark, sf_dir, "documents")
+    assert containment_pairs(docs).collect()
+
+
+def _incremental_dedup(spark, sf_dir, tmp_path):
+    from play_bq_gcp_spark.operators.dedup import incremental_dedup
+
+    docs = read_table(spark, sf_dir, "documents")
+    is_new = F.col("doc_id") % 5 == 0
+    assert incremental_dedup(docs.filter(is_new), docs.filter(~is_new)).collect()
+
+
+def _lm_perplexity_score(spark, sf_dir, tmp_path):
+    from play_bq_gcp_spark.operators.text import lm_perplexity_score
+
+    assert lm_perplexity_score(read_table(spark, sf_dir, "documents")).collect()
+
+
 @pytest.mark.parametrize(
     "op",
     [
@@ -115,6 +137,9 @@ def _udtf_chunk_documents(spark, sf_dir, tmp_path):
         _runtime_bloom_filter,
         _txn_overwrite_ts_partitions,
         _udtf_chunk_documents,
+        _containment_pairs,
+        _incremental_dedup,
+        _lm_perplexity_score,
     ],
     ids=lambda f: f.__name__.lstrip("_"),
 )
@@ -124,16 +149,21 @@ def test_op_leaves_conf_and_views_unchanged(spark, sf_dir, tmp_path, op):
             (t.name, t.isTemporary) for t in spark.catalog.listTables()
         )
 
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
     conf_before, views_before = spark.conf.getAll, views()
     op(spark, sf_dir, tmp_path)
     assert spark.conf.getAll == conf_before
     assert views() == views_before
+    assert cache.isEmpty(), "a cached relation outlived the operator"
 
 
 # (module relative to the package, enclosing function) -> why it may
-# change session conf or pick a streaming trigger itself
+# change session conf, cache or release a relation, or pick a streaming
+# trigger itself
 ALLOWED = {
     ("session.py", "scoped_conf"): "the scoped-conf helper itself",
+    ("session.py", "cached"): "the cache-and-release helper itself",
     (
         "streaming/available_now.py",
         "run_available_now",
@@ -151,8 +181,9 @@ ALLOWED = {
 
 def _guarded_calls(tree: ast.AST):
     """Yield (lineno, what) for every conf.set/conf.unset call, every
-    streaming ``.trigger(...)`` and every temp view registered under a
-    literal name."""
+    ``.cache()``/``.persist()``/``.unpersist()``, every streaming
+    ``.trigger(...)`` and every temp view registered under a literal
+    name."""
     for node in ast.walk(tree):
         if not (
             isinstance(node, ast.Call)
@@ -166,6 +197,8 @@ def _guarded_calls(tree: ast.AST):
         )
         if attr in ("set", "unset") and owner_name == "conf":
             yield node.lineno, f"conf.{attr}"
+        elif attr in ("cache", "persist", "unpersist"):
+            yield node.lineno, attr
         elif attr == "trigger":
             yield node.lineno, "trigger"
         elif (
@@ -198,8 +231,8 @@ def test_session_state_changes_only_in_the_helpers():
             if what.startswith("fixed temp view") or (rel, fn) not in ALLOWED:
                 offenders.append(f"{rel}:{lineno} {fn}: {what}")
     assert not offenders, (
-        "session conf / triggers / temp views outside scoped_conf and "
-        "run_available_now:\n" + "\n".join(offenders)
+        "session conf / caches / triggers / temp views outside "
+        "scoped_conf, cached and run_available_now:\n" + "\n".join(offenders)
     )
 
 
