@@ -9,9 +9,10 @@ once per cron tick (deploy.sh:8-12).  This is the same cycle as a CLI:
     python -m play_bq_gcp_spark --warehouse /tmp/wh --date 2024-06-01 \\
         --pages 8 --page-size 250
 
-The snapshot comes from the registered Spark DataSource (one API page
-per input partition through the HTTP seam; offline fake transport in
-this container — swap the transport for a real deployment).  With
+The snapshot comes from the registered Spark DataSource (contiguous
+groups of up to five API pages per input partition, the per-task token
+bucket's burst, through the HTTP seam; offline fake transport in this
+container — swap the transport for a real deployment).  With
 ``--txn`` every table write is an atomic versioned commit
 (storage/txn_table) instead of plain parquet.
 """

@@ -457,11 +457,13 @@ def rest_stream_ingest(spark: SparkSession, sf: str) -> DataFrame:
     """S1 × §2.8: the SAME paged API consumed as a STREAM — the Python
     DataSource's streamReader exposes page numbers as offsets (the
     persisted cursor of a tail-the-export-endpoint pipeline), each
-    micro-batch pulling the pages published since the last, one page
-    per input partition through the full HTTP seam.  Four pages arrive
-    over four genuine micro-batches (pages_per_batch=1; asserted in
-    tests); the oracle replays the fake's page arithmetic, so cursor
-    progression, client, parsing, and typing are all value-checked."""
+    micro-batch pulling the pages published since the last, grouped
+    into partitions of at most the token bucket's burst (five pages)
+    through the full HTTP seam.  Four pages arrive over four genuine
+    micro-batches (pages_per_batch=1, so one page and one task per
+    batch; asserted in tests); the oracle replays the fake's page
+    arithmetic, so cursor progression, client, parsing, and typing are
+    all value-checked."""
     import tempfile
     import time
     import uuid
@@ -529,7 +531,8 @@ def rest_stream_ingest(spark: SparkSession, sf: str) -> DataFrame:
 )
 def rest_source_snapshot(spark: SparkSession, sf: str) -> DataFrame:
     """S1 end-to-end through the Spark 4 Python DataSource: 4 API pages
-    → 4 input partitions, each fetched through the full HTTP seam
+    → one input partition (pages are grouped up to the token bucket's
+    burst of five), fetched in order through the full HTTP seam
     (per-task RestClient + token bucket + retries over the offline
     transport).  The fake's page arithmetic is replayed in SQL, so the
     oracle checks the ENTIRE source path — partitioning, client,

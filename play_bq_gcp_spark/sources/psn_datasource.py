@@ -4,15 +4,26 @@
 The reference pulls API pages in a driver-side loop
 (/root/reference/main.py:85-91).  ``scan_records`` (rest_api.py)
 mirrors that shape; THIS module is the scale path: a registered
-``DataSource`` whose reader maps **one API page to one input
-partition**, so a 1000-page scan runs as 1000 parallel tasks with no
-driver materialization.  Each task fetches its page through the full
-HTTP seam (sources/http_client.py: injected transport, token-bucket
-rate limit, bounded retries with deterministic jitter); this container
-has no network, so the TRANSPORT is a deterministic fake keyed by
-(seed, page, row) — the client machinery, partitioning, schema, and
-option plumbing are the real thing, and a deployment swaps in
-``UrllibTransport`` only.
+``DataSource`` whose reader splits the page range into contiguous
+groups of at most ``BURST`` pages, one group per input partition, so a
+1000-page scan runs as 200 parallel tasks with no driver
+materialization.  Each task fetches its pages in order through the
+full HTTP seam (sources/http_client.py: injected transport,
+token-bucket rate limit, bounded retries with deterministic jitter);
+this container has no network, so the TRANSPORT is a deterministic
+fake keyed by (seed, page, row) — the client machinery, partitioning,
+schema, and option plumbing are the real thing, and a deployment swaps
+in ``UrllibTransport`` only.
+
+Why groups and not one page per task: a Python task costs far more to
+start than a page costs to fetch and parse (SCALING.md round 15), and
+the source's partition count carries into every later stage of the
+daily cycle and into the files each write lands.  Why ``BURST``: the
+task's token bucket starts full, so the first attempts at up to
+``BURST`` pages never wait for a token — grouping slows no fetch —
+while a retry beyond the burst is paced at the bucket's rate.  The
+bucket is per task, so the cluster-wide first-attempt rate is
+``RATE`` × concurrent tasks; fewer tasks lower that peak.
 
 Usage::
 
@@ -42,11 +53,33 @@ _SCHEMA_DDL = (
 )
 
 
+# Per-task client pacing: requests/sec and the token bucket's burst.
+# BURST is also the most pages one input partition fetches.
+RATE = 10.0
+BURST = 5
+
+
 class _PagePartition(InputPartition):
-    def __init__(self, page: int, page_size: int, seed: int) -> None:
-        self.page = page
+    def __init__(self, pages: range, page_size: int, seed: int) -> None:
+        self.pages = pages
         self.page_size = page_size
         self.seed = seed
+
+
+def _page_partitions(
+    start: int, end: int, page_size: int, seed: int
+) -> list[_PagePartition]:
+    """Pages ``[start, end)`` as ``ceil(n / BURST)`` contiguous ranges
+    whose sizes differ by at most one."""
+    n = end - start
+    if n <= 0:
+        return []
+    groups = -(-n // BURST)
+    cuts = [start + n * g // groups for g in range(groups + 1)]
+    return [
+        _PagePartition(range(a, b), page_size, seed)
+        for a, b in zip(cuts, cuts[1:])
+    ]
 
 
 class _FakePsnTransport:
@@ -100,24 +133,23 @@ class GameSnapshotReader(DataSourceReader):
         self.seed = int(options.get("seed", 7))
 
     def partitions(self) -> Sequence[InputPartition]:
-        return [
-            _PagePartition(p, self.page_size, self.seed)
-            for p in range(self.pages)
-        ]
+        return _page_partitions(0, self.pages, self.page_size, self.seed)
 
     def read(self, partition: _PagePartition) -> Iterator[tuple]:
-        """One API page → one task, fetched through the full HTTP seam
-        (``_read_page``), exactly as a deployment would run it — only
-        the transport is the offline fake.  The task-local client means
-        cluster-wide request rate = rate × concurrent tasks;
-        10 req/s/task here."""
-        return _read_page(partition)
+        """Up to ``BURST`` API pages → one task, fetched through the
+        full HTTP seam (``_read_pages``), exactly as a deployment would
+        run it — only the transport is the offline fake.  The
+        task-local client means cluster-wide request rate = ``RATE`` ×
+        concurrent tasks."""
+        return _read_pages(partition)
 
 
-def _read_page(partition: _PagePartition) -> Iterator[tuple]:
-    """One API page → one task: per-task RestClient with a token bucket
-    and bounded retries over the offline transport (shared by the batch
-    and streaming readers — the seam is identical in both cadences)."""
+def _read_pages(partition: _PagePartition) -> Iterator[tuple]:
+    """One task's page range, fetched in order through one per-task
+    RestClient with a token bucket and bounded retries over the offline
+    transport (shared by the batch and streaming readers — the seam is
+    identical in both cadences).  The bucket keeps its real sleeper: a
+    retry beyond the burst waits for its token."""
     import datetime as dt
 
     from play_bq_gcp_spark.sources.http_client import (
@@ -127,27 +159,27 @@ def _read_page(partition: _PagePartition) -> Iterator[tuple]:
 
     client = RestClient(
         transport=_FakePsnTransport(partition.seed),
-        bucket=TokenBucket(rate=10.0, burst=5),
+        bucket=TokenBucket(rate=RATE, burst=BURST),
         max_attempts=3,
-        sleeper=lambda s: None,  # offline fake: no real pacing
+        sleeper=lambda s: None,  # offline fake sends Retry-After: 0
     )
-    url = (
-        "https://api.example/v1/titles"
-        f"?page={partition.page}&size={partition.page_size}"
-    )
-    doc = client.get(url).json()
     base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
-    for t in doc["titles"]:
-        yield (
-            t["title_id"],
-            t["title_name"],
-            t["image"],
-            t["category"],
-            base + dt.timedelta(hours=t["first_played_hours"]),
-            base + dt.timedelta(hours=t["last_played_hours"]),
-            t["play_count"],
-            t["play_duration_seconds"],
+    for page in partition.pages:
+        url = (
+            "https://api.example/v1/titles"
+            f"?page={page}&size={partition.page_size}"
         )
+        for t in client.get(url).json()["titles"]:
+            yield (
+                t["title_id"],
+                t["title_name"],
+                t["image"],
+                t["category"],
+                base + dt.timedelta(hours=t["first_played_hours"]),
+                base + dt.timedelta(hours=t["last_played_hours"]),
+                t["play_count"],
+                t["play_duration_seconds"],
+            )
 
 
 class GameSnapshotStreamReader(DataSourceStreamReader):
@@ -157,10 +189,11 @@ class GameSnapshotStreamReader(DataSourceStreamReader):
     poll "publishes" ``pages_per_batch`` more pages (the offline
     stand-in for new data appearing) up to ``total_pages``; a
     micro-batch reads exactly the pages between its start and end
-    offsets, one page per input partition, through the same HTTP seam
-    as the batch reader.  Exactly-once delivery falls out of Spark's
-    offset log + deterministic page contents: a replayed batch
-    re-reads the same pages and produces identical rows."""
+    offsets, grouped into partitions of at most ``BURST`` pages like
+    the batch reader's, through the same HTTP seam.  Exactly-once
+    delivery falls out of Spark's offset log + deterministic page
+    contents: a replayed batch re-reads the same pages and produces
+    identical rows."""
 
     def __init__(self, options: dict) -> None:
         self.page_size = int(options.get("page_size", 100))
@@ -179,13 +212,12 @@ class GameSnapshotStreamReader(DataSourceStreamReader):
         return {"page": self._latest}
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        return [
-            _PagePartition(p, self.page_size, self.seed)
-            for p in range(start["page"], end["page"])
-        ]
+        return _page_partitions(
+            start["page"], end["page"], self.page_size, self.seed
+        )
 
     def read(self, partition: _PagePartition) -> Iterator[tuple]:
-        return _read_page(partition)
+        return _read_pages(partition)
 
     def commit(self, end: dict) -> None:
         pass  # the cursor lives in Spark's offset log

@@ -1,6 +1,12 @@
 from __future__ import annotations
 
-from play_bq_gcp_spark.sources.psn_datasource import GameSnapshotDataSource
+import math
+
+from play_bq_gcp_spark.sources.psn_datasource import (
+    BURST,
+    GameSnapshotDataSource,
+    GameSnapshotStreamReader,
+)
 
 
 def _load(spark, pages=4, page_size=50):
@@ -13,10 +19,25 @@ def _load(spark, pages=4, page_size=50):
     )
 
 
-def test_one_page_per_partition(spark):
-    df = _load(spark, pages=4, page_size=50)
-    assert df.rdd.getNumPartitions() == 4
-    assert df.count() == 200
+def test_pages_grouped_by_bucket_burst(spark):
+    """Contiguous page groups of at most the token bucket's burst, one
+    per partition; every title arrives exactly once.  Every third page
+    fails its first delivery with a 503, so retries run inside a
+    grouped task (and, past the burst, wait for their token)."""
+    assert BURST == 5
+    page_size = 3
+    for pages in (1, 4, 5, 6, 8, 11):
+        df = _load(spark, pages=pages, page_size=page_size)
+        assert df.rdd.getNumPartitions() == math.ceil(pages / 5)
+        ids = [r.title_id for r in df.select("title_id").collect()]
+        n = pages * page_size
+        assert sorted(ids) == [f"CUSA{i:05d}_00" for i in range(n)]
+
+
+def test_stream_micro_batch_pages_grouped_by_burst():
+    parts = GameSnapshotStreamReader({}).partitions({"page": 0}, {"page": 7})
+    assert len(parts) == 2
+    assert sorted(p for part in parts for p in part.pages) == list(range(7))
 
 
 def test_deterministic_across_reads(spark):

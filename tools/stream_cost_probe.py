@@ -2,16 +2,18 @@
 (r13 verdict #6): where does the wall time of
 ``streaming_window_dedup_counts`` actually go?
 
-Replays the exact query shape of
-``streaming/daily.windowed_deduped_counts`` (doubled stream →
-dropDuplicatesWithinWatermark → 1 h windows, complete mode, AvailableNow,
-noDataMicroBatches off, 8 state partitions) but drives the stream
-directly so the ``StreamingQueryProgress`` records can be captured:
-``durationMs`` splits each micro-batch into latestOffset / getBatch /
-queryPlanning / addBatch / walCommit / commitOffsets, and
-``stateOperators`` reports per-operator state commit time and rows.
-Everything outside the batches (query start/stop, checkpoint dir setup)
-shows up as ``wall - sum(batch durations)``.
+Runs the entry's own function, ``streaming/daily.windowed_deduped_counts``
+(doubled stream → dropDuplicatesWithinWatermark → 1 h windows, complete
+mode, AvailableNow, noDataMicroBatches off, 8 state partitions, all
+conf scoped by ``run_available_now``), with perfbench's
+``ProgressKeeper`` listener registered, so every micro-batch's
+``StreamingQueryProgress`` is kept (``recentProgress`` keeps only the
+last 100): ``durationMs`` splits each micro-batch into latestOffset /
+getBatch / queryPlanning / addBatch / walCommit / commitOffsets, all
+inside ``triggerExecution``, and ``stateOperators`` reports
+per-operator state commit time and rows.  Everything outside the
+batches (query start/stop, checkpoint dir setup, memory-sink view)
+shows up as ``wall - sum(triggerExecution)``.
 
 Usage: python tools/stream_cost_probe.py [--sf SF_DIR] [--rounds N]
 Prints one JSON line with per-round batch breakdowns.
@@ -22,13 +24,9 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 import time
-import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from pyspark.sql import functions as F
 
 
 def main() -> None:
@@ -46,75 +44,42 @@ def main() -> None:
         else:
             sys.exit(f"unknown arg {args[i]}")
 
+    from perfbench.spark_trace import ProgressKeeper
     from play_bq_gcp_spark.session import get_spark
-    from play_bq_gcp_spark.streaming.daily import read_events_stream
+    from play_bq_gcp_spark.streaming.daily import windowed_deduped_counts
 
     spark = get_spark(app_name="stream_cost_probe")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
+    keeper = ProgressKeeper()
+    spark.streams.addListener(keeper)
 
     out: list[dict] = []
     for r in range(rounds):
-        a = read_events_stream(spark, sf_dir)
-        b = read_events_stream(spark, sf_dir)
-        doubled = a.unionByName(b)
-        deduped = doubled.withWatermark(
-            "ts", "1 hour"
-        ).dropDuplicatesWithinWatermark(["event_id"])
-        agg = deduped.groupBy(
-            F.window("ts", "1 hour").alias("w"), "event_type"
-        ).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-        name = f"probe_{uuid.uuid4().hex[:8]}"
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        prev_ndb = spark.conf.get(
-            "spark.sql.streaming.noDataMicroBatches.enabled"
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", "false"
-        )
         t0 = time.perf_counter()
-        try:
-            with tempfile.TemporaryDirectory() as ckpt:
-                q = (
-                    agg.writeStream.format("memory")
-                    .queryName(name)
-                    .outputMode("complete")
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-                wall = time.perf_counter() - t0
-                progress = [json.loads(p.json) for p in q.recentProgress]
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-            spark.conf.set(
-                "spark.sql.streaming.noDataMicroBatches.enabled", prev_ndb
-            )
-        batches = []
-        for p in progress:
-            batches.append(
-                {
-                    "batchId": p.get("batchId"),
-                    "numInputRows": p.get("numInputRows"),
-                    "durationMs": p.get("durationMs"),
-                    "stateOperators": [
-                        {
-                            "operatorName": s.get("operatorName"),
-                            "numRowsTotal": s.get("numRowsTotal"),
-                            "allUpdatesTimeMs": s.get("allUpdatesTimeMs"),
-                            "allRemovalsTimeMs": s.get("allRemovalsTimeMs"),
-                            "commitTimeMs": s.get("commitTimeMs"),
-                        }
-                        for s in p.get("stateOperators", [])
-                    ],
-                }
-            )
+        windowed_deduped_counts(spark, sf_dir)
+        wall = time.perf_counter() - t0
+        batches = [
+            {
+                "batchId": p.batchId,
+                "numInputRows": p.numInputRows,
+                "durationMs": dict(p.durationMs),
+                "stateOperators": [
+                    {
+                        "operatorName": s.operatorName,
+                        "numRowsTotal": s.numRowsTotal,
+                        "allUpdatesTimeMs": s.allUpdatesTimeMs,
+                        "allRemovalsTimeMs": s.allRemovalsTimeMs,
+                        "commitTimeMs": s.commitTimeMs,
+                    }
+                    for s in p.stateOperators
+                ],
+            }
+            for p in keeper.drain()
+        ]
+        # triggerExecution spans the whole batch; the other durationMs
+        # keys are phases inside it
         total_batch_ms = sum(
-            sum((b["durationMs"] or {}).values()) for b in batches
+            b["durationMs"].get("triggerExecution", 0) for b in batches
         )
         out.append(
             {
