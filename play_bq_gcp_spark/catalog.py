@@ -274,9 +274,7 @@ def overwrite(df: DataFrame, path: str, partition_by: list[str] | None = None) -
     w.parquet(path)
 
 
-def atomic_overwrite(
-    df: DataFrame, path: str, partition_by: list[str] | None = None
-) -> None:
+def atomic_overwrite(df: DataFrame, path: str) -> None:
     """Overwrite with stage-write + rename swap (SURVEY.md §7 hard
     part 1).  ``mode("overwrite")`` deletes the target before writing —
     a crash mid-write loses the table, and reading the target as the
@@ -286,56 +284,20 @@ def atomic_overwrite(
     two directory renames swap it in.  POSIX rename is atomic; the
     worst crash window leaves the old table at a recovery path instead
     of gone.  This rewrites the FULL table — for upserts touching a
-    few partitions use ``dynamic_partition_overwrite`` (below), or
-    ``storage.txn_table.overwrite_partitions`` when the swap must be
-    atomic across partitions / on object stores (no atomic rename
-    there; the manifest create is the commit)."""
+    few partitions use ``storage.txn_table.overwrite_partitions``,
+    which is atomic across partitions and on object stores (no atomic
+    rename there; the manifest create is the commit)."""
     import shutil
     import uuid
 
     token = uuid.uuid4().hex[:8]
     stage = f"{path}.__stage__{token}"
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(stage)
+    df.write.mode("overwrite").parquet(stage)
     old = f"{path}.__old__{token}"
     if os.path.isdir(path):
         os.rename(path, old)
     os.rename(stage, path)
     shutil.rmtree(old, ignore_errors=True)
-
-
-def dynamic_partition_overwrite(
-    df: DataFrame, path: str, partition_by: list[str]
-) -> None:
-    """INSERT OVERWRITE with dynamic partition resolution: ONLY the
-    partitions present in ``df`` are replaced; every other partition's
-    files stay byte-identical on disk.  This is the 100 TB merge-path
-    write (SURVEY.md §4.3): an upsert touching k dates rewrites k
-    date directories, never the table — the answer the prose at
-    operators/merge.py and ``atomic_overwrite`` promised.
-
-    Spark-native: ``partitionOverwriteMode=dynamic`` scopes the
-    overwrite to the written partitions.  Passed as a PER-WRITE
-    DataFrameWriter option — which takes precedence over the session
-    conf — rather than toggling the session-global
-    ``spark.sql.sources.partitionOverwriteMode``, so a concurrent
-    writer on the same session can never observe a flipped mode
-    mid-window (a static full overwrite silently turning dynamic, or
-    vice versa).  Atomicity is PER PARTITION on a plain filesystem —
-    a crash mid-write can leave some touched partitions new and some
-    old (each individually complete, since the committer renames
-    per-partition output in one pass).  When cross-partition atomicity
-    matters, use the manifest path
-    (``storage.txn_table.overwrite_partitions``), which commits all
-    partitions in one compare-and-swap."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_by)
-        .parquet(path)
-    )
 
 
 def write_bucketed(

@@ -18,13 +18,6 @@ def json_get(col: Column | str, path: str) -> Column:
     return F.get_json_object(c, f"$.{path}")
 
 
-def parse_props(df: DataFrame, col: str = "props", keys: dict[str, T.DataType] | None = None) -> DataFrame:
-    """Parse the JSON column into a typed struct column ``props_s``."""
-    keys = keys or {"k": T.LongType()}
-    schema = T.StructType([T.StructField(k, t, True) for k, t in keys.items()])
-    return df.withColumn("props_s", F.from_json(F.col(col), schema))
-
-
 def explode_json_map(df: DataFrame, col: str = "props") -> DataFrame:
     """JSON object → exploded (key, value) rows via MapType parse."""
     m = F.from_json(F.col(col), T.MapType(T.StringType(), T.StringType()))

@@ -3,9 +3,9 @@
 The reference computed no local aggregation (trophy totals arrived
 pre-aggregated; /root/reference/main.py:320), so this module supplies the
 engine's aggregation surface directly from Spark: hash aggregate with
-automatic partial (map-side) + final phases, multi-dimensional rollup/
-cube (explicit GROUPING SETS are written in queries/relational.py),
-distinct and approximate aggregates.
+automatic partial (map-side) + final phases, multi-dimensional rollup
+(CUBE and explicit GROUPING SETS are written in queries/relational.py),
+exact percentiles and approximate aggregates.
 
 Scale notes: groupBy on a low-cardinality key set (returnflag ×
 linestatus = ~6 groups) partial-aggregates down to almost nothing before
@@ -160,47 +160,6 @@ def agg_rollup(orders: DataFrame, customer: DataFrame, nation: DataFrame) -> Dat
         .orderBy(
             F.col("n_name").asc_nulls_first(), F.col("o_orderstatus").asc_nulls_first()
         )
-    )
-
-
-def agg_cube(lineitem: DataFrame) -> DataFrame:
-    """CUBE on (returnflag, linestatus): all 4 grouping combinations."""
-    return (
-        lineitem.cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .orderBy(
-            F.col("l_returnflag").asc_nulls_first(),
-            F.col("l_linestatus").asc_nulls_first(),
-        )
-    )
-
-
-def distinct_counts(lineitem: DataFrame) -> DataFrame:
-    """Exact multi-column distinct aggregation."""
-    return (
-        lineitem.groupBy("l_returnflag")
-        .agg(
-            F.countDistinct("l_orderkey").alias("n_orders"),
-            F.countDistinct("l_partkey", "l_suppkey").alias("n_part_supp"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-def stats_summary(lineitem: DataFrame) -> DataFrame:
-    """min / max / stddev bundle — the remaining standard aggregates."""
-    return (
-        lineitem.groupBy("l_returnflag")
-        .agg(
-            F.min("l_extendedprice").alias("min_price"),
-            F.max("l_extendedprice").alias("max_price"),
-            F.round(F.stddev_samp("l_extendedprice"), 4).alias("stddev_price"),
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-        )
-        .orderBy("l_returnflag")
     )
 
 

@@ -8,20 +8,18 @@ the upsert as a pure transformation: left-join target to updates and
 matched ids, leave the rest" and idempotent under re-runs.  No staging
 table is needed because lineage replaces staging.
 
-Scale notes: when the updates side is genuinely dim-sized (only
-changed rows — the reference pre-filters with a semi-join for exactly
-this reason, main.py:244) pass ``broadcast_updates=True``.  The
-DEFAULT is no hint: AQE sizes the join at runtime, so an updates side
+Scale notes: the upsert join carries no broadcast hint.  AQE sizes it
+at runtime, so a dim-sized updates side (only changed rows — the
+reference pre-filters with a semi-join for exactly this reason,
+main.py:244) is broadcast from observed sizes, while an updates side
 that is actually an aggregate over a 100 TB fact table (e.g. per-key
-order totals) never gets force-broadcast into driver/executor OOM.
-When both sides are huge, bucket both on the key so the join is
-co-located; the overwrite then goes partition-by-partition —
-``catalog.dynamic_partition_overwrite`` (Spark-native, per-partition
-atomic) or ``storage.txn_table.overwrite_partitions`` (manifest
-commit, atomic across partitions) — rather than full-table.
-``plans.pipeline.PartitionedWarehouse`` wires exactly that into the
-daily dimension merge: changed keys select their hash-bucket
-partitions, and only those partitions are rewritten.
+order totals) is never force-broadcast into driver/executor OOM.
+The write side does not rewrite the whole table either:
+``storage.txn_table.merge_into`` (the daily dimension merge of
+``plans.pipeline.TxnWarehouse``) rewrites only the base files whose
+key range overlaps the source's, and
+``storage.txn_table.overwrite_partitions`` replaces only the
+partitions present in its input, atomically across partitions.
 """
 
 from __future__ import annotations
@@ -36,23 +34,15 @@ def merge_upsert(
     updates: DataFrame,
     key: str | Sequence[str],
     update_cols: Sequence[str],
-    broadcast_updates: bool = False,
 ) -> DataFrame:
     """Return target with ``update_cols`` replaced by the updates row's
     value for matched keys (UPDATE…FROM semantics; rows only in
     ``updates`` are ignored, mirroring main.py:274-284 which never
-    inserts).
-
-    ``broadcast_updates`` is opt-in: only set it when the updates feed
-    is known dim-sized; otherwise AQE picks the strategy from observed
-    sizes.
-    """
+    inserts)."""
     keys = [key] if isinstance(key, str) else list(key)
     upd = updates.select(
         *keys, *[F.col(c).alias(f"__upd_{c}") for c in update_cols]
     )
-    if broadcast_updates:
-        upd = F.broadcast(upd)
     out = target.join(upd, on=keys, how="left")
     for c in update_cols:
         out = out.withColumn(c, F.coalesce(F.col(f"__upd_{c}"), F.col(c)))

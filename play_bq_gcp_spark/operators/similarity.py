@@ -49,12 +49,6 @@ _log = logging.getLogger(__name__)
 IVF_SEP_ESCALATE = 0.6
 
 
-def _vec_lit(v) -> F.Column:
-    from play_bq_gcp_spark.functions.vector import vec_lit
-
-    return vec_lit(v)
-
-
 def brute_force_topk(
     embeddings: DataFrame, query_vec, k: int = 10
 ) -> DataFrame:

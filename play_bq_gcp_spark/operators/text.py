@@ -327,18 +327,6 @@ def doc_profile(documents: DataFrame) -> DataFrame:
     )
 
 
-def corpus_token_frequencies(documents: DataFrame, top_n: int = 20) -> DataFrame:
-    """Corpus-level token frequency (explode → count): the one shuffle
-    in this module; partial aggregation makes it scale."""
-    return (
-        documents.select(F.explode(tokens("text")).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .orderBy(F.col("freq").desc(), F.col("token"))
-        .limit(top_n)
-    )
-
-
 def lm_perplexity_score(documents: DataFrame, alpha: float = 1.0) -> DataFrame:
     """Bigram-LM fluency score per document: mean negative log
     probability of the doc's token bigrams under add-alpha-smoothed

@@ -63,22 +63,6 @@ def running_sum(
     return df.withColumn(alias, F.sum(value_col).over(w))
 
 
-def rank_suite(
-    df: DataFrame, partition_by: str, order_col: str
-) -> DataFrame:
-    """rank / dense_rank / percent_rank / ntile in one pass (one shuffle:
-    identical window spec)."""
-    w = Window.partitionBy(partition_by).orderBy(F.col(order_col).desc())
-    return df.select(
-        partition_by,
-        order_col,
-        F.rank().over(w).alias("rnk"),
-        F.dense_rank().over(w).alias("dense_rnk"),
-        F.round(F.percent_rank().over(w), 6).alias("pct_rnk"),
-        F.ntile(4).over(w).alias("quartile"),
-    )
-
-
 def sessionize(
     df: DataFrame,
     user_col: str,

@@ -139,103 +139,11 @@ class Warehouse:
         """Dimension update seam: updated-changed-rows plus inserted
         fresh rows, as ONE atomic write.  The parquet warehouse can
         only express this as full-overwrite (compute the next state,
-        swap); ``TxnWarehouse`` overrides with a true transactional
-        MERGE INTO that rewrites only the files the changed keys
-        touch."""
+        swap); ``TxnWarehouse`` overrides with a transactional MERGE
+        INTO that rewrites only the files whose ``id`` range overlaps
+        the day's [min, max] key range."""
         updated = upsert_games(stored, snapshot, deltas)
         self.replace(updated.unionByName(fresh), table)
-
-
-class PartitionedWarehouse(Warehouse):
-    """The dimension laid out hash-bucket-partitioned on its key, so
-    the daily merge becomes a DYNAMIC PARTITION OVERWRITE: the changed
-    and fresh ids select the k buckets they hash into, only those
-    buckets' rows are read+merged, and only those bucket directories
-    are rewritten — every untouched bucket's files stay byte-identical
-    (pinned in tests/test_pipeline.py).  This is the partition-level
-    merge path the r8 verdict flagged as the last missing 100 TB merge
-    piece: at scale a daily upsert touches a bounded set of buckets,
-    never the table.
-
-    ``__bucket = pmod(hash(id), n_buckets)`` is computed at write time
-    and is a layout detail — reads drop it.  Bucket count trades merge
-    granularity against small-file pressure (at 100 TB pick buckets ≈
-    table_size / healthy_partition_size)."""
-
-    def __init__(self, root: str, n_buckets: int = 16):
-        super().__init__(root)
-        self.n_buckets = n_buckets
-
-    def _bucketed(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "__bucket", F.pmod(F.hash("id"), F.lit(self.n_buckets))
-        )
-
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        df = super().read(spark, table)
-        return df.drop("__bucket") if "__bucket" in df.columns else df
-
-    def replace(self, df: DataFrame, table: str) -> None:
-        if "id" not in df.columns:  # non-dimension tables: plain swap
-            return super().replace(df, table)
-        atomic_overwrite(
-            self._bucketed(df), self.path(table), partition_by=["__bucket"]
-        )
-
-    def merge_dim(
-        self,
-        spark: SparkSession,
-        table: str,
-        stored: DataFrame,
-        snapshot: DataFrame,
-        deltas: DataFrame,
-        fresh: DataFrame,
-    ) -> None:
-        """Partition-pruned dimension update: rewrite ONLY the buckets
-        the changed/fresh ids hash into.  The merge reads the CALLER'S
-        ``stored`` view (honoring the Warehouse.merge_dim contract —
-        a version-pinned or repaired ``stored`` is merged as given,
-        and run_daily's cache is reused) with the bucket column
-        re-derived from the same ``pmod(hash(id))`` expression the
-        write path uses, so the touched-bucket filter selects the same
-        rows partition discovery would."""
-        from play_bq_gcp_spark.catalog import dynamic_partition_overwrite
-
-        changed = semi_join(snapshot, deltas.select("id"), "id")
-        with cached(
-            self._bucketed(changed.unionByName(fresh.select(changed.columns)))
-        ) as incoming:
-            buckets = [
-                r[0]
-                for r in incoming.select("__bucket").distinct().collect()
-            ]  # bounded: ≤ n_buckets values
-            if not buckets:
-                return
-            touched = self._bucketed(stored).filter(
-                F.col("__bucket").isin(buckets)
-            )
-            merged = merge_upsert(
-                touched,
-                incoming.drop("__bucket"),
-                "id",
-                DIM_UPDATE_COLS,
-            )
-            new_rows = incoming.join(
-                touched.select("id"), on="id", how="left_anti"
-            ).select(merged.columns)
-            # Materialize BEFORE overwriting: the output plan reads the
-            # very bucket directories the overwrite replaces, and the
-            # read side is only safe while the caller's cache of
-            # ``stored`` stays resident.  localCheckpoint(eager=True)
-            # cuts the lineage back to the target path, so an uncached
-            # caller (or a mid-write cache eviction) cannot recompute
-            # the output from directories the write just deleted.
-            out = merged.unionByName(new_rows).localCheckpoint(eager=True)
-            dynamic_partition_overwrite(
-                out,
-                self.path(table),
-                partition_by=["__bucket"],
-            )
 
 
 class TxnWarehouse(Warehouse):
@@ -293,10 +201,13 @@ class TxnWarehouse(Warehouse):
         """The reference's UPDATE…FROM + insert (main.py:274-284) as a
         single transactional MERGE INTO commit: changed rows (activity
         semi-join) update ``DIM_UPDATE_COLS``, brand-new rows insert,
-        and key-range pruning rewrites only the base files the source
-        keys overlap — at 100 TB a daily merge touches the day's
-        files, never the table.  CDF (``txn_table.changes``) exposes
-        exactly the rewritten files to downstream incrementals."""
+        and pruning is range-based: only base files whose recorded
+        ``id`` range overlaps the source's one [min, max] are
+        rewritten, the rest are carried by reference.  The day's
+        surrogate ids are scattered, so that interval usually spans
+        every file; the carry only pays when the changed ids are
+        range-local.  CDF (``txn_table.changes``) exposes exactly the
+        rewritten files to downstream incrementals."""
         from play_bq_gcp_spark.storage import txn_table as tt
 
         changed = semi_join(snapshot, deltas.select("id"), "id")
@@ -307,7 +218,6 @@ class TxnWarehouse(Warehouse):
             key="id",
             update_cols=DIM_UPDATE_COLS,
             insert=True,
-            prune_col="id",
         )
 
 

@@ -789,20 +789,14 @@ def set_ops_suite(spark: SparkSession, sf: str) -> DataFrame:
     INTERSECT and EXCEPT (each one hash shuffle on the key) — tagged
     into one result.  The tag is attached AFTER each set op so the
     distinct semantics stay exact."""
-    from play_bq_gcp_spark.operators.setops import (
-        except_distinct,
-        intersect,
-        union_all,
-    )
-
     o = _t(spark, sf, "orders")
     o_open = o.filter(F.col("o_orderstatus") == "O").select("o_custkey")
     o_filled = o.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     o_pending = o.filter(F.col("o_orderstatus") == "P").select("o_custkey")
     legs = [
-        union_all(o_open, o_filled).withColumn("op", F.lit("union_all")),
-        intersect(o_open, o_filled).withColumn("op", F.lit("intersect")),
-        except_distinct(o_open, o_pending).withColumn("op", F.lit("except")),
+        o_open.unionByName(o_filled).withColumn("op", F.lit("union_all")),
+        o_open.intersect(o_filled).withColumn("op", F.lit("intersect")),
+        o_open.subtract(o_pending).withColumn("op", F.lit("except")),
     ]
     out = legs[0]
     for leg in legs[1:]:

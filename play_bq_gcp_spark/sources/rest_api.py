@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from collections.abc import Callable, Iterable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 # Schema of one raw title-stats record (main.py:91-93's projection P1/P2).
 GAME_SNAPSHOT_SCHEMA = T.StructType(
@@ -68,8 +68,3 @@ def trophy_document(spark: SparkSession, doc: dict) -> DataFrame:
     (main.py:320-323's ``from_dict(...).T`` transpose)."""
     row = tuple(int(doc.get(f.name, 0)) for f in TROPHY_SCHEMA.fields)
     return spark.createDataFrame([row], TROPHY_SCHEMA)
-
-
-def stamp_date(df: DataFrame, date_col: str = "date") -> DataFrame:
-    """F8: append the run-date column (main.py:327)."""
-    return df.withColumn(date_col, F.date_trunc("DAY", F.current_timestamp()))

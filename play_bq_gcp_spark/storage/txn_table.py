@@ -1337,7 +1337,6 @@ def merge_into(
     key: str | list[str],
     update_cols: list[str],
     insert: bool = True,
-    prune_col: str | None = None,
     expected_version: int | None = None,
     evolve: bool = False,
 ) -> Snapshot:
@@ -1346,16 +1345,18 @@ def merge_into(
     source row, optionally insert unmatched source rows, commit as ONE
     atomic manifest.
 
-    Copy-on-write is file-pruned: with ``prune_col`` (a key column),
-    the source's [min, max] for that column — two values, computed in
-    one tiny aggregate — selects only base files whose footer range
-    overlaps; every other file is carried into the new version BY
-    REFERENCE, unrewritten.  Pruning is sound for the insert leg too:
-    a file skipped by the stats cannot contain any source key, so
-    match detection over the touched files alone is exact.  At 100 TB
-    a merge touching one day's keys rewrites that day's files, not the
-    table.  Overwrite-style conflict semantics (raises on a racing
-    commit rather than clobbering it).
+    Copy-on-write is range-pruned when ``key`` is a single column: the
+    source's [min, max] of the key — two values, computed in one tiny
+    aggregate — selects only base files whose footer range overlaps;
+    every other file is carried into the new version BY REFERENCE,
+    unrewritten.  Pruning is sound for the insert leg too: a file
+    skipped by the stats cannot contain any source key, so match
+    detection over the touched files alone is exact.  One interval
+    carries a file only when the source keys are range-local (a day's
+    keys in a key-ordered table); scattered keys span every file and
+    rewrite them all.  A composite key is not pruned.  Overwrite-style
+    conflict semantics (raises on a racing commit rather than
+    clobbering it).
 
     Schema: the OUTPUT schema is validated against the declared one
     BEFORE any file lands — a source whose update column is wider
@@ -1370,17 +1371,13 @@ def merge_into(
         current_version(path) if expected_version is None else expected_version
     )
     snap = snapshot(path, base_version)
-    lo = hi = None
-    if prune_col is not None:
+    keys = [key] if isinstance(key, str) else list(key)
+    targets = list(snap.files)
+    if len(keys) == 1 and targets:
         bounds = source.agg(
-            F.min(prune_col).alias("lo"), F.max(prune_col).alias("hi")
+            F.min(keys[0]).alias("lo"), F.max(keys[0]).alias("hi")
         ).first()
-        lo, hi = bounds["lo"], bounds["hi"]
-    targets = (
-        _overlapping(snap, prune_col, lo, hi)
-        if prune_col is not None
-        else list(snap.files)
-    )
+        targets = _overlapping(snap, keys[0], bounds["lo"], bounds["hi"])
     untouched = [f for f in snap.files if f not in set(targets)]
 
     from play_bq_gcp_spark.operators.merge import (
@@ -1421,7 +1418,7 @@ def merge_into(
         rows,
         "merge",
         time.time(),
-        {"keys": [key] if isinstance(key, str) else list(key)},
+        {"keys": keys},
         {**untouched_stats, **new_stats},
         declared,
     )

@@ -8,7 +8,9 @@ reference's observable behavior table-by-table.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
+import pyarrow.parquet as pq
 import pytest
 
 from play_bq_gcp_spark.plans import pipeline
@@ -215,71 +217,73 @@ def test_cli_bootstrap_then_incremental_daily(spark, tmp_path, capsys):
     assert TxnWarehouse(wh_dir).read(spark, "game").count() == 300
 
 
-def test_partitioned_warehouse_merge_rewrites_only_touched_buckets(
-    spark, tmp_path
-):
-    """Dynamic-partition-overwrite merge path (VERDICT r8 #3): a daily
-    upsert touching k hash buckets rewrites exactly those bucket
-    directories; every untouched bucket's files stay byte-identical,
-    and the merged table matches the plain-Warehouse golden result."""
+def _title(n, count, last_day=1):
+    return (f"CUSA_000000{n}_00", f"T{n}", f"http://img/{n}", "ps4_game",
+            dt.datetime(2020, 1, n, 12), dt.datetime(2024, 1, last_day),
+            count, 60.0 * count)
+
+
+def test_txn_warehouse_daily_merge_carries_untouched_files(spark, tmp_path):
+    """A sparse day on TxnWarehouse: the dimension MERGE carries every
+    base file whose recorded ``id`` range lies outside the day's keys
+    into the new version by reference, byte-identical, and rewrites
+    the file holding the changed title.
+
+    Limit: ``merge_into`` prunes with ONE [min, max] over the source
+    keys, so it carries files only when the day's keys are
+    range-local, as here (titles 6-7 of 1-7).  Scattered keys span
+    every file and rewrite them all; file-exact pruning on scattered
+    keys is still open (ROADMAP direction 1)."""
     import hashlib
-    import os
 
-    from pyspark.sql import functions as F
+    from play_bq_gcp_spark.storage import txn_table as tt
 
-    wh = pipeline.PartitionedWarehouse(str(tmp_path / "pw"), n_buckets=16)
-    pipeline.bootstrap(wh, _snapshot(spark, D1))
+    def raw(rows):  # one partition, so one data file, per title
+        rdd = spark.sparkContext.parallelize(rows, len(rows))
+        return spark.createDataFrame(rdd, GAME_SNAPSHOT_SCHEMA)
+
+    wh = pipeline.TxnWarehouse(str(tmp_path / "txn_wh"))
+    base_titles = [_title(n, 1) for n in (1, 2, 3)]
+    pipeline.bootstrap(wh, raw(base_titles))
+    wh.append(
+        pipeline.transform_snapshot(raw([_title(5, 1), _title(6, 1)])), "game"
+    )
     root = wh.path("game")
+    base = tt.snapshot(root)
 
-    def tree_hashes():
-        out = {}
-        for dirpath, _, files in os.walk(root):
-            for f in files:
-                p = os.path.join(dirpath, f)
-                rel = os.path.relpath(p, root)
-                with open(p, "rb") as fh:
-                    out[rel] = hashlib.sha256(fh.read()).hexdigest()
-        return out
+    def sha(f):
+        with open(os.path.join(root, f), "rb") as fh:
+            return hashlib.sha256(fh.read()).hexdigest()
 
-    before = tree_hashes()
-
-    stats = pipeline.run_daily(wh, spark, _snapshot(spark, D2), "2024-01-02")
+    before = {f: sha(f) for f in base.files}
+    day = base_titles + [_title(5, 1), _title(6, 3, 2), _title(7, 1, 2)]
+    stats = pipeline.run_daily(wh, spark, raw(day), "2024-01-02")
     assert stats["new_games"] == 1 and stats["time_play"] == 1
 
-    # golden content: identical to the plain-Warehouse run
-    game = wh.read(spark, "game")
-    assert game.count() == 4
-    alpha = game.filter("title_name = 'Alpha'").first()
-    assert alpha.play_count == 12 and alpha.play_duration == 4000.0
-    beta = game.filter("title_name = 'Béta'").first()
-    assert beta.play_count == 5
-
-    # the buckets the changed (Alpha) + fresh (Delta) ids hash into
-    touched = {
-        r[0]
-        for r in game.filter(
-            F.col("title_name").isin("Alpha", "Delta")
-        )
-        .select(F.pmod(F.hash("id"), F.lit(16)))
-        .collect()
+    ids = {
+        r.title_id: r.id
+        for r in pipeline.transform_snapshot(raw(day)).collect()
     }
-    after = tree_hashes()
-    untouched_files = [
-        rel
-        for rel in before
-        if not any(f"__bucket={b}" + os.sep in rel or
-                   rel.startswith(f"__bucket={b}{os.sep}")
-                   for b in touched)
-        and rel.endswith(".parquet")
+    lo, hi = ids["CUSA000000600"], ids["CUSA000000700"]
+    outside = [
+        f for f in base.files
+        if base.file_stats[f]["cols"]["id"][1] < lo
+        or base.file_stats[f]["cols"]["id"][0] > hi
     ]
-    assert untouched_files, "test needs at least one untouched bucket"
-    for rel in untouched_files:
-        assert after.get(rel) == before[rel], f"untouched {rel} rewritten"
-    # and the touched buckets really did change
-    changed = [
-        rel for rel in before
-        if rel not in after or after[rel] != before[rel]
+    after = tt.snapshot(root)
+    assert len(outside) >= 4 and set(outside) <= set(after.files)
+    for f in outside:
+        assert sha(f) == before[f], f"carried file {f} changed"
+    holds_6 = [
+        f for f in base.files
+        if "CUSA000000600" in pq.read_table(
+            os.path.join(root, f), columns=["title_id"]
+        ).column("title_id").to_pylist()
     ]
-    assert any(
-        f"__bucket={b}" in rel for b in touched for rel in changed
-    )
+    assert len(holds_6) == 1 and holds_6[0] not in after.files
+
+    game = {r.title_id: r.play_count for r in wh.read(spark, "game").collect()}
+    assert game == {
+        "CUSA000000100": 1, "CUSA000000200": 1, "CUSA000000300": 1,
+        "CUSA000000500": 1, "CUSA000000600": 3, "CUSA000000700": 1,
+    }

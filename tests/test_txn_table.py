@@ -299,7 +299,7 @@ def test_merge_into_prunes_untouched_files(spark, table):
     tt.append(_df(spark, 200, 300).coalesce(1), table)
     before = set(tt.snapshot(table).files)
     src = spark.createDataFrame([(150, -1), (160, -2)], "id long, v long")
-    out = tt.merge_into(spark, table, src, "id", ["v"], prune_col="id")
+    out = tt.merge_into(spark, table, src, "id", ["v"])
     # the two non-overlapping files are carried by reference, unrewritten
     assert len(set(out.files) & before) == 2
     got = {r.id: r.v for r in tt.read(spark, table).collect()}
@@ -307,7 +307,7 @@ def test_merge_into_prunes_untouched_files(spark, table):
     assert len(got) == 300
     # pruned insert leg stays exact: a key outside every file range
     src2 = spark.createDataFrame([(1000, 1)], "id long, v long")
-    out2 = tt.merge_into(spark, table, src2, "id", ["v"], prune_col="id")
+    out2 = tt.merge_into(spark, table, src2, "id", ["v"])
     assert out2.rows == 301
     assert {r.v for r in tt.read(spark, table).collect() if r.id == 1000} == {1}
 
