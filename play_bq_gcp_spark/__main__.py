@@ -4,17 +4,16 @@ The reference is a scheduled Cloud Function — ``main(request)`` at
 /root/reference/main.py:296 runs scan → transform → incremental load
 once per cron tick (deploy.sh:8-12).  This is the same cycle as a CLI:
 
-    python -m play_bq_gcp_spark --warehouse /tmp/wh                # parquet
-    python -m play_bq_gcp_spark --warehouse /tmp/wh --txn          # transactional
+    python -m play_bq_gcp_spark --warehouse /tmp/wh
     python -m play_bq_gcp_spark --warehouse /tmp/wh --date 2024-06-01 \\
         --pages 8 --page-size 250
 
 The snapshot comes from the registered Spark DataSource (contiguous
 groups of up to five API pages per input partition, the per-task token
 bucket's burst, through the HTTP seam; offline fake transport in this
-container — swap the transport for a real deployment).  With
-``--txn`` every table write is an atomic versioned commit
-(storage/txn_table) instead of plain parquet.
+container — swap the transport for a real deployment).  Every table
+write is an atomic versioned commit (storage/txn_table), the
+transactional warehouse the reference gets from BigQuery.
 """
 
 from __future__ import annotations
@@ -31,11 +30,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument("--warehouse", required=True, help="warehouse directory")
     ap.add_argument(
-        "--txn",
-        action="store_true",
-        help="use manifest-committed transactional tables",
-    )
-    ap.add_argument(
         "--date",
         default=dt.date.today().isoformat(),
         help="run date (YYYY-MM-DD; default today)",
@@ -46,7 +40,6 @@ def main(argv: list[str] | None = None) -> int:
 
     from play_bq_gcp_spark.plans.pipeline import (
         TxnWarehouse,
-        Warehouse,
         bootstrap,
         run_daily,
     )
@@ -62,7 +55,7 @@ def main(argv: list[str] | None = None) -> int:
         .load()
     )
 
-    wh = (TxnWarehouse if args.txn else Warehouse)(args.warehouse)
+    wh = TxnWarehouse(args.warehouse)
     if not wh.exists("game"):
         bootstrap(wh, snapshot)
         print(json.dumps({"run": "bootstrap", "warehouse": args.warehouse}))

@@ -2,9 +2,9 @@
 
 Mirrors the reference's BigQuery table surface (SURVEY.md §2.1 S3-S10)
 on partition-friendly parquet: scans get Catalyst column pruning +
-predicate pushdown for free; writes expose the same dispositions the
-reference used (append = WRITE_APPEND, overwrite = WRITE_TRUNCATE /
-if_exists='replace').
+predicate pushdown for free; ``overwrite`` is the reference's
+WRITE_TRUNCATE / if_exists='replace' disposition.  The warehouse's
+appends and replaces are transactional commits (storage/txn_table).
 """
 
 from __future__ import annotations
@@ -255,12 +255,6 @@ def table_schema(spark: SparkSession, sf_dir: str, name: str):
     return read_table(spark, sf_dir, name).schema
 
 
-def append(df: DataFrame, path: str) -> None:
-    """Append sink (S5/S6: insert_rows_from_dataframe / WRITE_APPEND;
-    /root/reference/main.py:62,185,224-232)."""
-    df.write.mode("append").parquet(path)
-
-
 def overwrite(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
     """Truncate/replace sink (S7/S8: WRITE_TRUNCATE / if_exists='replace';
     /root/reference/main.py:268-271, load_data_first.py:118,147).
@@ -272,32 +266,6 @@ def overwrite(df: DataFrame, path: str, partition_by: list[str] | None = None) -
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
-
-
-def atomic_overwrite(df: DataFrame, path: str) -> None:
-    """Overwrite with stage-write + rename swap (SURVEY.md §7 hard
-    part 1).  ``mode("overwrite")`` deletes the target before writing —
-    a crash mid-write loses the table, and reading the target as the
-    write's own input deadlocks on missing files.  Staging solves
-    both: the new data is fully written NEXT TO the live table (which
-    stays readable as the plan's input — no checkpoint needed), then
-    two directory renames swap it in.  POSIX rename is atomic; the
-    worst crash window leaves the old table at a recovery path instead
-    of gone.  This rewrites the FULL table — for upserts touching a
-    few partitions use ``storage.txn_table.overwrite_partitions``,
-    which is atomic across partitions and on object stores (no atomic
-    rename there; the manifest create is the commit)."""
-    import shutil
-    import uuid
-
-    token = uuid.uuid4().hex[:8]
-    stage = f"{path}.__stage__{token}"
-    df.write.mode("overwrite").parquet(stage)
-    old = f"{path}.__old__{token}"
-    if os.path.isdir(path):
-        os.rename(path, old)
-    os.rename(stage, path)
-    shutil.rmtree(old, ignore_errors=True)
 
 
 def write_bucketed(

@@ -16,10 +16,12 @@ that is actually an aggregate over a 100 TB fact table (e.g. per-key
 order totals) is never force-broadcast into driver/executor OOM.
 The write side does not rewrite the whole table either:
 ``storage.txn_table.merge_into`` (the daily dimension merge of
-``plans.pipeline.TxnWarehouse``) rewrites only the base files whose
-key range overlaps the source's, and
-``storage.txn_table.overwrite_partitions`` replaces only the
-partitions present in its input, atomically across partitions.
+``plans.pipeline.TxnWarehouse`` and the streaming merge sink in
+``streaming.txn_sink``) rewrites only the base files whose key range
+overlaps the source's, and ``storage.txn_table.overwrite_partitions``
+replaces only the partitions present in its input, atomically across
+partitions.  These DataFrame-level merges are the plans those commits
+land.
 """
 
 from __future__ import annotations

@@ -24,9 +24,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from play_bq_gcp_spark.catalog import atomic_overwrite
 from play_bq_gcp_spark.functions.scalar import last_n_chars, surrogate_key
-from play_bq_gcp_spark.operators.merge import merge_upsert
 from play_bq_gcp_spark.operators.relational import (
     anti_join,
     is_nonempty,
@@ -34,6 +32,7 @@ from play_bq_gcp_spark.operators.relational import (
     snapshot_delta,
 )
 from play_bq_gcp_spark.session import cached
+from play_bq_gcp_spark.storage import txn_table as tt
 
 GAME_COLUMNS = [
     "id",
@@ -86,25 +85,18 @@ def time_play_deltas(
     ).withColumn("date", F.lit(run_date).cast("timestamp"))
 
 
-# the dimension's mutable columns — shared by the DataFrame-level
-# upsert and the transactional MERGE INTO path so the two warehouses
-# cannot drift
+# the dimension's mutable columns, updated by the daily MERGE INTO
 DIM_UPDATE_COLS = ["last_played_date_time", "play_count", "play_duration"]
 
 
-def upsert_games(stored: DataFrame, snapshot: DataFrame, deltas: DataFrame) -> DataFrame:
-    """Updated dimension: only ids with activity (semi-join pre-filter,
-    J2; main.py:243-246) get their mutable columns refreshed
-    (UPDATE…FROM semantics, J4; main.py:274-284)."""
-    changed = semi_join(snapshot, deltas.select("id"), "id")
-    return merge_upsert(stored, changed, "id", DIM_UPDATE_COLS)
-
-
-class Warehouse:
-    """Parquet-backed stand-in for the reference's BigQuery dataset.
-    ``append``/``replace`` are the write seam ``run_daily`` goes
-    through, so swapping in ``TxnWarehouse`` upgrades the whole daily
-    pipeline to transactional commits without touching its logic."""
+class TxnWarehouse:
+    """The stand-in for the reference's BigQuery dataset, on
+    manifest-committed transactional tables (storage/txn_table): every
+    append/replace is an atomic versioned commit, readers are
+    snapshot-isolated, and history stays time-travelable — the
+    crash-safety the reference outsourced to BigQuery (main.py:274-284),
+    now intrinsic to the pipeline.  ``append``/``replace``/``merge_dim``
+    are the write seam ``run_daily`` goes through."""
 
     def __init__(self, root: str):
         self.root = root
@@ -112,77 +104,26 @@ class Warehouse:
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
 
-    def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.parquet(self.path(table))
-
-    def exists(self, table: str) -> bool:
-        return os.path.isdir(self.path(table))
-
-    def append(self, df: DataFrame, table: str) -> None:
-        df.write.mode("append").parquet(self.path(table))
-
-    def replace(self, df: DataFrame, table: str) -> None:
-        """Stage-write + rename swap: the live table stays readable as
-        the plan's own input (no checkpoint needed), and a crash can
-        never leave the table deleted-but-unwritten."""
-        atomic_overwrite(df, self.path(table))
-
-    def merge_dim(
-        self,
-        spark: SparkSession,
-        table: str,
-        stored: DataFrame,
-        snapshot: DataFrame,
-        deltas: DataFrame,
-        fresh: DataFrame,
-    ) -> None:
-        """Dimension update seam: updated-changed-rows plus inserted
-        fresh rows, as ONE atomic write.  The parquet warehouse can
-        only express this as full-overwrite (compute the next state,
-        swap); ``TxnWarehouse`` overrides with a transactional MERGE
-        INTO that rewrites only the files whose ``id`` range overlaps
-        the day's [min, max] key range."""
-        updated = upsert_games(stored, snapshot, deltas)
-        self.replace(updated.unionByName(fresh), table)
-
-
-class TxnWarehouse(Warehouse):
-    """The same dataset on manifest-committed transactional tables
-    (storage/txn_table): every append/replace is an atomic versioned
-    commit, readers are snapshot-isolated, and history stays
-    time-travelable — the crash-safety the reference outsourced to
-    BigQuery (main.py:274-284), now intrinsic to the pipeline."""
-
     def _ensure(self, table: str) -> None:
-        from play_bq_gcp_spark.storage import txn_table as tt
-
         try:
             tt.current_version(self.path(table))
         except FileNotFoundError:
             tt.init_table(self.path(table))
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
-        from play_bq_gcp_spark.storage import txn_table as tt
-
         return tt.read(spark, self.path(table))
 
     def exists(self, table: str) -> bool:
-        from play_bq_gcp_spark.storage import txn_table as tt
-
         try:
             return tt.snapshot(self.path(table)).rows > 0
         except FileNotFoundError:
             return False
 
     def append(self, df: DataFrame, table: str) -> None:
-        from play_bq_gcp_spark.storage import txn_table as tt
-
         self._ensure(table)
         tt.append(df, self.path(table))
 
     def replace(self, df: DataFrame, table: str) -> None:
-        from play_bq_gcp_spark.storage import txn_table as tt
-
         self._ensure(table)
         # read-own-input is safe without staging: the new commit's data
         # files land BESIDE the old version's (immutable) files, and
@@ -193,7 +134,6 @@ class TxnWarehouse(Warehouse):
         self,
         spark: SparkSession,
         table: str,
-        stored: DataFrame,
         snapshot: DataFrame,
         deltas: DataFrame,
         fresh: DataFrame,
@@ -208,8 +148,6 @@ class TxnWarehouse(Warehouse):
         every file; the carry only pays when the changed ids are
         range-local.  CDF (``txn_table.changes``) exposes exactly the
         rewritten files to downstream incrementals."""
-        from play_bq_gcp_spark.storage import txn_table as tt
-
         changed = semi_join(snapshot, deltas.select("id"), "id")
         tt.merge_into(
             spark,
@@ -221,14 +159,14 @@ class TxnWarehouse(Warehouse):
         )
 
 
-def bootstrap(wh: Warehouse, snapshot: DataFrame) -> None:
+def bootstrap(wh: TxnWarehouse, snapshot: DataFrame) -> None:
     """First full load (load_data_first.py:118,147): replace-write the
     dimension; facts start empty."""
     wh.replace(transform_snapshot(snapshot), "game")
 
 
 def run_daily(
-    wh: Warehouse,
+    wh: TxnWarehouse,
     spark: SparkSession,
     raw_snapshot: DataFrame,
     run_date: str,
@@ -273,12 +211,12 @@ def run_daily(
                 wh.append(deltas, "time_play")
 
             # 2+4. next dimension state = stored with changed rows
-            # upserted, plus the new rows — ONE overwrite so appends and
-            # updates cannot clobber each other (the reference relies on
-            # BigQuery doing the append and the UPDATE as separate
-            # remote transactions).
+            # upserted, plus the new rows — ONE MERGE INTO commit so
+            # appends and updates cannot clobber each other (the
+            # reference relies on BigQuery doing the append and the
+            # UPDATE as separate remote transactions).
             if stats["new_games"] > 0 or stats["time_play"] > 0:
-                wh.merge_dim(spark, "game", stored, snapshot, deltas, fresh)
+                wh.merge_dim(spark, "game", snapshot, deltas, fresh)
                 # free re-derivation off the actions that already ran
                 # (the guard job populated both observations via the
                 # caches)

@@ -3,10 +3,9 @@
 The reference leans on BigQuery for transactional semantics: its upsert
 runs a remote ``UPDATE … FROM`` inside the warehouse's own transaction
 (/root/reference/main.py:274-284), and a mid-run crash can never expose
-readers to half-applied state.  ``catalog.atomic_overwrite`` covers the
-single-directory rename-swap case; THIS module closes the remaining gap
-with the manifest pattern every modern lakehouse format (Delta,
-Iceberg, Hudi — all public designs) is built on:
+readers to half-applied state.  THIS module gives the rebuild that
+guarantee with the manifest pattern every modern lakehouse format
+(Delta, Iceberg, Hudi — all public designs) is built on:
 
 * **Data files are immutable.** Every commit writes NEW parquet files
   under ``data/``; nothing is modified or deleted by writers.
@@ -20,6 +19,9 @@ Iceberg, Hudi — all public designs) is built on:
   ``CommitStrategy``).  Two concurrent writers racing to the same
   version: exactly one wins; the loser re-reads the new state and
   retries (append — no logical conflict) or aborts (overwrite).
+  Every writer publishes through the one helper ``_commit`` (files
+  carried by reference + files added), and every rebasing writer
+  retries through ``_with_retries``.
 * **Old versions stay readable** (time travel / snapshot isolation):
   a reader holding version N is unaffected by later commits, because
   N's files are immutable and still present.
@@ -355,6 +357,53 @@ def _publish(path: str, version: int, snap: Snapshot) -> None:
         raise CommitConflict(f"version {version} already committed at {path}")
 
 
+def _commit(
+    path: str,
+    base: Snapshot,
+    carried,
+    new_files,
+    new_stats: dict,
+    action: str,
+    meta: dict | None,
+    schema: dict | None,
+    rows: int | None = None,
+) -> Snapshot:
+    """Publish version ``base.version + 1``: the ``carried`` base files
+    (by reference, with their recorded stats) followed by the
+    ``new_files``.  The row count is summed from the stats unless the
+    caller passes ``rows`` (files landed without stats — pre-landed
+    sink files, legacy tables — carry none).  Raises ``CommitConflict``
+    when that version already exists."""
+    stats = {f: base.file_stats[f] for f in carried if f in base.file_stats}
+    stats.update(new_stats)
+    snap = Snapshot(
+        base.version + 1,
+        tuple(carried) + tuple(new_files),
+        sum(s["rows"] for s in stats.values()) if rows is None else rows,
+        action,
+        time.time(),
+        dict(meta or {}),
+        stats,
+        schema,
+    )
+    _publish(path, snap.version, snap)
+    return snap
+
+
+def _with_retries(what: str, path: str, max_retries: int, attempt) -> Snapshot:
+    """Run ``attempt(latest snapshot)`` until it publishes: on
+    ``CommitConflict`` re-read the winner's snapshot and run it again
+    (the rebase), at most ``max_retries`` times.  For writers whose
+    commit stays sound on top of a racing one (append, restore,
+    partition replace); the rest commit once and raise."""
+    for _ in range(max_retries):
+        try:
+            return attempt(snapshot(path))
+        except CommitConflict:
+            continue
+    raise CommitConflict(f"{what} lost {max_retries} races at {path}")
+
+
 def _enc_stat(v):
     """Canonical JSON encoding for a stats value — ALSO applied to
     query-side values before comparing against recorded stats, so
@@ -541,8 +590,15 @@ def _write_data_files(
         for f in os.listdir(out)
         if f.endswith(".parquet")
     )
-    # footer reads are tiny but driver-side; a thousand-file commit
-    # should not serialize a thousand metadata round-trips
+    return _with_footer_stats(path, files)
+
+
+def _with_footer_stats(
+    path: str, files: list[str]
+) -> tuple[list[str], int, dict[str, dict]]:
+    """(files, row count, per-file footer stats) for freshly landed
+    files.  Footer reads are tiny but driver-side; a thousand-file
+    commit should not serialize a thousand metadata round-trips."""
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=min(16, max(1, len(files)))) as ex:
@@ -550,8 +606,7 @@ def _write_data_files(
             ex.map(lambda f: _file_stats(os.path.join(path, f)), files)
         )
     stats = dict(zip(files, stat_list))
-    rows = sum(s["rows"] for s in stats.values())
-    return files, rows, stats
+    return files, sum(s["rows"] for s in stats.values()), stats
 
 
 class SchemaEvolutionError(ValueError):
@@ -713,27 +768,15 @@ def commit_append(
     declared-schema resolution runs INSIDE the retry loop: a rebase
     re-merges against the race winner's declared schema, so two
     writers evolving concurrently compose instead of clobbering."""
-    stats = stats or {}
-    for _ in range(max_retries):
-        base = snapshot(path)
-        snap = Snapshot(
-            base.version + 1,
-            base.files + tuple(files),
-            base.rows + rows,
-            "append",
-            time.time(),
-            dict(meta or {}),
-            {**base.file_stats, **stats},
-            _resolve_declared(
-                base.schema, schema, evolve, bool(base.files)
-            ),
+
+    def attempt(base: Snapshot) -> Snapshot:
+        return _commit(
+            path, base, base.files, files, stats or {}, "append", meta,
+            _resolve_declared(base.schema, schema, evolve, bool(base.files)),
+            rows=base.rows + rows,
         )
-        try:
-            _publish(path, base.version + 1, snap)
-            return snap
-        except CommitConflict:
-            continue  # someone else committed; rebase on their version
-    raise CommitConflict(f"append lost {max_retries} races at {path}")
+
+    return _with_retries("append", path, max_retries, attempt)
 
 
 def overwrite(
@@ -751,19 +794,14 @@ def overwrite(
     ``CommitConflict`` if anyone committed in between — the caller
     decides whether re-applying is sound.  Old versions remain
     readable; no files are deleted."""
-    base_version = (
-        current_version(path) if expected_version is None else expected_version
-    )
-    files, rows, stats = _write_data_files(
+    base = snapshot(path, expected_version)
+    files, _, stats = _write_data_files(
         _cluster(df, cluster_by, target_files), path
     )
-    snap = Snapshot(
-        base_version + 1, tuple(files), rows, "overwrite", time.time(),
-        dict(meta or {}), stats,
+    return _commit(
+        path, base, (), files, stats, "overwrite", meta,
         _nullable_json_schema(df),  # replace semantics: schema resets too
     )
-    _publish(path, base_version + 1, snap)
-    return snap
 
 
 def read(
@@ -955,10 +993,7 @@ def delete_where(
     (raises rather than clobbering a racing commit)."""
     from pyspark.sql import functions as F
 
-    base_version = (
-        current_version(path) if expected_version is None else expected_version
-    )
-    snap = snapshot(path, base_version)
+    snap = snapshot(path, expected_version)
     targets = (
         _overlapping(snap, prune_col, lo, hi)
         if prune_col is not None
@@ -972,23 +1007,11 @@ def delete_where(
             ~F.expr(condition)
         )
         new_files, _, new_stats = _write_data_files(kept_rows, path)
-    untouched_stats = {f: snap.file_stats[f] for f in untouched
-                       if f in snap.file_stats}
-    rows = sum(
-        s["rows"] for s in {**untouched_stats, **new_stats}.values()
-    )
-    out = Snapshot(
-        base_version + 1,
-        tuple(untouched) + tuple(new_files),
-        rows,
-        "delete",
-        time.time(),
+    return _commit(
+        path, snap, untouched, new_files, new_stats, "delete",
         {"condition": condition},
-        {**untouched_stats, **new_stats},
         snap.schema,  # row-level ops never change the declared schema
     )
-    _publish(path, base_version + 1, out)
-    return out
 
 
 def _write_partition_aligned(
@@ -1060,15 +1083,7 @@ def _write_partition_aligned(
         # leftovers are committer artifacts (.crc checksums, _SUCCESS);
         # the moved files no longer match their crc names anyway
         fs.rmtree(subdir)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(16, max(1, len(files)))) as ex:
-        stat_list = list(
-            ex.map(lambda f: _file_stats(os.path.join(path, f)), files)
-        )
-    stats = dict(zip(files, stat_list))
-    rows = sum(s["rows"] for s in stats.values())
-    return files, rows, stats
+    return _with_footer_stats(path, files)
 
 
 def _classify_partition_files(
@@ -1148,46 +1163,20 @@ def commit_overwrite_partitions(
     ``overwrite_partitions``, which filters straddlers with Spark
     before retrying."""
     replaced = set(replaced)
-    new_stats = dict(new_stats)
-    for _ in range(max_retries):
-        base = snapshot(path)
-        keep, _drop, straddle = _classify_partition_files(
-            base, part_col, replaced
-        )
+
+    def attempt(base: Snapshot) -> Snapshot:
+        straddle = _classify_partition_files(base, part_col, replaced)[2]
         if straddle:
             raise ValueError(
                 f"{len(straddle)} base file(s) straddle replaced "
                 f"partitions of {part_col} (e.g. {straddle[0]}); use "
                 "overwrite_partitions() to rewrite them"
             )
-        kept_stats = {
-            f: base.file_stats[f] for f in keep if f in base.file_stats
-        }
-        rows = sum(
-            s["rows"] for s in {**kept_stats, **new_stats}.values()
+        return _commit_partition_replace(
+            path, base, part_col, replaced, new_files, new_stats, meta
         )
-        snap = Snapshot(
-            base.version + 1,
-            tuple(keep) + tuple(new_files),
-            rows,
-            "overwrite_partitions",
-            time.time(),
-            {
-                "partition_col": part_col,
-                "replaced": sorted(str(v) for v in replaced),
-                **(meta or {}),
-            },
-            {**kept_stats, **new_stats},
-            base.schema,
-        )
-        try:
-            _publish(path, base.version + 1, snap)
-            return snap
-        except CommitConflict:
-            continue  # rebase: re-classify against the winner's files
-    raise CommitConflict(
-        f"overwrite_partitions lost {max_retries} races at {path}"
-    )
+
+    return _with_retries("overwrite_partitions", path, max_retries, attempt)
 
 
 def overwrite_partitions(
@@ -1203,8 +1192,8 @@ def overwrite_partitions(
     partitions PRESENT in ``df`` are replaced by ``df``'s rows; every
     other partition's files are carried into the new version untouched
     and byte-identical.  The 100 TB merge-path answer promised at
-    operators/merge.py / catalog.atomic_overwrite: an upsert touching
-    k partitions rewrites k partitions, never the table.
+    operators/merge.py: an upsert touching k partitions rewrites k
+    partitions, never the table.
 
     Steps: (1) one tiny distinct-aggregate collects the replaced
     partition values (bounded by the number of partitions touched — a
@@ -1244,11 +1233,9 @@ def overwrite_partitions(
         bool(snapshot(path).files),
     )
     new_files, _, new_stats = _write_partition_aligned(df, path, part_col)
-    for _ in range(max_retries):
-        base = snapshot(path)
-        _keep, _drop, straddle = _classify_partition_files(
-            base, part_col, set(values)
-        )
+
+    def attempt(base: Snapshot) -> Snapshot:
+        straddle = _classify_partition_files(base, part_col, set(values))[2]
         extra_files: list[str] = []
         extra_stats: dict[str, dict] = {}
         if straddle:
@@ -1265,25 +1252,20 @@ def overwrite_partitions(
             # live rows now exist re-landed aligned, so the commit
             # below drops the straddlers (they classify as straddle
             # against the SAME pinned base and are excluded from keep).
-        try:
-            return _commit_partition_replace(
-                path,
-                base,
-                part_col,
-                set(values),
-                straddle,
-                list(new_files) + extra_files,
-                {**new_stats, **extra_stats},
-                meta,
-                declared=_resolve_declared(
-                    base.schema, incoming, evolve, bool(base.files)
-                ),
-            )
-        except CommitConflict:
-            continue
-    raise CommitConflict(
-        f"overwrite_partitions lost {max_retries} races at {path}"
-    )
+        return _commit_partition_replace(
+            path,
+            base,
+            part_col,
+            set(values),
+            list(new_files) + extra_files,
+            {**new_stats, **extra_stats},
+            meta,
+            declared=_resolve_declared(
+                base.schema, incoming, evolve, bool(base.files)
+            ),
+        )
+
+    return _with_retries("overwrite_partitions", path, max_retries, attempt)
 
 
 def _commit_partition_replace(
@@ -1291,43 +1273,32 @@ def _commit_partition_replace(
     base: Snapshot,
     part_col: str,
     replaced: set,
-    rewritten: list,
     new_files,
     new_stats: dict,
     meta: dict | None,
     declared: dict | None = None,
 ) -> Snapshot:
-    """Single manifest-create attempt for ``overwrite_partitions``.
-    Classification, the straddler rewrite, and this commit are all
+    """Single manifest-create attempt for both partition replacers.
+    Classification, any straddler rewrite, and this commit are all
     pinned to ONE base version; ``_publish``'s compare-and-swap on
     ``base.version + 1`` rejects the attempt if ANY commit interleaved,
     so a stale rewrite can never resurrect rows a racing writer
-    replaced — the caller's loop re-reads, re-classifies, and re-lands
+    replaced — the caller's retry re-reads, re-classifies, and re-lands
     from scratch (orphaned data files are immutable and vacuumable).
+    Only the files that cannot hold a replaced value are carried.
     ``declared`` is the caller-resolved declared schema for the new
     version (None = carry the base's forward — the schema-less
     pre-landed-files path, same contract as ``commit_append``)."""
-    keep, _drop, _straddle = _classify_partition_files(
-        base, part_col, replaced
-    )
-    kept_stats = {f: base.file_stats[f] for f in keep if f in base.file_stats}
-    rows = sum(s["rows"] for s in {**kept_stats, **new_stats}.values())
-    snap = Snapshot(
-        base.version + 1,
-        tuple(keep) + tuple(new_files),
-        rows,
-        "overwrite_partitions",
-        time.time(),
+    keep = _classify_partition_files(base, part_col, replaced)[0]
+    return _commit(
+        path, base, keep, new_files, new_stats, "overwrite_partitions",
         {
             "partition_col": part_col,
             "replaced": sorted(str(v) for v in replaced),
             **(meta or {}),
         },
-        {**kept_stats, **new_stats},
         declared if declared is not None else base.schema,
     )
-    _publish(path, base.version + 1, snap)
-    return snap
 
 
 def merge_into(
@@ -1339,6 +1310,7 @@ def merge_into(
     insert: bool = True,
     expected_version: int | None = None,
     evolve: bool = False,
+    meta: dict | None = None,
 ) -> Snapshot:
     """Transactional MERGE INTO (the Delta/Iceberg copy-on-write MERGE
     shape): update ``update_cols`` of rows whose ``key`` matches a
@@ -1354,9 +1326,12 @@ def merge_into(
     detection over the touched files alone is exact.  One interval
     carries a file only when the source keys are range-local (a day's
     keys in a key-ordered table); scattered keys span every file and
-    rewrite them all.  A composite key is not pruned.  Overwrite-style
-    conflict semantics (raises on a racing commit rather than
-    clobbering it).
+    rewrite them all.  A source with no non-NULL key (empty, or NULL
+    keys only) matches no base row, so every base file is carried; it
+    lands only its rows, if any, and only with ``insert``.  A
+    composite key is not pruned.  Overwrite-style conflict semantics
+    (raises on a racing commit rather than clobbering it); ``meta``
+    rides the manifest (e.g. a streaming sink's batch id).
 
     Schema: the OUTPUT schema is validated against the declared one
     BEFORE any file lands — a source whose update column is wider
@@ -1367,17 +1342,22 @@ def merge_into(
     widened declaration."""
     from pyspark.sql import functions as F
 
-    base_version = (
-        current_version(path) if expected_version is None else expected_version
-    )
-    snap = snapshot(path, base_version)
+    snap = snapshot(path, expected_version)
     keys = [key] if isinstance(key, str) else list(key)
     targets = list(snap.files)
+    has_rows = True
     if len(keys) == 1 and targets:
         bounds = source.agg(
-            F.min(keys[0]).alias("lo"), F.max(keys[0]).alias("hi")
+            F.min(keys[0]).alias("lo"), F.max(keys[0]).alias("hi"),
+            F.count(F.lit(1)).alias("n"),
         ).first()
-        targets = _overlapping(snap, keys[0], bounds["lo"], bounds["hi"])
+        has_rows = bounds["n"] > 0
+        # no non-NULL source key (empty source, or NULL keys only): no
+        # base row can match, so no base file is a target
+        targets = (
+            [] if bounds["lo"] is None
+            else _overlapping(snap, keys[0], bounds["lo"], bounds["hi"])
+        )
     untouched = [f for f in snap.files if f not in set(targets)]
 
     from play_bq_gcp_spark.operators.merge import (
@@ -1393,37 +1373,24 @@ def merge_into(
             if insert
             else merge_upsert(touched, source, key, update_cols)
         )
-    elif insert:
+    elif insert and has_rows:
         # no base file can match any source key: pure insert commit
         landed = source
-    # validate the OUTPUT schema before any data lands (fail fast,
-    # zero orphan files on refusal)
     declared = snap.schema
+    new_files: list[str] = []
+    new_stats: dict[str, dict] = {}
     if landed is not None:
+        # validate the OUTPUT schema before any data lands (fail fast,
+        # zero orphan files on refusal)
         declared = _resolve_declared(
             snap.schema, _nullable_json_schema(landed), evolve,
             bool(snap.files),
         )
-    new_files: list[str] = []
-    new_stats: dict[str, dict] = {}
-    if landed is not None:
         new_files, _, new_stats = _write_data_files(landed, path)
-    untouched_stats = {
-        f: snap.file_stats[f] for f in untouched if f in snap.file_stats
-    }
-    rows = sum(s["rows"] for s in {**untouched_stats, **new_stats}.values())
-    out = Snapshot(
-        base_version + 1,
-        tuple(untouched) + tuple(new_files),
-        rows,
-        "merge",
-        time.time(),
-        {"keys": keys},
-        {**untouched_stats, **new_stats},
-        declared,
+    return _commit(
+        path, snap, untouched, new_files, new_stats, "merge",
+        {"keys": keys, **(meta or {})}, declared,
     )
-    _publish(path, base_version + 1, out)
-    return out
 
 
 def changes(
@@ -1489,10 +1456,7 @@ def compact(
     ``target_files >= number of partitions`` — range clustering puts
     each partition's rows in contiguous files and most land
     single-valued again."""
-    base_version = (
-        current_version(path) if expected_version is None else expected_version
-    )
-    snap0 = snapshot(path, base_version)  # one manifest read for both
+    snap0 = snapshot(path, expected_version)
     if snap0.files:
         df = _read_files(spark, path, snap0.files, snap0)
     elif snap0.schema is not None:
@@ -1501,20 +1465,15 @@ def compact(
         df = spark.createDataFrame([], StructType.fromJson(snap0.schema))
     else:
         raise ValueError(
-            f"version {base_version} of {path} is empty — nothing to compact"
+            f"version {snap0.version} of {path} is empty — nothing to compact"
         )
     df = (
         _cluster(df, cluster_by, target_files)
         if cluster_by
         else df.coalesce(target_files)
     )
-    files, rows, stats = _write_data_files(df, path)
-    out = Snapshot(
-        base_version + 1, tuple(files), rows, "compact", time.time(), {},
-        stats, snap0.schema,
-    )
-    _publish(path, base_version + 1, out)
-    return out
+    files, _, stats = _write_data_files(df, path)
+    return _commit(path, snap0, (), files, stats, "compact", {}, snap0.schema)
 
 
 def restore(path: str, version: int, max_retries: int = 5) -> Snapshot:
@@ -1529,24 +1488,15 @@ def restore(path: str, version: int, max_retries: int = 5) -> Snapshot:
     lands on; the restored CONTENT is pinned to ``version``
     regardless."""
     src = snapshot(path, version)  # raises if vacuumed away
-    for _ in range(max_retries):
-        base = snapshot(path)
-        snap = Snapshot(
-            base.version + 1,
-            src.files,
-            src.rows,
-            "restore",
-            time.time(),
-            {"restored_from": version},
-            src.file_stats,
-            src.schema,
+
+    def attempt(base: Snapshot) -> Snapshot:
+        # version N's files re-enter as added files, with N's own stats
+        return _commit(
+            path, base, (), src.files, src.file_stats, "restore",
+            {"restored_from": version}, src.schema, rows=src.rows,
         )
-        try:
-            _publish(path, base.version + 1, snap)
-            return snap
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"restore lost {max_retries} races at {path}")
+
+    return _with_retries("restore", path, max_retries, attempt)
 
 
 def versions(path: str) -> list[int]:

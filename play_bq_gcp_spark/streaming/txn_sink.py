@@ -62,29 +62,22 @@ def exactly_once_merge(
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch function: transactional MERGE (update matched keys,
     insert new ones) per micro-batch — the reference's daily upsert as
-    a streaming sink.  The merged result commits as one overwrite
-    manifest tagged with the batch id; foreachBatch invocations are
-    serialized per query, so ``expected_version`` is a tripwire against
-    out-of-band writers, not a retry loop."""
-    from play_bq_gcp_spark.operators.merge import merge_insert_and_upsert
+    a streaming sink.  Each batch is one ``txn_table.merge_into``
+    commit tagged with the batch id, so only the base files whose key
+    range the batch touches are rewritten.  foreachBatch invocations
+    are serialized per query, so ``expected_version`` is a tripwire
+    against out-of-band writers, not a retry loop."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= last_committed_batch_id(path):
             return
-        spark = batch_df.sparkSession
         base_version = tt.current_version(path)
-        base_snap = tt.snapshot(path, base_version)
-        if base_snap.files:
-            target = tt.read(spark, path, version=base_version)
-            merged = merge_insert_and_upsert(
-                target, batch_df.select(*target.columns),
-                list(key_cols), list(update_cols),
-            )
-        else:  # first batch into an empty table
-            merged = batch_df.dropDuplicates(list(key_cols))
-        tt.overwrite(
-            merged, path,
-            expected_version=base_version,
+        if not tt.snapshot(path, base_version).files:
+            # first batch into an empty table: nothing to match against
+            batch_df = batch_df.dropDuplicates(list(key_cols))
+        tt.merge_into(
+            batch_df.sparkSession, path, batch_df, list(key_cols),
+            list(update_cols), insert=True, expected_version=base_version,
             meta={BATCH_KEY: int(batch_id)},
         )
 

@@ -44,7 +44,7 @@ D2 = [
 
 @pytest.fixture()
 def wh(tmp_path, spark):
-    wh = pipeline.Warehouse(str(tmp_path / "warehouse"))
+    wh = pipeline.TxnWarehouse(str(tmp_path / "warehouse"))
     d1 = spark.createDataFrame(D1, GAME_SNAPSHOT_SCHEMA)
     pipeline.bootstrap(wh, d1)
     return wh
@@ -115,29 +115,17 @@ def test_trophy_append(spark, wh):
 
 
 def test_run_daily_on_txn_warehouse_matches_parquet_and_time_travels(
-    spark, tmp_path
+    spark, wh
 ):
-    """The SAME pipeline logic on TxnWarehouse: identical observable
-    results, plus what BigQuery gave the reference for free — every
-    write is a versioned atomic commit, so yesterday's dimension is
-    still readable after today's run.  The dimension update runs as a
-    true transactional MERGE INTO (r4 ask: the storage layer's
-    MERGE/CDF path proven under the reference's daily workload, not
-    just unit fuzz), and the change feed between the pre- and
-    post-merge versions must replay to exactly the post-merge state."""
+    """What BigQuery gave the reference for free, beyond the golden
+    results above: every write is a versioned atomic commit, so
+    yesterday's dimension is still readable after today's run.  The
+    dimension update runs as a true transactional MERGE INTO, and the
+    change feed between the pre- and post-merge versions must replay
+    to exactly the post-merge state."""
     from play_bq_gcp_spark.storage import txn_table as tt
 
-    wh = pipeline.TxnWarehouse(str(tmp_path / "txn_wh"))
-    pipeline.bootstrap(wh, _snapshot(spark, D1))
-    stats = pipeline.run_daily(wh, spark, _snapshot(spark, D2), "2024-01-02")
-    assert stats["new_games"] == 1 and stats["time_play"] == 1
-
-    game = {r.title_id: r for r in wh.read(spark, "game").collect()}
-    assert set(game) == {"CUSA000000100", "CUSA000000200",
-                         "CUSA000000300", "CUSA000000400"}
-    assert game["CUSA000000100"].play_count == 12
-    tp = wh.read(spark, "time_play").collect()
-    assert len(tp) == 1 and tp[0].play_count_diff == 2
+    pipeline.run_daily(wh, spark, _snapshot(spark, D2), "2024-01-02")
 
     # time travel: the pre-run dimension (bootstrap commit) is intact
     game_path = wh.path("game")
@@ -163,12 +151,6 @@ def test_run_daily_on_txn_warehouse_matches_parquet_and_time_travels(
         + [key(r) for r in feed if r._change_type == "insert"]
     )
     assert replayed == post_keys and pre_keys != post_keys
-
-    # idempotent rerun: same day again → no new versions of the facts
-    v_before = tt.current_version(wh.path("time_play"))
-    stats2 = pipeline.run_daily(wh, spark, _snapshot(spark, D2), "2024-01-02")
-    assert stats2["new_games"] == 0 and stats2["time_play"] == 0
-    assert tt.current_version(wh.path("time_play")) == v_before
 
 
 def test_run_daily_releases_caches_when_a_write_raises(spark, tmp_path):
@@ -198,14 +180,13 @@ def test_cli_bootstrap_then_incremental_daily(spark, tmp_path, capsys):
     from play_bq_gcp_spark.__main__ import main
 
     wh_dir = str(tmp_path / "cli_wh")
-    assert main(["--warehouse", wh_dir, "--txn", "--pages", "2"]) == 0
+    assert main(["--warehouse", wh_dir, "--pages", "2"]) == 0
     out1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out1["run"] == "bootstrap"
 
     assert (
         main(
-            ["--warehouse", wh_dir, "--txn", "--pages", "3",
-             "--date", "2024-06-02"]
+            ["--warehouse", wh_dir, "--pages", "3", "--date", "2024-06-02"]
         )
         == 0
     )

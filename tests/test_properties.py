@@ -513,15 +513,32 @@ _gl_snapshot = st.lists(
 )
 
 
+def _model_day(d1, d2):
+    """The reference's day on the ``game`` dimension, in plain Python
+    (main.py:176-185, :268-287): ids new in ``d2`` are appended; ids
+    whose ``play_count`` rose get ``last_played_date_time``,
+    ``play_count`` and ``play_duration`` from ``d2``; every other
+    stored row stays as it is."""
+    import datetime as dt
+
+    stored = {
+        tid: (count, count * 360.0, dt.datetime(2024, 1, 1))
+        for tid, count in d1
+    }
+    for tid, count in d2:
+        if tid not in stored or count > stored[tid][0]:
+            stored[tid] = (count, count * 360.0, dt.datetime(2024, 1, 2))
+    return sorted((f"CUSA{tid:07d}00", *v) for tid, v in stored.items())
+
+
 @given(d1=_gl_snapshot, d2=_gl_snapshot)
 @settings(max_examples=5, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_merge_dim_equivalent_across_warehouses(spark, tmp_path_factory, d1, d2):
-    """The dimension-update seam's two implementations — the parquet
-    warehouse's compute-next-state + atomic overwrite and the
-    transactional warehouse's key-pruned MERGE INTO — must produce the
-    IDENTICAL game table for ANY pair of day snapshots (new titles,
-    increased counts, decreased counts, disappeared titles)."""
+    """The warehouse's dimension update — a key-pruned MERGE INTO
+    commit — must leave the game table the reference's day leaves
+    (``_model_day``) for ANY pair of day snapshots: new titles,
+    increased counts, decreased counts, disappeared titles."""
     import datetime as dt
 
     from play_bq_gcp_spark.plans import pipeline
@@ -543,20 +560,14 @@ def test_merge_dim_equivalent_across_warehouses(spark, tmp_path_factory, d1, d2)
         spark.createDataFrame(rows(1, d1), GAME_SNAPSHOT_SCHEMA),
         spark.createDataFrame(rows(2, d2), GAME_SNAPSHOT_SCHEMA),
     ]
-    results = []
-    for cls, tag in ((pipeline.Warehouse, "pq"), (pipeline.TxnWarehouse, "tx")):
-        root = str(tmp_path_factory.mktemp(f"wheq_{tag}"))
-        wh = cls(root)
-        pipeline.bootstrap(wh, snaps[0])
-        pipeline.run_daily(wh, spark, snaps[1], "2024-01-02")
-        results.append(
-            sorted(
-                (r.title_id, r.play_count, r.play_duration,
-                 r.last_played_date_time)
-                for r in wh.read(spark, "game").collect()
-            )
-        )
-    assert results[0] == results[1]
+    wh = pipeline.TxnWarehouse(str(tmp_path_factory.mktemp("wheq")))
+    pipeline.bootstrap(wh, snaps[0])
+    pipeline.run_daily(wh, spark, snaps[1], "2024-01-02")
+    got = sorted(
+        (r.title_id, r.play_count, r.play_duration, r.last_played_date_time)
+        for r in wh.read(spark, "game").collect()
+    )
+    assert got == _model_day(d1, d2)
 
 
 # --- dyadic EWMA vs pure-Python reference ----------------------------------

@@ -75,23 +75,6 @@ def test_strip_literal_and_trim(spark):
     assert got == "CUSA12300"
 
 
-def test_atomic_overwrite_self_read(spark, tmp_path):
-    """The overwrite's input can be the live table itself: staging
-    writes next to it, so no checkpoint is needed and the old data is
-    never deleted before the new data exists."""
-    import os
-
-    p = str(tmp_path / "t")
-    spark.range(10).write.parquet(p)
-    live = spark.read.parquet(p)
-    doubled = live.selectExpr("id * 2 AS id")
-    catalog.atomic_overwrite(doubled, p)
-    got = sorted(r.id for r in spark.read.parquet(p).collect())
-    assert got == [i * 2 for i in range(10)]
-    # no stage/old leftovers
-    assert os.listdir(tmp_path) == ["t"]
-
-
 def test_udtf_chunking(spark):
     from play_bq_gcp_spark.functions.udtf_fns import chunk_documents
 

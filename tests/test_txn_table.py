@@ -1023,3 +1023,62 @@ def test_vacuum_survives_widening_retention_after_tight_vacuum(spark, table):
     assert not [f for f in removed if f.endswith(".parquet")]
     assert tt.read(spark, table).count() == 10
     assert tt.read_at(spark, table, version=2).count() == 8
+
+
+def test_merge_into_empty_source_carries_every_file(spark, table):
+    """A source with no non-NULL key matches no base row: every base
+    file is carried byte-identical and nothing new lands, whether the
+    source is empty or holds only NULL keys (update-only)."""
+    import hashlib
+
+    for lo in (0, 100, 200):  # three single-file commits
+        tt.append(_df(spark, lo, lo + 100).coalesce(1), table)
+    before = tt.snapshot(table)
+    assert len(before.files) == 3
+
+    def sha(f):
+        with open(os.path.join(table, f), "rb") as fh:
+            return hashlib.sha256(fh.read()).hexdigest()
+
+    digests = {f: sha(f) for f in before.files}
+    empty = spark.createDataFrame([], "id long, v long")
+    out = tt.merge_into(spark, table, empty, "id", ["v"])
+    assert out.files == before.files and out.rows == 300
+    assert {f: sha(f) for f in out.files} == digests
+    null_keys = spark.createDataFrame([(None, 1)], "id long, v long")
+    out = tt.merge_into(spark, table, null_keys, "id", ["v"], insert=False)
+    assert out.files == before.files
+    got = sorted((r.id, r.v) for r in tt.read(spark, table).collect())
+    assert got == [(i, i * 2) for i in range(300)]
+
+
+def test_every_commit_goes_through_the_commit_helper():
+    """Spark-free guard: ``_publish`` is called, and ``Snapshot`` built,
+    only by the commit helper, ``init_table`` (version 0) and
+    ``snapshot()`` (reading a manifest back) — a writer that hand-builds
+    its manifest fails here."""
+    import ast
+    import pathlib
+
+    allowed = {"_commit", "init_table", "snapshot"}
+    src = pathlib.Path(tt.__file__)
+    tree = ast.parse(src.read_text(), filename=str(src))
+    fns = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+
+    def enclosing(lineno):  # innermost function holding the line
+        inside = [f for f in fns if f.lineno <= lineno <= f.end_lineno]
+        return max(inside, key=lambda f: f.lineno).name if inside else "<module>"
+
+    seen, offenders = set(), []
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id in ("_publish", "Snapshot")
+        ):
+            fn = enclosing(node.lineno)
+            seen.add(fn)
+            if fn not in allowed:
+                offenders.append(f"{fn}:{node.lineno} {node.func.id}(")
+    assert not offenders, offenders
+    assert seen == allowed, allowed - seen

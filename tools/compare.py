@@ -108,7 +108,12 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from play_bq_gcp_spark.session import get_spark
 
-    spark = get_spark(app_name="compare")
+    # no console progress bar: it shares the terminal line with the
+    # ok/FAIL lines, which must each start a line of their own
+    spark = get_spark(
+        app_name="compare",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
 
