@@ -18,10 +18,8 @@ The write side does not rewrite the whole table either:
 ``storage.txn_table.merge_into`` (the daily dimension merge of
 ``plans.pipeline.TxnWarehouse`` and the streaming merge sink in
 ``streaming.txn_sink``) rewrites only the base files whose key range
-overlaps the source's, and ``storage.txn_table.overwrite_partitions``
-replaces only the partitions present in its input, atomically across
-partitions.  These DataFrame-level merges are the plans those commits
-land.
+overlaps the source's and commits them as one atomic manifest.  These
+DataFrame-level merges are the plans that commit lands.
 """
 
 from __future__ import annotations

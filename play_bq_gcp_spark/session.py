@@ -61,6 +61,10 @@ def get_spark(
             ),
         )
         .config("spark.ui.enabled", "false")
+        # no console progress bar: it shares the terminal line with
+        # the tools' output lines, which must each start a line of
+        # their own
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     if extra_conf:

@@ -2,10 +2,14 @@
 
 The reference leans on BigQuery for transactional semantics: its upsert
 runs a remote ``UPDATE … FROM`` inside the warehouse's own transaction
-(/root/reference/main.py:274-284), and a mid-run crash can never expose
-readers to half-applied state.  THIS module gives the rebuild that
-guarantee with the manifest pattern every modern lakehouse format
-(Delta, Iceberg, Hudi — all public designs) is built on:
+(the reference's ``main.py:274-284``), and a mid-run crash can never
+expose readers to half-applied state.  THIS module gives the rebuild
+that guarantee with the manifest pattern every modern lakehouse format
+(Delta, Iceberg, Hudi — all public designs) is built on.  The
+reference writes three ways, and so does this module: ``append``,
+``overwrite`` (full replace) and ``merge_into`` (the upsert);
+``delete_where``, ``compact``, ``restore`` and ``vacuum`` are table
+maintenance.
 
 * **Data files are immutable.** Every commit writes NEW parquet files
   under ``data/``; nothing is modified or deleted by writers.
@@ -46,8 +50,6 @@ import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-
-from play_bq_gcp_spark.session import scoped_conf
 
 
 class CommitConflict(Exception):
@@ -230,94 +232,8 @@ class ConditionalPutCommit(CommitStrategy):
         return True
 
 
-class TableFilesystem:
-    """Seam for the NON-commit filesystem operations the write path
-    needs — list / move / remove inside the table's own data dir
-    (the partition-aligned flatten in ``_write_partition_aligned``).
-    Kept separate from ``CommitStrategy`` because the primitives
-    differ: commits need one atomic create-if-absent, the flatten only
-    needs moves of files no reader can see yet (they enter a manifest
-    only after the flatten), so per-op atomicity is NOT required —
-    which is what makes an object store's copy+delete an admissible
-    implementation."""
-
-    def listdir(self, path: str) -> list[str]:
-        raise NotImplementedError
-
-    def is_dir(self, path: str) -> bool:
-        raise NotImplementedError
-
-    def move(self, src: str, dst: str) -> None:
-        raise NotImplementedError
-
-    def rmtree(self, path: str) -> None:
-        raise NotImplementedError
-
-
-class PosixFilesystem(TableFilesystem):
-    """Local default: same-filesystem rename (cheap, atomic — stronger
-    than the seam demands)."""
-
-    def listdir(self, path: str) -> list[str]:
-        return os.listdir(path)
-
-    def is_dir(self, path: str) -> bool:
-        return os.path.isdir(path)
-
-    def move(self, src: str, dst: str) -> None:
-        os.rename(src, dst)
-
-    def rmtree(self, path: str) -> None:
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-
-
-class CopyDeleteFilesystem(TableFilesystem):
-    """Object-store-shaped filesystem: no rename primitive — ``move``
-    is server-side COPY then DELETE (S3/GCS CopyObject), ``listdir``
-    models a prefix LIST.  Pairs with ``ConditionalPutCommit`` the way
-    a real object-store deployment would: pre-manifest files are
-    invisible to readers, so the non-atomic move is safe, and a crash
-    between copy and delete leaks an orphan object that no manifest
-    references (vacuum fodder, never a correctness issue)."""
-
-    def listdir(self, path: str) -> list[str]:
-        return os.listdir(path)
-
-    def is_dir(self, path: str) -> bool:
-        return os.path.isdir(path)
-
-    def move(self, src: str, dst: str) -> None:
-        import shutil
-
-        shutil.copyfile(src, dst)
-        os.unlink(src)
-
-    def rmtree(self, path: str) -> None:
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-
-
 _DEFAULT_STRATEGY = PosixExclusiveCreate()
 _COMMIT_STRATEGIES: dict[str, CommitStrategy] = {}
-_DEFAULT_FILESYSTEM = PosixFilesystem()
-_TABLE_FILESYSTEMS: dict[str, TableFilesystem] = {}
-
-
-def set_table_filesystem(path: str, fs: TableFilesystem | None) -> None:
-    """Bind a write-path filesystem to a table path (None restores the
-    POSIX default) — the data-file sibling of ``set_commit_strategy``."""
-    key = os.path.abspath(path)
-    if fs is None:
-        _TABLE_FILESYSTEMS.pop(key, None)
-    else:
-        _TABLE_FILESYSTEMS[key] = fs
-
-
-def _fs_for(path: str) -> TableFilesystem:
-    return _TABLE_FILESYSTEMS.get(os.path.abspath(path), _DEFAULT_FILESYSTEM)
 
 
 def set_commit_strategy(path: str, strategy: CommitStrategy | None) -> None:
@@ -394,8 +310,8 @@ def _with_retries(what: str, path: str, max_retries: int, attempt) -> Snapshot:
     """Run ``attempt(latest snapshot)`` until it publishes: on
     ``CommitConflict`` re-read the winner's snapshot and run it again
     (the rebase), at most ``max_retries`` times.  For writers whose
-    commit stays sound on top of a racing one (append, restore,
-    partition replace); the rest commit once and raise."""
+    commit stays sound on top of a racing one (append, restore); the
+    rest (overwrite, merge, delete, compact) commit once and raise."""
     for _ in range(max_retries):
         try:
             return attempt(snapshot(path))
@@ -420,9 +336,9 @@ def _enc_stat(v):
     (pyspark's ``TimestampType.fromInternal`` goes through
     ``datetime.fromtimestamp``).  Raw ``isoformat()`` of those never
     matches — the aware side carries a ``+00:00`` suffix and, under a
-    non-UTC driver TZ, a shifted wall time — so a replaced timestamp
-    partition would fail the hit test, classify its file as *keep*,
-    and silently survive as duplicate rows.  Both sides therefore
+    non-UTC driver TZ, a shifted wall time — so ``_overlapping``
+    would compare a bound against the wrong instant and skip files
+    that hold matching rows.  Both sides therefore
     normalize here: aware → convert to UTC, naive → interpret as local
     wall time then convert to UTC, and drop tzinfo before isoformat.
     (TIMESTAMP_NTZ stats and values are both naive wall clocks; they
@@ -446,20 +362,16 @@ def _enc_stat(v):
 def _file_stats(abs_path: str) -> dict:
     """Per-file column stats from the parquet footer (metadata-only
     read): {col: [min, max]} for columns whose row groups all carry
-    stats, per-column NULL counts (-1 when any row group omits them),
-    plus the footer's exact row count.  JSON-encodable values only —
-    bytes/timestamps fall back to ISO/utf-8 strings, and any
+    stats, plus the footer's exact row count.  JSON-encodable values
+    only — bytes/timestamps fall back to ISO/utf-8 strings, and any
     non-encodable stat drops the column (pruning then keeps the file:
-    always safe).  NULL counts exist because parquet min/max EXCLUDE
-    nulls: a file can be single-valued on its non-null rows and still
-    carry NULL rows, which partition replacement must not destroy."""
+    always safe).  Manifests written before NULL counts were dropped
+    still carry a ``nulls`` key; nothing reads it."""
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(abs_path).metadata
     mins: dict[str, object] = {}
     maxs: dict[str, object] = {}
-    nulls: dict[str, int] = {}
-    null_cov: dict[str, int] = {}  # row groups that REPORTED a count
     ok = None
     for g in range(md.num_row_groups):
         rg = md.row_group(g)
@@ -467,30 +379,15 @@ def _file_stats(abs_path: str) -> dict:
         for i in range(rg.num_columns):
             c = rg.column(i)
             st = c.statistics
-            if st is None:
+            if st is None or not st.has_min_max:
                 continue
-            name = c.path_in_schema
-            if st.null_count is not None:
-                null_cov[name] = null_cov.get(name, 0) + 1
-                if nulls.get(name, 0) >= 0:
-                    nulls[name] = nulls.get(name, 0) + st.null_count
-            else:
-                nulls[name] = -1
-            if not st.has_min_max:
-                continue
-            cols[name] = (st.min, st.max)
+            cols[c.path_in_schema] = (st.min, st.max)
         ok = set(cols) if ok is None else (ok & set(cols))
         for name, (lo, hi) in cols.items():
             if name not in mins or lo < mins[name]:
                 mins[name] = lo
             if name not in maxs or hi > maxs[name]:
                 maxs[name] = hi
-
-    # a column whose null count wasn't reported by EVERY row group is
-    # unknown (-1) — partial sums would undercount
-    for name in list(nulls):
-        if null_cov.get(name, 0) != md.num_row_groups:
-            nulls[name] = -1
     stats = {}
     for name in ok or ():
         try:
@@ -499,7 +396,7 @@ def _file_stats(abs_path: str) -> dict:
         except (TypeError, ValueError):
             continue
         stats[name] = pair
-    return {"rows": md.num_rows, "cols": stats, "nulls": nulls}
+    return {"rows": md.num_rows, "cols": stats}
 
 
 def _cluster(df: DataFrame, cluster_by, target_files=None) -> DataFrame:
@@ -507,11 +404,10 @@ def _cluster(df: DataFrame, cluster_by, target_files=None) -> DataFrame:
     sort gives each output file a narrow, mostly-disjoint value range on
     the cluster keys, which is what makes the manifest's min/max stats
     selective (random placement makes every file's range span the whole
-    domain and skipping prunes nothing).  The linear-order analogue of
-    Z-ordering, right for single-key and prefix predicates — use
-    ``z_order`` when predicates hit the non-leading column too.
-    ``target_files`` pins the output file count (one per partition);
-    default lets Spark/AQE size partitions to data volume."""
+    domain and skipping prunes nothing).  A linear order: it serves
+    predicates on the leading key and key prefixes.  ``target_files``
+    pins the output file count (one per partition); default lets
+    Spark/AQE size partitions to data volume."""
     if not cluster_by:
         return df
     cols = list(cluster_by)
@@ -522,58 +418,6 @@ def _cluster(df: DataFrame, cluster_by, target_files=None) -> DataFrame:
     return df.sortWithinPartitions(*cols)
 
 
-def _zvalue(df: DataFrame, cols, bits: int = 16):
-    """Z-order key for 2+ columns: rank-normalize each column to a
-    ``bits``-bit integer (percent_rank is distribution-free — skewed or
-    categorical-ish columns still spread over the full grid), then
-    bit-interleave.  Rows close in z are close in EVERY clustered
-    column, so each output file covers a small hyper-rectangle and
-    min/max skipping works for predicates on ANY of the columns — the
-    property linear sort only gives its leading key.  One window pass
-    per column (rank shuffle) + a foldable bit expression."""
-    from pyspark.sql import Window, functions as F
-
-    scaled = []
-    for c in cols:
-        r = F.percent_rank().over(Window.orderBy(F.col(c)))
-        scaled.append(
-            F.least(
-                (r * (1 << bits)).cast("long"), F.lit((1 << bits) - 1)
-            )
-        )
-    z = F.lit(0).cast("long")
-    n = len(cols)
-    for bit in range(bits):
-        for j, sc in enumerate(scaled):
-            z = z + (
-                F.shiftleft(
-                    F.shiftrightunsigned(sc, bit).bitwiseAND(F.lit(1)),
-                    bit * n + j,
-                )
-            )
-    return z
-
-
-def z_order(
-    df: DataFrame, cols, target_files: int, bits: int = 16
-) -> DataFrame:
-    """Multi-column clustering for commits: sort by the interleaved
-    z-value so file-level min/max stats prune on any clustered column.
-    NOTE the rank windows are unpartitioned (single-task sort per
-    column) — fine for the per-commit batches this clusters; a full
-    100 TB table rewrite should approximate ranks from a sample
-    (``approxQuantile``-style binning) instead of exact percent_rank.
-    Pass the result to ``append``/``overwrite`` WITHOUT ``cluster_by``
-    (the z-sort already determines placement)."""
-    zc = _zvalue(df, list(cols), bits).alias("__z")
-    out = df.select("*", zc)
-    return (
-        out.repartitionByRange(target_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )
-
-
 def _write_data_files(
     df: DataFrame, path: str
 ) -> tuple[list[str], int, dict[str, dict]]:
@@ -581,7 +425,11 @@ def _write_data_files(
     commit subdirectory of data/ (so concurrent writers never collide on
     file names), returning (relative file names, row count, per-file
     footer stats for manifest-level skipping).  Row counts come from
-    the same footers — no data is re-read."""
+    the same footers — no data is re-read.  Footer reads are tiny but
+    driver-side; a thousand-file commit should not serialize a
+    thousand metadata round-trips, so they run on a thread pool."""
+    from concurrent.futures import ThreadPoolExecutor
+
     commit_id = uuid.uuid4().hex[:12]
     out = os.path.join(_data_dir(path), commit_id)
     df.write.mode("error").parquet(out)
@@ -590,17 +438,6 @@ def _write_data_files(
         for f in os.listdir(out)
         if f.endswith(".parquet")
     )
-    return _with_footer_stats(path, files)
-
-
-def _with_footer_stats(
-    path: str, files: list[str]
-) -> tuple[list[str], int, dict[str, dict]]:
-    """(files, row count, per-file footer stats) for freshly landed
-    files.  Footer reads are tiny but driver-side; a thousand-file
-    commit should not serialize a thousand metadata round-trips."""
-    from concurrent.futures import ThreadPoolExecutor
-
     with ThreadPoolExecutor(max_workers=min(16, max(1, len(files)))) as ex:
         stat_list = list(
             ex.map(lambda f: _file_stats(os.path.join(path, f)), files)
@@ -954,9 +791,7 @@ def _overlapping(snap: Snapshot, col: str, lo, hi) -> list[str]:
     timestamps, plain values otherwise), so a raw ``datetime`` bound
     would compare str-vs-datetime (TypeError) — or, under a non-UTC
     driver TZ, compare shifted wall times and silently skip files
-    that contain matching rows (r10 self-review #1: the write-side
-    seam got the canonicalization in r10's partition-overwrite fix,
-    the query-side seam here did not)."""
+    that contain matching rows."""
     lo_e = _enc_stat(lo) if lo is not None else None
     hi_e = _enc_stat(hi) if hi is not None else None
 
@@ -1011,293 +846,6 @@ def delete_where(
         path, snap, untouched, new_files, new_stats, "delete",
         {"condition": condition},
         snap.schema,  # row-level ops never change the declared schema
-    )
-
-
-def _write_partition_aligned(
-    df: DataFrame, path: str, part_col: str
-) -> tuple[list[str], int, dict[str, dict]]:
-    """Land ``df`` as immutable files each holding EXACTLY ONE value of
-    ``part_col`` (min == max in its footer stats) — the layout
-    ``overwrite_partitions`` needs so a later partition replace can
-    drop whole files instead of rewriting straddlers.
-
-    One distributed job: the writer partitions by a DUPLICATE of the
-    partition column (``__pp``), so the real column stays inside the
-    data files; the hive-style ``__pp=v/`` directories are then
-    flattened driver-side (k cheap same-filesystem renames) because
-    manifest readers scan files BY NAME and must never trip Spark's
-    partition-discovery on shared ``key=value`` parent dirs.
-
-    Filesystem portability: the flatten runs through the table's
-    ``TableFilesystem`` seam (list / move / remove — the sibling of
-    the ``CommitStrategy`` commit seam), POSIX rename by default and
-    object-store copy+delete via ``CopyDeleteFilesystem``.  The moves
-    need no atomicity: every file here is pre-manifest (readers can
-    only see files a committed manifest names), so a torn move leaks
-    an unreferenced orphan at worst — vacuum fodder, never a
-    correctness issue.  Pinned with the full commit+flatten object-
-    store pairing in tests/test_txn_table.py (r10 verdict #4).
-
-    Timestamp partition columns: Spark's default parquet encoding for
-    TimestampType is INT96, whose (deprecated) stats pyarrow ignores —
-    landed files would carry NO min/max for the partition column and
-    every later replace would straddle-rewrite the whole table.  When
-    ``part_col`` is timestamp-typed, the write is scoped to
-    TIMESTAMP_MICROS so its footer stats exist and classify.  The
-    session-conf toggle here is benign to concurrent writers (unlike
-    an overwrite-MODE toggle): both encodings losslessly hold Spark's
-    micros-precision timestamps and read back identically — a racer
-    that observes MICROS instead of INT96 produces equally-correct
-    files."""
-    from pyspark.sql import functions as F
-
-    commit_id = uuid.uuid4().hex[:12]
-    out = os.path.join(_data_dir(path), commit_id)
-    writer = (
-        df.withColumn("__pp", F.col(part_col))
-        .write.mode("error")
-        .partitionBy("__pp")
-    )
-    ts_key = "spark.sql.parquet.outputTimestampType"
-    part_is_ts = any(
-        f.name == part_col and f.dataType.typeName().startswith("timestamp")
-        for f in df.schema.fields
-    )
-    with scoped_conf(
-        df.sparkSession, {ts_key: "TIMESTAMP_MICROS"} if part_is_ts else {}
-    ):
-        writer.parquet(out)
-    fs = _fs_for(path)
-    files: list[str] = []
-    for sub in sorted(fs.listdir(out)):
-        subdir = os.path.join(out, sub)
-        if not (fs.is_dir(subdir) and sub.startswith("__pp=")):
-            continue
-        for f in sorted(fs.listdir(subdir)):
-            if not f.endswith(".parquet"):
-                continue
-            flat = f"{len(files)}_{f}"
-            fs.move(os.path.join(subdir, f), os.path.join(out, flat))
-            files.append(os.path.join("data", commit_id, flat))
-        # leftovers are committer artifacts (.crc checksums, _SUCCESS);
-        # the moved files no longer match their crc names anyway
-        fs.rmtree(subdir)
-    return _with_footer_stats(path, files)
-
-
-def _classify_partition_files(
-    snap: Snapshot, part_col: str, replaced: set
-) -> tuple[list[str], list[str], list[str]]:
-    """Split a snapshot's files by their footer stats for ``part_col``
-    against the replaced-value set: (keep, drop, straddle).
-
-    * keep — [min, max] cannot contain any replaced value (NULL rows,
-      which stats exclude, are never replaced — a kept file keeps
-      them untouched);
-    * drop — single-valued (min == max) on a replaced value AND
-      provably NULL-free in the partition column: the whole file IS a
-      replaced partition (parquet min/max exclude nulls, so without
-      the null-count proof a 'single-valued' file could still hide
-      NULL rows that dropping would destroy);
-    * straddle — overlaps a replaced value but is not single-valued,
-      carries no/unknown stats, or may contain NULL rows: must be
-      rewritten with replaced rows filtered out (NULL-preserving), or
-      the commit would drop live rows.
-
-    Replaced values are compared through ``_enc_stat`` so typed
-    date/timestamp/bytes partition columns meet their footer-string
-    encodings in one order-preserving domain."""
-    replaced_enc = {_enc_stat(v) for v in replaced}
-    keep: list[str] = []
-    drop: list[str] = []
-    straddle: list[str] = []
-    for f in snap.files:
-        meta = snap.file_stats.get(f, {})
-        st = meta.get("cols", {}).get(part_col)
-        if st is None:
-            straddle.append(f)
-            continue
-        fmin, fmax = st
-        try:
-            hit = any(fmin <= v <= fmax for v in replaced_enc)
-        except TypeError:
-            # stats type and replaced-value type don't compare even
-            # after canonical encoding: conservatively rewrite
-            straddle.append(f)
-            continue
-        n_null = meta.get("nulls", {}).get(part_col, -1)
-        if not hit:
-            keep.append(f)
-        elif fmin == fmax and n_null == 0:
-            drop.append(f)
-        else:
-            straddle.append(f)
-    return keep, drop, straddle
-
-
-def commit_overwrite_partitions(
-    path: str,
-    part_col: str,
-    replaced,
-    new_files,
-    new_stats: dict,
-    meta: dict | None = None,
-    max_retries: int = 5,
-) -> Snapshot:
-    """Commit loop for a dynamic partition overwrite, data already
-    landed: every base file wholly inside the replaced partition set is
-    dropped, every file that cannot contain a replaced value is kept BY
-    REFERENCE (byte-identical — never rewritten, never copied), and the
-    new files are added.
-
-    Unlike full ``overwrite``, losing a race here is NOT automatically
-    a logical conflict: the replaced set names exactly which partitions
-    this commit owns, so a retry RE-CLASSIFIES against the winner's
-    snapshot — two writers replacing DISJOINT partitions both land,
-    in either order (the disjointness proof is the classification
-    itself: re-derived per attempt, the loser keeps the winner's new
-    files because they sit outside its replaced set).  A base file that
-    STRADDLES replaced and live values raises instead — this
-    manifest-only loop cannot rewrite data; use
-    ``overwrite_partitions``, which filters straddlers with Spark
-    before retrying."""
-    replaced = set(replaced)
-
-    def attempt(base: Snapshot) -> Snapshot:
-        straddle = _classify_partition_files(base, part_col, replaced)[2]
-        if straddle:
-            raise ValueError(
-                f"{len(straddle)} base file(s) straddle replaced "
-                f"partitions of {part_col} (e.g. {straddle[0]}); use "
-                "overwrite_partitions() to rewrite them"
-            )
-        return _commit_partition_replace(
-            path, base, part_col, replaced, new_files, new_stats, meta
-        )
-
-    return _with_retries("overwrite_partitions", path, max_retries, attempt)
-
-
-def overwrite_partitions(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    part_col: str,
-    max_retries: int = 5,
-    meta: dict | None = None,
-    evolve: bool = False,
-) -> Snapshot:
-    """Transactional dynamic partition overwrite (replace-where): the
-    partitions PRESENT in ``df`` are replaced by ``df``'s rows; every
-    other partition's files are carried into the new version untouched
-    and byte-identical.  The 100 TB merge-path answer promised at
-    operators/merge.py: an upsert touching k partitions rewrites k
-    partitions, never the table.
-
-    Steps: (1) one tiny distinct-aggregate collects the replaced
-    partition values (bounded by the number of partitions touched — a
-    daily upsert touches days, not rows); (2) the new data lands
-    partition-aligned (one job; each file single-valued on
-    ``part_col``); (3) the commit loop drops replaced files, keeps the
-    rest by reference, and rebases on conflict.  Legacy base files that
-    straddle the replaced set (written before this layout) are
-    rewritten once here — filtered to their live rows and re-landed
-    aligned — after which they never straddle again.
-
-    Schema: ``df`` is validated against the declared schema BEFORE
-    landing (same gate as ``append``/``merge_into`` — an ungated
-    replace would commit divergent files the declared scan silently
-    truncates or cannot read, r13 review); widening/adding columns
-    requires ``evolve=True`` and re-resolves on every rebase."""
-    from pyspark.sql import functions as F
-
-    values = [
-        r[0] for r in df.select(part_col).distinct().collect()
-    ]  # bounded: one value per touched partition
-    if any(v is None for v in values):
-        # NULL has no total order against file stats and no stable
-        # directory identity; partition columns must be non-NULL
-        # (derive a sentinel value upstream, as hive layouts do)
-        raise ValueError(
-            f"overwrite_partitions: NULL value in partition column "
-            f"{part_col!r} — partition columns must be non-NULL"
-        )
-    if not values:
-        return snapshot(path)
-    incoming = _nullable_json_schema(df)
-    # fail-fast validation against the CURRENT declaration before the
-    # (expensive) aligned landing; re-resolved per commit attempt below
-    _resolve_declared(
-        snapshot(path).schema, incoming, evolve,
-        bool(snapshot(path).files),
-    )
-    new_files, _, new_stats = _write_partition_aligned(df, path, part_col)
-
-    def attempt(base: Snapshot) -> Snapshot:
-        straddle = _classify_partition_files(base, part_col, set(values))[2]
-        extra_files: list[str] = []
-        extra_stats: dict[str, dict] = {}
-        if straddle:
-            # NULL-preserving residual: isin(NULL) is NULL (falsy), so
-            # a bare negation would DELETE legacy NULL-partition rows —
-            # keep a row when it is NULL or provably not replaced
-            live = _read_files(spark, path, straddle, base).filter(
-                F.col(part_col).isNull() | ~F.col(part_col).isin(values)
-            )
-            extra_files, _, extra_stats = _write_partition_aligned(
-                live, path, part_col
-            )
-            # straddlers' replaced rows are superseded by df; their
-            # live rows now exist re-landed aligned, so the commit
-            # below drops the straddlers (they classify as straddle
-            # against the SAME pinned base and are excluded from keep).
-        return _commit_partition_replace(
-            path,
-            base,
-            part_col,
-            set(values),
-            list(new_files) + extra_files,
-            {**new_stats, **extra_stats},
-            meta,
-            declared=_resolve_declared(
-                base.schema, incoming, evolve, bool(base.files)
-            ),
-        )
-
-    return _with_retries("overwrite_partitions", path, max_retries, attempt)
-
-
-def _commit_partition_replace(
-    path: str,
-    base: Snapshot,
-    part_col: str,
-    replaced: set,
-    new_files,
-    new_stats: dict,
-    meta: dict | None,
-    declared: dict | None = None,
-) -> Snapshot:
-    """Single manifest-create attempt for both partition replacers.
-    Classification, any straddler rewrite, and this commit are all
-    pinned to ONE base version; ``_publish``'s compare-and-swap on
-    ``base.version + 1`` rejects the attempt if ANY commit interleaved,
-    so a stale rewrite can never resurrect rows a racing writer
-    replaced — the caller's retry re-reads, re-classifies, and re-lands
-    from scratch (orphaned data files are immutable and vacuumable).
-    Only the files that cannot hold a replaced value are carried.
-    ``declared`` is the caller-resolved declared schema for the new
-    version (None = carry the base's forward — the schema-less
-    pre-landed-files path, same contract as ``commit_append``)."""
-    keep = _classify_partition_files(base, part_col, replaced)[0]
-    return _commit(
-        path, base, keep, new_files, new_stats, "overwrite_partitions",
-        {
-            "partition_col": part_col,
-            "replaced": sorted(str(v) for v in replaced),
-            **(meta or {}),
-        },
-        declared if declared is not None else base.schema,
     )
 
 
@@ -1446,16 +994,10 @@ def compact(
     and commit the identical DATA as a new version.  Many-small-files
     is the classic failure mode of streaming appends; compaction keeps
     scan planning O(target) without blocking readers (old versions
-    remain intact until vacuum).
-
-    Interaction with ``overwrite_partitions`` layouts: compacted files
-    mix partition values, so the next partition replace classifies
-    them as straddlers and rewrites them once (correct, just a
-    one-time extra rewrite).  To compact WITHOUT losing partition
-    alignment, pass ``cluster_by=[partition_col]`` with
-    ``target_files >= number of partitions`` — range clustering puts
-    each partition's rows in contiguous files and most land
-    single-valued again."""
+    remain intact until vacuum).  Overwrite-style conflict semantics: a
+    compaction pinned to a base that a racing commit superseded loses
+    its compare-and-swap and raises, so it can never drop the racer's
+    rows."""
     snap0 = snapshot(path, expected_version)
     if snap0.files:
         df = _read_files(spark, path, snap0.files, snap0)

@@ -1,10 +1,12 @@
 from __future__ import annotations
 
+import pathlib
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest belongs to, ahead of any other copy
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from play_bq_gcp_spark.session import get_spark
 

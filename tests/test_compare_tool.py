@@ -10,11 +10,12 @@ flagged loudly, so a local green actually implies a driver green.
 
 from __future__ import annotations
 
+import pathlib
 import sys
 
 import pyarrow as pa
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1] / "tools"))
 
 from compare import driver_unhashable_cols, rows_key  # noqa: E402
 

@@ -14,12 +14,13 @@ get_spark-only dependency.
 from __future__ import annotations
 
 import json
+import pathlib
 import subprocess
 import sys
 
 _SCRIPT = r"""
 import json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from pyspark.sql import SparkSession
 
 spark = (
@@ -47,7 +48,10 @@ print(json.dumps({"events_rows": n, "query_rows": rows}))
 
 def test_bare_session_reads_events_and_runs_registry_entry():
     proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT],
+        [
+            sys.executable, "-c", _SCRIPT,
+            str(pathlib.Path(__file__).resolve().parents[1]),
+        ],
         capture_output=True,
         text=True,
         timeout=600,

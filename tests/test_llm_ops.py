@@ -294,6 +294,7 @@ def test_ivf_separation_escalation_recovers_seed98(spark, tmp_path, caplog):
     replay of similarity_ann_recall_floors is green, while on healthy
     corpora the escalation must NOT fire and probing stays sublinear."""
     import logging
+    import pathlib
     import runpy
     import sys
 
@@ -304,8 +305,11 @@ def test_ivf_separation_escalation_recovers_seed98(spark, tmp_path, caplog):
     fuzz_dir = str(tmp_path / "fuzz98")
     argv, sys.argv = sys.argv, ["fuzz_fixture.py", "98", fuzz_dir]
     try:
-        runpy.run_path("/root/repo/tools/fuzz_fixture.py",
-                       run_name="__main__")
+        runpy.run_path(
+            str(pathlib.Path(__file__).resolve().parents[1]
+                / "tools" / "fuzz_fixture.py"),
+            run_name="__main__",
+        )
     finally:
         sys.argv = argv
 

@@ -7,7 +7,6 @@ release a relation, or start an AvailableNow query."""
 from __future__ import annotations
 
 import ast
-import datetime as dt
 import pathlib
 
 import pytest
@@ -84,18 +83,6 @@ def _runtime_bloom_filter(spark, sf_dir, tmp_path):
         assert bloom_pruned_join(fact, dim, "l_orderkey", "o_orderkey").count()
 
 
-def _txn_overwrite_ts_partitions(spark, sf_dir, tmp_path):
-    from play_bq_gcp_spark.storage import txn_table as tt
-
-    path = str(tmp_path / "t")
-    tt.init_table(path)
-    df = spark.createDataFrame(
-        [(dt.datetime(2024, 1, d, 12), d) for d in (1, 2)],
-        "day timestamp, id long",
-    )
-    assert tt.overwrite_partitions(spark, df, path, "day").files
-
-
 def _udtf_chunk_documents(spark, sf_dir, tmp_path):
     from play_bq_gcp_spark.functions.udtf_fns import chunk_documents
 
@@ -135,7 +122,6 @@ def _lm_perplexity_score(spark, sf_dir, tmp_path):
         _tws_entry,
         _bpe_train,
         _runtime_bloom_filter,
-        _txn_overwrite_ts_partitions,
         _udtf_chunk_documents,
         _containment_pairs,
         _incremental_dedup,

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import json
 import multiprocessing as mp
-import os
+import time
 
 import pytest
 
@@ -188,38 +188,6 @@ def test_append_race_scales_with_contention(tmp_path, n_procs):
     assert tt.current_version(path) == n_procs * N_APPENDS
 
 
-N_PART_ROUNDS = 6
-
-
-def _stats(day, rows=1):
-    return {"rows": rows, "cols": {"day": [day, day]}, "nulls": {"day": 0}}
-
-
-def _race_partition_writer(path, barrier, wid, out_q):
-    """One writer process owning ONE partition (day = wid): repeatedly
-    replaces its partition via the REAL commit_overwrite_partitions
-    retry loop while every other process replaces theirs.  Disjoint
-    partitions must never conflict away: all rounds of all writers
-    land."""
-    try:
-        barrier.wait(timeout=60)
-        results = []
-        for i in range(N_PART_ROUNDS):
-            fname = f"data/day{wid}_round{i}.parquet"
-            snap = tt.commit_overwrite_partitions(
-                path,
-                "day",
-                [wid],
-                [fname],
-                {fname: _stats(wid)},
-                max_retries=500,
-            )
-            results.append((snap.version, fname))
-        out_q.put(("ok", wid, results))
-    except BaseException as e:
-        out_q.put(("err", wid, repr(e)))
-
-
 def _spark_child(app):
     """Fresh local[2] session for a spawned child process (no UI, tiny
     shuffle) — children must not inherit the parent's JVM."""
@@ -235,87 +203,78 @@ def _spark_child(app):
 
 
 N_COMPACT_ROUNDS = 4
-N_REPLACE_ROUNDS = 6
+N_APPEND_ROUNDS = 6
 
 
-def _race_compactor(path, barrier, wid, out_q):
-    """Repeatedly compacts the whole table while the replacer races.
-    ``compact`` pins a base version and publishes base+1 with NO
-    internal retry — a lost race surfaces as CommitConflict and the
-    maintenance job re-reads and re-compacts, which is exactly what
-    this child drives."""
+def _race_compactor(path, barrier, done, out_q):
+    """Compacts the whole table over and over until the appender is
+    done (and at least N_COMPACT_ROUNDS times), so every append races
+    a compaction.  ``compact`` pins a base version and publishes
+    base+1 with NO internal retry — a lost race surfaces as
+    CommitConflict and the maintenance job re-reads and re-compacts,
+    which is exactly what this child drives."""
     try:
         spark = _spark_child("race-compactor")
         barrier.wait(timeout=300)
-        landed, conflicts = 0, 0
-        while landed < N_COMPACT_ROUNDS and conflicts < 200:
+        versions, conflicts = [], 0
+        deadline = time.monotonic() + 300
+        while (
+            len(versions) < N_COMPACT_ROUNDS or not done.is_set()
+        ) and time.monotonic() < deadline:
             try:
-                tt.compact(spark, path, target_files=2, cluster_by=["day"])
-                landed += 1
+                versions.append(
+                    tt.compact(spark, path, target_files=2).version
+                )
             except tt.CommitConflict:
                 conflicts += 1
-        out_q.put(("ok", wid, {"landed": landed, "conflicts": conflicts}))
+        out_q.put(("ok", 0, {"versions": versions, "conflicts": conflicts}))
     except BaseException as e:
-        out_q.put(("err", wid, repr(e)))
+        out_q.put(("err", 0, repr(e)))
 
 
-def _race_partition_replacer(path, barrier, wid, out_q):
-    """Repeatedly replaces partition day=1 through the REAL
-    overwrite_partitions loop (its internal retry re-classifies against
-    whatever the compactor committed — compacted files mix days, so
-    they classify straddle and are rewritten NULL-preservingly)."""
+def _race_appender_spark(path, barrier, done, out_q):
+    """Appends N_APPEND_ROUNDS fresh batches through the REAL
+    ``append`` (its retry rebases on whatever the compactor
+    committed), then signals ``done``."""
     try:
-        spark = _spark_child("race-replacer")
+        spark = _spark_child("race-appender")
         barrier.wait(timeout=300)
-        results = []
-        for i in range(N_REPLACE_ROUNDS):
+        versions = []
+        for i in range(N_APPEND_ROUNDS):
             df = spark.createDataFrame(
-                [(1, 1000 + j, i) for j in range(3)],
-                "day int, id long, v long",
+                [(1000 + 10 * i + j, i) for j in range(3)], "id long, v long"
             )
-            snap = tt.overwrite_partitions(
-                spark, df, path, "day", max_retries=100
-            )
-            results.append(snap.version)
-        out_q.put(("ok", wid, {"versions": results}))
+            versions.append(tt.append(df, path, max_retries=100).version)
+        out_q.put(("ok", 1, {"versions": versions}))
     except BaseException as e:
-        out_q.put(("err", wid, repr(e)))
+        out_q.put(("err", 1, repr(e)))
+    finally:
+        done.set()
 
 
-def test_compaction_races_partition_overwrite_no_lost_rows(
-    spark, tmp_path
-):
-    """r9 verdict ask #5: the compaction x partition-overwrite
-    interaction is documented (compacted files straddle the next
-    replace and are rewritten once) but was never RACED.  A real
-    compactor process and a real partition-replacer process, each with
-    its own JVM, contend on the same table: every replace must land,
-    at least one compact must land, the final day=1 partition must
-    hold exactly the LAST replace's rows (no stale resurrection — a
-    compact that pinned a pre-replace snapshot must lose its CAS, not
-    resurrect old rows), and bystander partitions must ride through
-    both writers byte-equal in VALUE."""
+def test_compaction_races_appends_no_lost_rows(spark, tmp_path):
+    """A real compactor process and a real appender process, each with
+    its own JVM, contend on the same table: every append must land, a
+    compaction must land between the first and the last append, and
+    the final rows must be exactly the seed plus every append — a
+    compact that pinned a pre-append snapshot must lose its CAS, not
+    drop the append's rows or resurrect rows twice."""
     path = str(tmp_path / "t")
     tt.init_table(path)
-    for d in (0, 1, 2, 3):
-        tt.overwrite_partitions(
-            spark,
-            spark.createDataFrame(
-                [(d, 10 * d + j, -1) for j in range(4)],
-                "day int, id long, v long",
-            ),
+    seed = [(10 * d + j, -1) for d in range(4) for j in range(4)]
+    for d in range(4):
+        tt.append(
+            spark.createDataFrame(seed[4 * d : 4 * d + 4], "id long, v long"),
             path,
-            "day",
         )
 
     ctx = mp.get_context("spawn")
     barrier = ctx.Barrier(2)
+    done = ctx.Event()
     out_q = ctx.Queue()
     procs = [
-        ctx.Process(target=_race_compactor, args=(path, barrier, 0, out_q)),
-        ctx.Process(
-            target=_race_partition_replacer, args=(path, barrier, 1, out_q)
-        ),
+        ctx.Process(target=child, args=(path, barrier, done, out_q))
+        for child in (_race_compactor, _race_appender_spark)
     ]
     for p in procs:
         p.start()
@@ -326,77 +285,22 @@ def test_compaction_races_partition_overwrite_no_lost_rows(
     errs = [o for o in outs if o[0] == "err"]
     assert not errs, f"child failed: {errs}"
     stats = {wid: payload for _, wid, payload in outs}
-    assert stats[0]["landed"] >= 1, "no compaction ever landed"
-    assert len(stats[1]["versions"]) == N_REPLACE_ROUNDS
-
-    # final state: day=1 holds exactly the last replace's rows
-    got = sorted(
-        (r.day, r.id, r.v) for r in tt.read(spark, path).collect()
+    compacts, appends = stats[0]["versions"], stats[1]["versions"]
+    assert len(appends) == N_APPEND_ROUNDS
+    assert any(appends[0] < v < appends[-1] for v in compacts), (
+        f"no compaction landed among the appends {appends}: {compacts}"
     )
-    day1 = [(i, v) for d, i, v in got if d == 1]
-    assert day1 == [
-        (1000 + j, N_REPLACE_ROUNDS - 1) for j in range(3)
-    ], f"day=1 lost or resurrected rows: {day1}"
-    # bystander partitions: values intact through every compact/replace
-    for d in (0, 2, 3):
-        rows_d = sorted((i, v) for dd, i, v in got if dd == d)
-        assert rows_d == [(10 * d + j, -1) for j in range(4)], (
-            f"bystander day={d} corrupted: {rows_d}"
-        )
-    assert len(got) == 3 + 3 * 4
-    # version chain contiguous and parseable; conflict losers rebased
+
+    got = sorted((r.id, r.v) for r in tt.read(spark, path).collect())
+    appended = [
+        (1000 + 10 * i + j, i) for i in range(N_APPEND_ROUNDS) for j in range(3)
+    ]
+    assert got == sorted(seed + appended), "rows lost or duplicated"
+    # version chain contiguous and parseable
     top = tt.current_version(path)
     for v in range(top + 1):
         with open(tt._manifest_path(path, v)) as f:
             json.load(f)
     actions = [s.action for s in tt.history(path)]
-    assert actions.count("compact") == stats[0]["landed"]
-    assert actions.count("overwrite_partitions") >= N_REPLACE_ROUNDS
-
-
-def test_concurrent_partition_overwrites_disjoint_partitions_all_land(
-    tmp_path,
-):
-    """4 processes x 6 rounds, each dynamically overwriting its OWN
-    partition, all contending on the manifest CAS: every round lands
-    (disjoint replaces are not logical conflicts — the loser's retry
-    re-classifies against the winner's snapshot), the final manifest
-    holds exactly each partition's LAST file, and untouched partitions
-    ride through every commit by reference."""
-    path = str(tmp_path / "t")
-    tt.init_table(path)
-    # seed: one ALIGNED file per partition (stats carried), plus a
-    # bystander partition (day=99) that no writer ever touches
-    for d in list(range(N_PROCS)) + [99]:
-        f = f"data/seed2_day{d}.parquet"
-        tt.commit_overwrite_partitions(path, "day", [d], [f], {f: _stats(d)})
-
-    outs = _spawn(_race_partition_writer, path, N_PROCS)
-    errs = [o for o in outs if o[0] == "err"]
-    assert not errs, f"child writer failed: {errs}"
-
-    final = tt.snapshot(path)
-    files = set(final.files)
-    # every writer's LAST round file is live; no earlier round survives
-    for status, wid, results in outs:
-        assert len(results) == N_PART_ROUNDS
-        last = results[-1][1]
-        assert last in files, f"writer {wid}'s final replace lost"
-        for _, fname in results[:-1]:
-            assert fname not in files, f"stale {fname} resurrected"
-    # the bystander partition's file survived every commit by reference
-    assert "data/seed2_day99.parquet" in files
-    # version chain contiguous and each manifest parseable
-    top = tt.current_version(path)
-    assert top == (N_PROCS + 1) + N_PROCS * N_PART_ROUNDS
-    for v in range(top + 1):
-        with open(tt._manifest_path(path, v)) as f:
-            json.load(f)
-    # genuine interleaving across writers
-    per_writer = [[v for v, _ in results] for _, _, results in outs]
-    interleaved = any(
-        min(b) < max(a) and min(a) < max(b)
-        for i, a in enumerate(per_writer)
-        for b in per_writer[i + 1 :]
-    )
-    assert interleaved, "schedules never overlapped — no race exercised"
+    assert actions.count("compact") == len(compacts)
+    assert actions.count("append") == 4 + N_APPEND_ROUNDS

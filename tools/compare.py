@@ -10,6 +10,7 @@ column names, and order-insensitive values.  Use while iterating:
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
@@ -104,16 +105,12 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, root)
     import __spark_entry__ as entry_mod
     from play_bq_gcp_spark.session import get_spark
 
-    # no console progress bar: it shares the terminal line with the
-    # ok/FAIL lines, which must each start a line of their own
-    spark = get_spark(
-        app_name="compare",
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
+    spark = get_spark(app_name="compare")
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
 
