@@ -879,14 +879,22 @@ def containment_pairs(
     Jaccard ~0.5 but containment 1.0).
 
     Candidates come from a RARE-SHINGLE inverted index: only shingles
-    with document frequency <= ``max_df`` join docs into pairs — the
-    standard containment-search index shape.  Common shingles carry no
-    signal and would pair quadratically; rare ones bound each bucket to
-    <= max_df docs, so the candidate stage is one bounded equi-join
-    exactly like the banded-MinHash path (``_bucket_candidate_pairs``'s
-    cap logic, specialized to df).  Exact containment then verifies
-    candidates only: each pair intersects its shingle-hash sets via two
-    joins, never re-reading text.
+    with document frequency <= ``max_df`` pair docs — the standard
+    containment-search index shape.  Common shingles carry no signal
+    and would pair quadratically; rare ones bound each posting list to
+    <= max_df docs.  The df aggregate builds the index in its one
+    shuffle: per shingle it keeps ``df`` and, for ``df <= max_df``
+    only, the sorted posting list (``array_sort(collect_list(doc_id))``),
+    so no materialized index ever holds a common shingle's list.  Each
+    rare list of 2+ docs emits its in-list pairs ``doc_a < doc_b``
+    (``posexplode`` + ``slice`` of the sorted list, no join), and
+    ``groupBy(doc_a, doc_b).count()`` is the pair's shared-rare count
+    ``i_rare``; ``explode`` of the same lists, grouped by doc, is each
+    doc's rare count ``r``.  Verify never re-explodes the shingle
+    stream: the per-doc relation ``bound`` carries the cached hash
+    array ``hs`` into both pair sides, and the exact count is
+    ``size(array_intersect(hs_a, hs_b))`` — ``hs`` is distinct per
+    doc, so that is |A∩B| — over ``n = size(hs)``.
 
     Recall: a qualifying pair could in principle share ONLY high-df
     shingles, and on a fixed-vocabulary corpus the BACKGROUND df of a
@@ -908,26 +916,33 @@ def containment_pairs(
     ``Observation.get`` raises — fetch metrics only on non-empty runs,
     or disable AQE for the diagnostic pass.)
 
-    ``max_df="auto"`` needs the corpus size; pass ``n_docs`` if known
-    to skip the eager ``documents.count()``.  While the auto cap sits
-    on its df<=16 floor (n <= 3200) the only job is the final eager
-    checkpoint of the pairs; above it, the governor first materializes
-    the df aggregate ONCE (executor-side checkpoint, reused by the
-    rare index) to read its histogram — proportional to distinct
-    shingles, never to pairs.
+    Jobs: ``max_df="auto"`` needs the corpus size; pass ``n_docs`` if
+    known to skip the eager ``documents.count()``.  While the auto cap
+    sits on its df<=16 floor (n <= 3200) the only other action is the
+    final eager checkpoint of the pairs, whose AQE stages fill the
+    ``hs`` cache, then run the df/postings shuffle, the pair and
+    rare-count aggregates, the ``bound`` join and the verify join.
+    Above the floor, the governor first materializes the df/postings
+    aggregate ONCE (executor-side checkpoint, reused by the candidate
+    stage) to read its histogram — proportional to distinct shingles,
+    never to pairs; the final checkpoint then starts from it.
 
-    Scale: shuffles carry 8-byte shingle hashes and integer ids only;
-    every stage is bounded (df cap, candidate count) — no all-pairs
-    path exists.  Round-8 probe hardening, after the 30x corpus OOMed
-    an 8 GB heap (1348 s / 22 GB shuffle on 32 GB):
+    Scale: shuffles carry 8-byte shingle hashes, integer ids, posting
+    lists of <= max_df ids and the hash arrays of docs that hold a rare
+    shingle; every stage is bounded (df cap, candidate count) — no
+    all-pairs path exists.  Round-8 probe hardening, after the 30x
+    corpus OOMed an 8 GB heap (1348 s / 22 GB shuffle on 32 GB):
 
     * **Upper-bound candidate prune** (exact, not approximate): a
       candidate's full intersection satisfies
       ``|A∩B| <= i_rare + min(common_a, common_b)``, so pairs whose
-      bound cannot reach the threshold skip the expensive verify join
-      entirely — measured 12x wall / 14x shuffle at 30x with
-      bit-identical output (most candidates share ONE mid-df shingle
-      and die here).
+      bound cannot reach the threshold are filtered out before the
+      array intersection — at 30x the prune cut wall 12x and shuffle
+      14x with bit-identical output (most candidates share ONE mid-df
+      shingle and die here).  The filter runs after the arrays are
+      joined: pruning first and joining the arrays to the survivors
+      costs one more shuffle of the pairs and was slower at sf0.1
+      (SCALING.md, "Containment from posting lists").
     * **Candidate-volume governor** (``candidate_budget``): the df
       HISTOGRAM (a bounded driver read) solves the largest cap whose
       kept-shingle pair volume fits a linear-in-corpus budget —
@@ -940,23 +955,31 @@ def containment_pairs(
     if auto_mode:
         n = documents.count() if n_docs is None else n_docs
         max_df = max(16, n // 200)
-    # Tokenize + shingle ONCE (r14, the minhash-engine pattern applied
-    # here after the registry-wide duplicated-branch sweep): the
-    # downstream graph references the shingle stream from SEVEN plan
-    # branches (df index, rare×2 candidate sides, rare counts, verify
-    # sides×2, sizes), and each lazy reference re-derived the whole
-    # scan → tokenize → shingle chain — the r14 plan dump carried 14
-    # tokenize chains.  Caching the per-doc hash ARRAYS (not the
-    # exploded stream: ~8× fewer cached rows) makes every branch an
-    # explode over cached arrays, and the eager checkpoint of the
-    # small pair output materializes everything while the cache is
+    # Tokenize + shingle ONCE (r14, the minhash-engine pattern): the
+    # df/postings aggregate and the verify's ``bound`` relation both
+    # read the per-doc hash ARRAYS, and a lazy reference would re-run
+    # scan → tokenize → shingle for each.  Cache the arrays (not the
+    # exploded stream: ~8× fewer cached rows); the eager checkpoint of
+    # the small pair output materializes everything while the cache is
     # live.
     with cached(
         spread(documents.select("doc_id", "text"))
         .select("doc_id", shingle_hashes("text", k=shingle_k).alias("hs"))
     ) as docs_hs:
-        sh = docs_hs.select("doc_id", F.explode("hs").alias("g"))
-        dfreq = sh.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
+        dfreq = (
+            docs_hs.select("doc_id", F.explode("hs").alias("g"))
+            .groupBy("g")
+            .agg(
+                F.count(F.lit(1)).alias("df"),
+                F.collect_list("doc_id").alias("docs"),
+            )
+            .select(
+                "df",
+                F.when(F.col("df") <= max_df, F.array_sort("docs")).alias(
+                    "docs"
+                ),
+            )
+        )
         if auto_mode and max_df > 16:
             # Candidate-VOLUME governor (round 8).  The n/200 recall cap
             # grows with the corpus, but candidate work is Σ df·(df-1)/2
@@ -1028,85 +1051,63 @@ def containment_pairs(
                     "shingles_dropped"
                 ),
             )
-        rare = sh.join(
-            dfreq.filter(F.col("df") <= max_df).select("g"),
-            "g",
-        )
-        a = rare.select(F.col("doc_id").alias("doc_a"), "g")
-        b = rare.select(F.col("doc_id").alias("doc_b"), "g")
-        # Candidate scoring + SOUND upper-bound prune (round 8).  The
-        # exact-verify join expands every candidate by its docs' full
-        # shingle lists, and at the 30x probe scale 42M candidates x ~55
-        # shingles = 2.3G verify rows (22 GB shuffle, 1348 s) — with final
-        # yield 24 630 pairs (~0.06% precision: most candidates share ONE
-        # mid-df shingle).  Instead of .distinct(), count the shared rare
-        # shingles per pair (same shuffle), then bound the FULL
-        # intersection: shared shingles are rare or dropped-common, so
-        # |A∩B| <= i_rare + min(common_a, common_b) where common_x is
-        # doc x's count of above-cap shingles.  A pair whose BOUND cannot
-        # reach the threshold can never verify — pruning it is exact, not
-        # approximate (the 1e-4 slack covers the output-side 4-dp round).
+        # Candidates straight off the rare posting lists: the list is
+        # sorted, so each doc pairs with the docs after it (doc_a <
+        # doc_b), and the pair's count over all lists is i_rare.
+        rare = dfreq.filter(F.col("df") <= max_df).select("docs")
         cand = (
-            a.join(b, "g")
-            .filter(F.col("doc_a") < F.col("doc_b"))
+            rare.filter(F.size("docs") >= 2)
+            .select("docs", F.posexplode("docs").alias("pos", "doc_a"))
+            .select(
+                "doc_a",
+                F.explode(
+                    F.slice("docs", F.col("pos") + 2, F.size("docs"))
+                ).alias("doc_b"),
+            )
             .groupBy("doc_a", "doc_b")
             .agg(F.count(F.lit(1)).alias("i_rare"))
         )
-        # per-doc totals straight off the cached hash arrays — size(hs) ==
-        # the old explode+groupBy count (explode emits one row per element
-        # and hs is never NULL), minus one whole shuffle of the shingle
-        # stream.  A zero-shingle doc now carries an n=0 row the old
-        # aggregate lacked; harmless, since every consumer joins ``bound``
-        # INNER on a doc id that holds >= 1 shingle (it came from a
-        # candidate pair).  Rare counts still need the post-join aggregate.
-        sizes = docs_hs.select("doc_id", F.size("hs").cast("long").alias("n"))
-        n_rare = rare.groupBy("doc_id").agg(F.count(F.lit(1)).alias("r"))
-        bound = sizes.join(n_rare, "doc_id", "left").select(
-            "doc_id", "n", F.coalesce(F.col("r"), F.lit(0)).alias("r")
+        n_rare = (
+            rare.select(F.explode("docs").alias("doc_id"))
+            .groupBy("doc_id")
+            .agg(F.count(F.lit(1)).alias("r"))
         )
-        ba = bound.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("n").alias("__n_a"),
-            (F.col("n") - F.col("r")).alias("__c_a"),
+        # Exact upper-bound prune (round 8): shared shingles are rare or
+        # above the cap, so |A∩B| <= i_rare + min(common_a, common_b)
+        # with common_x = n_x - r_x, and a pair whose bound cannot reach
+        # the threshold never verifies (the 1e-4 slack covers the 4-dp
+        # output round).  Every candidate doc holds a rare shingle, so
+        # the inner join keeps all of them.  ``hs`` rides along into the
+        # verify: pruning before joining the arrays was slower.
+        bound = docs_hs.join(n_rare, "doc_id").select(
+            "doc_id", F.size("hs").cast("long").alias("n"), "r", "hs"
         )
-        bb = bound.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("n").alias("__n_b"),
-            (F.col("n") - F.col("r")).alias("__c_b"),
-        )
-        pairs = (
-            cand.join(ba, "doc_a")
-            .join(bb, "doc_b")
+
+        def side(x: str) -> DataFrame:
+            return bound.select(
+                F.col("doc_id").alias(f"doc_{x}"),
+                F.col("n").alias(f"__n_{x}"),
+                (F.col("n") - F.col("r")).alias(f"__c_{x}"),
+                F.col("hs").alias(f"__hs_{x}"),
+            )
+
+        least_n = F.least(F.col("__n_a"), F.col("__n_b"))
+        out = (
+            cand.join(side("a"), "doc_a")
+            .join(side("b"), "doc_b")
             .filter(
                 F.col("i_rare") + F.least(F.col("__c_a"), F.col("__c_b"))
-                >= (threshold - 1e-4) * F.least(F.col("__n_a"), F.col("__n_b"))
+                >= (threshold - 1e-4) * least_n
             )
-            .select("doc_a", "doc_b")
-        )
-        sh_a = sh.select(F.col("doc_id").alias("doc_a"), "g")
-        sh_b = sh.select(F.col("doc_id").alias("doc_b"), "g")
-        inter = (
-            pairs.join(sh_a, "doc_a")
-            .join(sh_b, ["doc_b", "g"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("i"))
-        )
-        na = bound.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-        nb = bound.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
-        out = (
-            inter.join(na, "doc_a")
-            .join(nb, "doc_b")
             .select(
                 "doc_a",
                 "doc_b",
                 F.round(
-                    F.col("i") / F.least(F.col("n_a"), F.col("n_b")), 4
+                    F.size(F.array_intersect("__hs_a", "__hs_b")) / least_n, 4
                 ).alias("containment"),
             )
             .filter(F.col("containment") >= threshold)
         )
-        # materialize the few surviving pairs while docs_hs is cached
-        # (observation metrics ride this same action)
         return out.localCheckpoint(eager=True)
 
 

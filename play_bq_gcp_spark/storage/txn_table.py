@@ -791,9 +791,28 @@ def _overlapping(snap: Snapshot, col: str, lo, hi) -> list[str]:
     timestamps, plain values otherwise), so a raw ``datetime`` bound
     would compare str-vs-datetime (TypeError) — or, under a non-UTC
     driver TZ, compare shifted wall times and silently skip files
-    that contain matching rows."""
-    lo_e = _enc_stat(lo) if lo is not None else None
-    hi_e = _enc_stat(hi) if hi is not None else None
+    that contain matching rows.
+
+    A ``date`` bound fits both column kinds: a DATE column's stats are
+    ISO days, a timestamp column's are UTC-naive instants, and Spark
+    compares a timestamp with a date at that day's local midnight.  The
+    ISO day alone sorts just before its own midnight, so an upper bound
+    ``hi = date(2024, 3, 3)`` would skip a file whose min is exactly
+    ``2024-03-03T00:00:00``.  So each date bound takes the wider of its
+    ISO day and its local midnight through the naive→UTC path: the
+    larger one for ``hi``, the smaller one for ``lo`` (east of UTC the
+    midnight falls on the previous UTC day).  Wider only keeps more
+    files; the residual filter stays exact."""
+    import datetime as _dt
+
+    def enc(v, pick):
+        if isinstance(v, _dt.date) and not isinstance(v, _dt.datetime):
+            midnight = _dt.datetime.combine(v, _dt.time())
+            return pick(_enc_stat(v), _enc_stat(midnight))
+        return _enc_stat(v)
+
+    lo_e = enc(lo, min) if lo is not None else None
+    hi_e = enc(hi, max) if hi is not None else None
 
     def overlaps(f: str) -> bool:
         st = snap.file_stats.get(f, {}).get("cols", {}).get(col)

@@ -1597,6 +1597,84 @@ def test_containment_df_cap_reports_dropped_shingles(spark):
     assert obs2.get["shingles_dropped"] == 0  # auto cap ≥16 drops nothing
 
 
+def _containment_brute_force(rows, threshold, k=3):
+    """All-pairs containment over token-string shingles, the pure-Python
+    twin of ``containment_pairs`` with every shingle indexed: tokens as
+    ``text.tokens`` makes them, k-token shingles, a doc shorter than k
+    tokens is one whole-doc shingle, an empty doc has none.  Rounds as
+    Spark does (HALF_UP on the double's decimal string).  Returns the
+    pairs and each shingle's document frequency."""
+    import re
+    from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
+
+    sets = {}
+    for doc_id, text in rows:
+        toks = [t for t in re.sub("[^a-z0-9 ]", " ", text.lower()).split(" ")
+                if t]
+        if len(toks) >= k:
+            sets[doc_id] = {tuple(toks[i:i + k])
+                            for i in range(len(toks) - k + 1)}
+        else:
+            sets[doc_id] = {tuple(toks)} if toks else set()
+    df = Counter(s for sh in sets.values() for s in sh)
+    out = {}
+    ids = sorted(sets)
+    for x, a in enumerate(ids):
+        for b in ids[x + 1:]:
+            i = len(sets[a] & sets[b])
+            if i == 0:
+                continue
+            c = float(
+                Decimal(repr(i / min(len(sets[a]), len(sets[b])))).quantize(
+                    Decimal("0.0001"), ROUND_HALF_UP
+                )
+            )
+            if c >= threshold:
+                out[(a, b)] = c
+    return out, df
+
+
+@pytest.mark.parametrize("seed,threshold", [(11, 0.8), (12, 0.5), (13, 0.3)])
+def test_containment_pairs_matches_brute_force(spark, seed, threshold):
+    """Differential: with ``max_df`` at least the corpus size every
+    shingle is indexed, so recall is 1.0 and the posting-list
+    candidates plus the array-intersection verify must return exactly
+    the brute-force pairs and values.  The seeded corpus covers
+    posting lists of size 1 and 2, docs shorter than k tokens, exact
+    duplicates, a prefix repost and an empty-text doc."""
+    import random
+
+    from play_bq_gcp_spark.operators.dedup import containment_pairs
+
+    rng = random.Random(seed)
+    vocab = ["alpha", "Beta", "gamma", "delta!", "eps", "zeta", "eta",
+             "theta", "iota", "kappa", "lambda", "mu"]
+    rows = [
+        (7 * i + 3, " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 14))))
+        for i in range(40)
+    ]
+    rows += [
+        (1000, rows[5][1]),                               # exact duplicates
+        (1001, rows[5][1]),
+        (1002, " ".join(rows[9][1].split()[:4]) or "x"),  # prefix repost
+        (1003, ""),                                       # empty text
+        (1004, "alpha"),                                  # shorter than k
+        (1005, "ALPHA beta"),
+        (1006, "alpha, beta."),
+    ]
+    expect, df = _containment_brute_force(rows, threshold)
+    assert {1, 2} <= set(df.values())  # posting lists of size 1 and 2
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        (r.doc_a, r.doc_b): r.containment
+        for r in containment_pairs(
+            docs, threshold=threshold, max_df=len(rows)
+        ).collect()
+    }
+    assert expect and got == expect
+
+
 def test_char_entropy_orders_noise_above_text_above_padding(spark):
     """Entropy separates the three regimes: uniform noise > natural-ish
     text > single-char padding (exactly 0); a 2-char alternation pins

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 from pyspark.sql import functions as F
 
@@ -191,6 +192,63 @@ def newest_execution_id(spark) -> int:
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     runs = spark._jsparkSession.sharedState().statusStore().executionsList()
     return runs.last().executionId() if runs.nonEmpty() else -1
+
+
+def executed_jobs(spark, after: int = -1) -> int:
+    """Number of Spark jobs the SQL executions with id above ``after``
+    ran (every job belongs to exactly one execution)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    runs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    n = 0
+    for i in reversed(range(runs.size())):
+        x = runs.apply(i)
+        if x.executionId() <= after:
+            break
+        n += x.jobs().size()
+    return n
+
+
+def join_keys(plan: str) -> set[str]:
+    """Column names of every join key in a formatted physical plan."""
+    return {
+        k.strip().split("#")[0]
+        for keys in re.findall(r"(?:Left|Right) keys \[\d+\]: \[([^\]]*)\]", plan)
+        for k in keys.split(",")
+    }
+
+
+# Jobs one call (build + collect) of a registry entry may run at
+# sf0.001: the count measured when the row was pinned.  A change that
+# adds an eager action or a query stage fails here; lowering a budget is
+# a one-line diff.
+JOB_BUDGET = {
+    "dedup_containment_governed": 17,
+}
+
+
+def test_job_budget_pinned(spark, sf_dir):
+    from play_bq_gcp_spark import queries as q
+
+    for name, budget in JOB_BUDGET.items():
+        before = newest_execution_id(spark)
+        q.QUERIES[name](spark, sf_dir).collect()
+        got = executed_jobs(spark, after=before)
+        assert got <= budget, f"{name}: {got} jobs > budget {budget}"
+
+
+def test_containment_never_joins_on_shingle_hash(spark, sf_dir):
+    """containment_pairs builds candidates from the df aggregate's
+    posting lists and verifies on the cached hash arrays: no plan it
+    executes may join on the shingle hash ``g``: such a join means the
+    shingle stream is exploded into an index or verify join again."""
+    from play_bq_gcp_spark import queries as q
+
+    before = newest_execution_id(spark)
+    q.QUERIES["dedup_containment_governed"](spark, sf_dir).collect()
+    ran = executed_plans(spark, after=before)
+    keys = join_keys("\n".join(ran))
+    assert {"doc_a", "doc_b"} <= keys  # the verify joins are there
+    assert "g" not in keys
 
 
 def test_embedding_dedup_has_no_nested_loop(spark, sf_dir):

@@ -339,27 +339,32 @@ def test_changes_replay_reproduces_target_version(spark, table):
         assert +base == target, f"replay from v{v_from} diverged"
 
 
-def _land_ts_days(spark, table, hour: int) -> None:
-    """Land days 1-3 of March 2024 as one file each: three rows at
-    ``hour``..``hour + 2``, ids ``day * 100 + i``.  Default INT96
-    parquet timestamps carry no pyarrow-readable footer stats (every
-    file would be kept, proving nothing), so the files land as
-    TIMESTAMP_MICROS."""
-    import datetime as dt
-
+def _land_ts_rows(spark, table, rows) -> None:
+    """Append ``(id, ts)`` rows as one file.  Default INT96 parquet
+    timestamps carry no pyarrow-readable footer stats (every file would
+    be kept, proving nothing), so the file lands as TIMESTAMP_MICROS."""
     from play_bq_gcp_spark.session import scoped_conf
 
     with scoped_conf(
         spark, {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
     ):
-        for day in (1, 2, 3):
-            rows = [(day * 100 + i, dt.datetime(2024, 3, day, hour + i))
-                    for i in range(3)]
-            tt.append(
-                spark.createDataFrame(rows, "id long, ts timestamp")
-                .coalesce(1),
-                table,
-            )
+        tt.append(
+            spark.createDataFrame(rows, "id long, ts timestamp").coalesce(1),
+            table,
+        )
+
+
+def _land_ts_days(spark, table, hour: int) -> None:
+    """Land days 1-3 of March 2024 as one file each: three rows at
+    ``hour``..``hour + 2``, ids ``day * 100 + i``."""
+    import datetime as dt
+
+    for day in (1, 2, 3):
+        _land_ts_rows(
+            spark, table,
+            [(day * 100 + i, dt.datetime(2024, 3, day, hour + i))
+             for i in range(3)],
+        )
 
 
 def _pruned_vs_filter(spark, table, lo, hi):
@@ -382,21 +387,44 @@ def test_read_pruned_timestamp_column(spark, table):
     """Timestamp stats are recorded as UTC-naive ISO strings (the
     ``_enc_stat`` canonicalization), so query-side bounds must enter
     the same domain: a raw datetime bound would compare
-    str-vs-datetime (TypeError).  A ``date`` bound encodes as its ISO
-    day, which sorts just before that day's midnight timestamp; the
-    rows here sit away from midnight.  Pins, for both bound types:
-    pruning actually skips files, and the result equals the unpruned
-    filter."""
+    str-vs-datetime (TypeError).  A ``date`` bound compares at that
+    day's midnight, as Spark does: a fourth file holds one row at
+    exactly 2024-03-03T00:00, which ``hi = date(2024, 3, 3)`` must
+    keep (its ISO day alone sorts before that instant).  Pins, for
+    both bound types: pruning actually skips files, and the result
+    equals the unpruned filter."""
     import datetime as dt
 
     _land_ts_days(spark, table, 6)
-    for lo, hi in [
-        (dt.datetime(2024, 3, 2, 0, 0), dt.datetime(2024, 3, 2, 23, 59)),
-        (dt.date(2024, 3, 2), dt.date(2024, 3, 3)),
+    _land_ts_rows(spark, table, [(399, dt.datetime(2024, 3, 3))])
+    for lo, hi, n_kept, ids in [
+        (dt.datetime(2024, 3, 2, 0, 0), dt.datetime(2024, 3, 2, 23, 59),
+         1, [200, 201, 202]),
+        (dt.date(2024, 3, 2), dt.date(2024, 3, 3), 2, [200, 201, 202, 399]),
     ]:
         n_files, got, expect = _pruned_vs_filter(spark, table, lo, hi)
-        assert n_files == 1, (lo, hi)  # day-1/day-3 files skipped
-        assert got == expect == [200, 201, 202], (lo, hi)
+        assert n_files == n_kept, (lo, hi)  # day-1/day-3 files skipped
+        assert got == expect == ids, (lo, hi)
+
+
+def test_delete_where_date_bound_on_timestamp_column(spark, table):
+    """``delete_where`` prunes with the same ``_overlapping``: a
+    ``date`` bound on a timestamp column must keep the file whose min
+    is exactly that day's midnight, or its matching row survives the
+    delete.  Only that file is rewritten; the others carry."""
+    import datetime as dt
+
+    _land_ts_days(spark, table, 6)
+    _land_ts_rows(spark, table, [(399, dt.datetime(2024, 3, 3))])
+    before = tt.snapshot(table)
+    day = dt.date(2024, 3, 3)
+    s = tt.delete_where(
+        spark, table, "ts >= DATE'2024-03-03' AND ts <= DATE'2024-03-03'",
+        prune_col="ts", lo=day, hi=day,
+    )
+    assert len(set(before.files) & set(s.files)) == 3
+    got = sorted(r.id for r in tt.read(spark, table).collect())
+    assert got == [100, 101, 102, 200, 201, 202, 300, 301, 302]
 
 
 _TZ_CHILD = r"""
@@ -422,10 +450,12 @@ n_files, got, expect = T._pruned_vs_filter(
     spark, path,
     dt.datetime(2024, 3, 2, 0, 0), dt.datetime(2024, 3, 2, 23, 59),
 )
+# date bounds compare at New York midnight, 05:00 UTC
+by_date = T._pruned_vs_filter(spark, path, dt.date(2024, 3, 2), dt.date(2024, 3, 3))
 stats = [tt.snapshot(path).file_stats[f]["cols"].get("ts")
          for f in tt.snapshot(path).files]
 json.dump({"n_files": n_files, "got": got, "expect": expect,
-           "stats": stats}, open(sys.argv[2], "w"))
+           "by_date": by_date, "stats": stats}, open(sys.argv[2], "w"))
 spark.stop()
 """
 
@@ -438,7 +468,9 @@ def test_read_pruned_timestamp_non_utc_tz(tmp_path):
     is the next day in UTC, and prunes on a naive local-day bound.
     Without ``_enc_stat``'s naive->UTC conversion the bound would
     compare as UTC wall time: it would keep day 1's file and skip day
-    2's, losing every matching row."""
+    2's, losing every matching row.  A ``date`` upper bound must
+    likewise widen to New York midnight (05:00 UTC): its ISO day alone
+    sorts before day 2's UTC stats and skipped that file."""
     import json as _json
     import pathlib
     import subprocess
@@ -468,6 +500,10 @@ def test_read_pruned_timestamp_non_utc_tz(tmp_path):
     assert ["2024-03-03T01:00:00", "2024-03-03T03:00:00"] in r["stats"]
     assert r["n_files"] == 1, r
     assert r["got"] == r["expect"] == [200, 201, 202], r
+    # the lower ISO-day bound keeps day 1's file too (conservative)
+    n_files, got, expect = r["by_date"]
+    assert n_files == 2, r
+    assert got == expect == [200, 201, 202], r
 
 
 def test_read_at_version_and_timestamp(spark, table):
