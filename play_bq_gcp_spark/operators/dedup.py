@@ -882,19 +882,22 @@ def containment_pairs(
     with document frequency <= ``max_df`` pair docs — the standard
     containment-search index shape.  Common shingles carry no signal
     and would pair quadratically; rare ones bound each posting list to
-    <= max_df docs.  The df aggregate builds the index in its one
-    shuffle: per shingle it keeps ``df`` and, for ``df <= max_df``
-    only, the sorted posting list (``array_sort(collect_list(doc_id))``),
-    so no materialized index ever holds a common shingle's list.  Each
-    rare list of 2+ docs emits its in-list pairs ``doc_a < doc_b``
-    (``posexplode`` + ``slice`` of the sorted list, no join), and
-    ``groupBy(doc_a, doc_b).count()`` is the pair's shared-rare count
-    ``i_rare``; ``explode`` of the same lists, grouped by doc, is each
-    doc's rare count ``r``.  Verify never re-explodes the shingle
-    stream: the per-doc relation ``bound`` carries the cached hash
-    array ``hs`` into both pair sides, and the exact count is
-    ``size(array_intersect(hs_a, hs_b))`` — ``hs`` is distinct per
-    doc, so that is |A∩B| — over ``n = size(hs)``.
+    <= max_df docs.  One shuffle of the shingle stream by hash builds
+    the index: a window counts each shingle's ``df``, and the aggregate
+    over the same partitioning collects the sorted posting list
+    (``array_sort(collect_list(doc_id))``) from the rows with ``df <=
+    max_df`` only, so no aggregation buffer or materialized index ever
+    holds a common shingle's list (the window buffers a shingle's rows
+    in a spillable row buffer).  Each rare list of 2+ docs emits its
+    in-list pairs ``doc_a < doc_b`` (``posexplode`` + ``slice`` of the
+    sorted list, no join), and ``groupBy(doc_a, doc_b).count()`` is the
+    pair's shared-rare count ``i_rare``; ``explode`` of the same lists,
+    grouped by doc, is each doc's rare count ``r``.  Verify never
+    re-explodes the shingle stream: the candidates that survive the
+    bound prune (below) join the cached hash arrays ``hs`` of both
+    docs, and the exact count is ``size(array_intersect(hs_a, hs_b))``
+    — ``hs`` is distinct per doc, so that is |A∩B| — over ``n =
+    size(hs)``.
 
     Recall: a qualifying pair could in principle share ONLY high-df
     shingles, and on a fixed-vocabulary corpus the BACKGROUND df of a
@@ -921,34 +924,37 @@ def containment_pairs(
     sits on its df<=16 floor (n <= 3200) the only other action is the
     final eager checkpoint of the pairs, whose AQE stages fill the
     ``hs`` cache, then run the df/postings shuffle, the pair and
-    rare-count aggregates, the ``bound`` join and the verify join.
-    Above the floor, the governor first materializes the df/postings
-    aggregate ONCE (executor-side checkpoint, reused by the candidate
-    stage) to read its histogram — proportional to distinct shingles,
-    never to pairs; the final checkpoint then starts from it.
+    rare-count aggregates, the integer bound joins and the two array
+    joins of the survivors.  Above the floor, the governor first
+    materializes the df/postings relation ONCE (executor-side
+    checkpoint, reused by the candidate stage) to read its histogram —
+    proportional to distinct shingles, never to pairs; the final
+    checkpoint then starts from it.
 
-    Scale: shuffles carry 8-byte shingle hashes, integer ids, posting
-    lists of <= max_df ids and the hash arrays of docs that hold a rare
-    shingle; every stage is bounded (df cap, candidate count) — no
-    all-pairs path exists.  Round-8 probe hardening, after the 30x
-    corpus OOMed an 8 GB heap (1348 s / 22 GB shuffle on 32 GB):
+    Scale: the df/postings shuffle carries one (doc id, 8-byte hash)
+    row per shingle occurrence, with no map-side reduction; after it,
+    shuffles carry posting lists of <= max_df ids, integer pair and
+    per-doc counts, and the hash arrays of docs in surviving pairs.
+    Every stage past the df shuffle is bounded (df cap, candidate
+    count) — no all-pairs path exists.  Round-8 probe hardening, after
+    the 30x corpus OOMed an 8 GB heap (1348 s / 22 GB shuffle on
+    32 GB):
 
     * **Upper-bound candidate prune** (exact, not approximate): a
       candidate's full intersection satisfies
       ``|A∩B| <= i_rare + min(common_a, common_b)``, so pairs whose
-      bound cannot reach the threshold are filtered out before the
-      array intersection — at 30x the prune cut wall 12x and shuffle
-      14x with bit-identical output (most candidates share ONE mid-df
-      shingle and die here).  The filter runs after the arrays are
-      joined: pruning first and joining the arrays to the survivors
-      costs one more shuffle of the pairs and was slower at sf0.1
-      (SCALING.md, "Containment from posting lists").
+      bound cannot reach the threshold are filtered out on integer
+      columns before any hash array joins them — at 30x the prune cut
+      wall 12x and shuffle 14x with bit-identical output (most
+      candidates share ONE mid-df shingle and die here).
     * **Candidate-volume governor** (``candidate_budget``): the df
       HISTOGRAM (a bounded driver read) solves the largest cap whose
       kept-shingle pair volume fits a linear-in-corpus budget —
       engaged only when a replicated-structure corpus makes volume
       genuinely quadratic in the cap, and LOUDLY (log + pytest pin).
     """
+    from pyspark.sql import Window
+
     from play_bq_gcp_spark.operators.text import shingle_hashes
 
     auto_mode = max_df == "auto"
@@ -966,19 +972,26 @@ def containment_pairs(
         spread(documents.select("doc_id", "text"))
         .select("doc_id", shingle_hashes("text", k=shingle_k).alias("hs"))
     ) as docs_hs:
+        # df first, posting list second, over the one shuffle by ``g``:
+        # the window counts each shingle's occurrences and the aggregate
+        # (which reuses the window's partitioning, no second exchange)
+        # collects doc ids only from rows within the cap, so no
+        # aggregation buffer ever holds a common shingle's list.  The
+        # window's per-shingle row buffer spills to disk when memory
+        # runs short.
         dfreq = (
             docs_hs.select("doc_id", F.explode("hs").alias("g"))
+            .withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("g")))
             .groupBy("g")
             .agg(
-                F.count(F.lit(1)).alias("df"),
-                F.collect_list("doc_id").alias("docs"),
+                F.max("df").alias("df"),
+                F.array_sort(
+                    F.collect_list(
+                        F.when(F.col("df") <= max_df, F.col("doc_id"))
+                    )
+                ).alias("docs"),
             )
-            .select(
-                "df",
-                F.when(F.col("df") <= max_df, F.array_sort("docs")).alias(
-                    "docs"
-                ),
-            )
+            .select("df", "docs")
         )
         if auto_mode and max_df > 16:
             # Candidate-VOLUME governor (round 8).  The n/200 recall cap
@@ -1052,8 +1065,9 @@ def containment_pairs(
                 ),
             )
         # Candidates straight off the rare posting lists: the list is
-        # sorted, so each doc pairs with the docs after it (doc_a <
-        # doc_b), and the pair's count over all lists is i_rare.
+        # sorted, so each doc pairs with the docs after it, and the pair's
+        # count over all lists is i_rare.  The explicit doc_a < doc_b
+        # drops the self-pair a repeated doc_id would put in one list.
         rare = dfreq.filter(F.col("df") <= max_df).select("docs")
         cand = (
             rare.filter(F.size("docs") >= 2)
@@ -1064,6 +1078,7 @@ def containment_pairs(
                     F.slice("docs", F.col("pos") + 2, F.size("docs"))
                 ).alias("doc_b"),
             )
+            .filter(F.col("doc_a") < F.col("doc_b"))
             .groupBy("doc_a", "doc_b")
             .agg(F.count(F.lit(1)).alias("i_rare"))
         )
@@ -1077,18 +1092,24 @@ def containment_pairs(
         # with common_x = n_x - r_x, and a pair whose bound cannot reach
         # the threshold never verifies (the 1e-4 slack covers the 4-dp
         # output round).  Every candidate doc holds a rare shingle, so
-        # the inner join keeps all of them.  ``hs`` rides along into the
-        # verify: pruning before joining the arrays was slower.
-        bound = docs_hs.join(n_rare, "doc_id").select(
-            "doc_id", F.size("hs").cast("long").alias("n"), "r", "hs"
-        )
+        # the inner join keeps all of them.  The prune reads integer
+        # columns only; the ``hs`` arrays join the survivors, so the
+        # candidate volume never carries them (SCALING.md, "Containment
+        # from posting lists").
+        bound = docs_hs.select(
+            "doc_id", F.size("hs").cast("long").alias("n")
+        ).join(n_rare, "doc_id")
 
         def side(x: str) -> DataFrame:
             return bound.select(
                 F.col("doc_id").alias(f"doc_{x}"),
                 F.col("n").alias(f"__n_{x}"),
                 (F.col("n") - F.col("r")).alias(f"__c_{x}"),
-                F.col("hs").alias(f"__hs_{x}"),
+            )
+
+        def arrays(x: str) -> DataFrame:
+            return docs_hs.select(
+                F.col("doc_id").alias(f"doc_{x}"), F.col("hs").alias(f"__hs_{x}")
             )
 
         least_n = F.least(F.col("__n_a"), F.col("__n_b"))
@@ -1099,6 +1120,8 @@ def containment_pairs(
                 F.col("i_rare") + F.least(F.col("__c_a"), F.col("__c_b"))
                 >= (threshold - 1e-4) * least_n
             )
+            .join(arrays("a"), "doc_a")
+            .join(arrays("b"), "doc_b")
             .select(
                 "doc_a",
                 "doc_b",

@@ -1675,6 +1675,26 @@ def test_containment_pairs_matches_brute_force(spark, seed, threshold):
     assert expect and got == expect
 
 
+def test_containment_pairs_repeated_doc_id_pairs_no_doc_with_itself(spark):
+    """A doc_id that appears twice puts the same id twice in a posting
+    list; the candidate stage must not pair the doc with itself.  Here
+    "alpha beta gamma" sits above the cap (df 5 > 3), so doc 5's rare
+    count stays small enough for the self-pair to pass the bound prune
+    and verify at containment 1.0 if the candidate stage emitted it."""
+    from play_bq_gcp_spark.operators.dedup import containment_pairs
+
+    rows = [
+        (5, "alpha beta gamma delta"),
+        (5, "alpha beta gamma delta"),
+        (7, "alpha beta gamma delta eps"),
+        (11, "alpha beta gamma kappa"),
+        (13, "alpha beta gamma lambda"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = containment_pairs(docs, threshold=0.5, max_df=3).collect()
+    assert {(r.doc_a, r.doc_b) for r in got} == {(5, 7)}
+
+
 def test_char_entropy_orders_noise_above_text_above_padding(spark):
     """Entropy separates the three regimes: uniform noise > natural-ish
     text > single-char padding (exactly 0); a 2-char alternation pins
