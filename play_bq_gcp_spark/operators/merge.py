@@ -16,7 +16,7 @@ that is actually an aggregate over a 100 TB fact table (e.g. per-key
 order totals) is never force-broadcast into driver/executor OOM.
 The write side does not rewrite the whole table either:
 ``storage.txn_table.merge_into`` (the daily dimension merge of
-``plans.pipeline.TxnWarehouse`` and the streaming merge sink in
+``plans.pipeline.TxnWarehouse`` and the additive streaming sink in
 ``streaming.txn_sink``) rewrites only the base files whose key range
 overlaps the source's and commits them as one atomic manifest.  These
 DataFrame-level merges are the plans that commit lands.

@@ -77,8 +77,9 @@ def streaming_session_windows(spark: SparkSession, sf: str) -> DataFrame:
     """,
 )
 def streaming_foreach_batch_merge(spark: SparkSession, sf: str) -> DataFrame:
-    """foreachBatch append+merge into a parquet state table — the
-    streaming restatement of the reference's daily upsert."""
+    """foreachBatch append+merge into a transactional state table,
+    exactly once per batch id (streaming/txn_sink.py) — the streaming
+    restatement of the reference's daily upsert."""
     from play_bq_gcp_spark.streaming.daily import foreach_batch_user_stats
 
     return foreach_batch_user_stats(spark, sf)

@@ -359,7 +359,8 @@ def dedup_semantic_semdedup(spark: SparkSession, sf: str) -> DataFrame:
 def streaming_countmin_merge(spark: SparkSession, sf: str) -> DataFrame:
     """Count-Min sketch maintained across micro-batches
     (streaming/daily.py:countmin_stream_merge): each batch's d×w
-    counter table merges into parquet state by summing on (row, col).
+    counter table merges into a transactional state table by summing
+    on (row, col), exactly once per batch id (streaming/txn_sink.py).
     Because the merge is exact addition, the streamed sketch IS the
     batch sketch — so the oracle is the plain batch CMS replay over
     events user_ids, and the differential asserts streaming-vs-batch

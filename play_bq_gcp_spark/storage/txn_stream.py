@@ -7,7 +7,8 @@ immutable — which makes table versions perfect streaming offsets (the
 same design as the public Delta/Iceberg streaming sources).  Each
 micro-batch reads the data files added by versions (start, end]; a
 recovery replays from the checkpointed version, so the source is
-exactly-once end-to-end when paired with ``streaming/txn_sink``.
+exactly-once end-to-end when paired with a batch-id-tagged sink such
+as ``streaming/txn_sink.exactly_once_merge``.
 
 Spark 4 Python Data Source streaming API — the FULL
 ``DataSourceStreamReader``: the driver only plans (``latestOffset`` +

@@ -18,6 +18,8 @@ sinks are parquet/Kafka via ``foreachBatch``.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from play_bq_gcp_spark.catalog import (
@@ -27,10 +29,12 @@ from play_bq_gcp_spark.catalog import (
     table_path,
 )
 from play_bq_gcp_spark.scratch import scratch_dir
+from play_bq_gcp_spark.storage import txn_table as tt
 from play_bq_gcp_spark.streaming.available_now import (
     STATE_CONF,
     run_available_now,
 )
+from play_bq_gcp_spark.streaming.txn_sink import exactly_once_merge
 
 
 _STREAM_DIRS: dict[str, str] = {}
@@ -68,40 +72,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(table_path(sf_dir, "events")).schema
     raw = spark.readStream.schema(schema).parquet(_as_stream_dir(sf_dir))
     return normalize_nanos_ts(raw, ("ts",))
-
-
-def windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour event-time windows per event_type (complete mode
-    → every window emitted, deterministic for the oracle)."""
-    ev = read_events_stream(spark, sf_dir)
-    agg = (
-        ev.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-    )
-    out = run_available_now(agg, "complete", STATE_CONF)
-    return out.select(
-        F.col("w.start").alias("window_start"), "event_type", "n", "total_value"
-    )
-
-
-def deduped_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stateful streaming dedup: the stream unioned with itself (every
-    event twice) → dropDuplicatesWithinWatermark on event_id restores
-    exactly-once rows.  Returns per-type counts of the deduped stream."""
-    a = read_events_stream(spark, sf_dir)
-    b = read_events_stream(spark, sf_dir)
-    doubled = a.unionByName(b)
-    deduped = doubled.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-    out = run_available_now(deduped, "append", STATE_CONF)
-    return out.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).orderBy(
-        "event_type"
-    )
 
 
 def windowed_deduped_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -379,50 +349,33 @@ def session_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def merge_user_stats(state_path: str, batch_df: DataFrame, epoch_id: int) -> None:
+    """Add one micro-batch of events into the per-user totals table:
+    one ``(user_id, 1, value)`` row per event, summed by the
+    exactly-once sink into ``n_events`` and ``total_value``."""
+    batch = batch_df.select(
+        "user_id",
+        F.lit(1).cast("long").alias("n_events"),
+        F.col("value").alias("total_value"),
+    )
+    exactly_once_merge(state_path, ["user_id"], ["n_events", "total_value"])(
+        batch, epoch_id
+    )
+
+
 def foreach_batch_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's append+merge restated under ``foreachBatch``:
-    each micro-batch's per-user aggregate is merged (sum-accumulate)
-    into a parquet state table — the streaming twin of the daily
-    pipeline's upsert (main.py:256-287)."""
+    each micro-batch's per-user counts and value sums are added into a
+    transactional state table (``merge_user_stats``) — the streaming
+    twin of the daily pipeline's upsert (main.py:256-287), exactly
+    once per batch id."""
     import os
 
-    state_dir = scratch_dir("user_stats_")
-    state_path = os.path.join(state_dir, "user_stats")
+    state_path = os.path.join(scratch_dir("user_stats_"), "user_stats")
     ev = read_events_stream(spark, sf_dir)
-
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_agg = batch_df.groupBy("user_id").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("total_value"),
-        )
-        if os.path.isdir(state_path):
-            old = spark.read.parquet(state_path)
-            merged = (
-                old.withColumnRenamed("n_events", "old_n")
-                .withColumnRenamed("total_value", "old_v")
-                .join(batch_agg, "user_id", "full_outer")
-                .select(
-                    "user_id",
-                    (
-                        F.coalesce(F.col("old_n"), F.lit(0))
-                        + F.coalesce(F.col("n_events"), F.lit(0))
-                    ).alias("n_events"),
-                    (
-                        F.coalesce(F.col("old_v"), F.lit(0.0))
-                        + F.coalesce(F.col("total_value"), F.lit(0.0))
-                    ).alias("total_value"),
-                )
-            )
-            merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-                state_path
-            )
-        else:
-            batch_agg.write.mode("overwrite").parquet(state_path)
-
-    run_available_now(ev, merge_batch)
-
+    run_available_now(ev, partial(merge_user_stats, state_path))
     return (
-        spark.read.parquet(state_path)
+        tt.read(spark, state_path)
         .withColumn("total_value", F.round("total_value", 4))
         .orderBy("user_id")
     )
@@ -431,46 +384,24 @@ def foreach_batch_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def merge_cms_state(
     spark: SparkSession, state_path: str, batch_df: DataFrame, epoch_id: int
 ) -> None:
-    """Fold one micro-batch's CMS into parquet sketch state,
-    idempotently: state carries the max merged epoch_id, and a
-    re-delivered epoch (foreachBatch is at-least-once after a crash)
-    is skipped instead of double-counted — the additive merge alone is
-    NOT idempotent, so the guard is load-bearing."""
-    import os
-
+    """Fold one micro-batch's d×w CMS into the sketch state table: the
+    exactly-once sink adds its counters on ``(row, col)`` and skips a
+    re-delivered epoch (foreachBatch is at-least-once after a crash,
+    and the additive merge alone would double-count it)."""
     from play_bq_gcp_spark.operators.aggregates import cms_table
 
-    batch_sketch = cms_table(
+    sketch = cms_table(
         batch_df.select(F.col("user_id").cast("string").alias("tok"))
-    ).withColumn("epoch", F.lit(int(epoch_id)).cast("long"))
-    if os.path.isdir(state_path):
-        old = spark.read.parquet(state_path)
-        # max(epoch) is NULL (Python None) when a prior empty
-        # micro-batch wrote a zero-row state file — treat as "nothing
-        # merged yet", not a crash ('>=' on NoneType)
-        last = old.agg(F.max("epoch")).first()[0]
-        if last is not None and last >= epoch_id:
-            return
-        merged = (
-            old.unionByName(batch_sketch)
-            .groupBy("row", "col")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                F.max("epoch").alias("epoch"),
-            )
-        )
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            state_path
-        )
-    else:
-        batch_sketch.write.mode("overwrite").parquet(state_path)
+    )
+    exactly_once_merge(state_path, ["row", "col"], ["cnt"])(sketch, epoch_id)
 
 
 def countmin_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch maintained across micro-batches: each batch
-    builds its own d×w counter table (bounded partial agg) and merges
-    it into a parquet sketch state by summing counters on (row, col) —
-    the linear-sketch property exercised end-to-end under streaming.
+    builds its own d×w counter table (bounded partial agg) and
+    ``merge_cms_state`` adds it into a transactional sketch table by
+    summing counters on (row, col) — the linear-sketch property
+    exercised end-to-end under streaming.
 
     Because the merge is exact addition, the final streamed sketch is
     IDENTICAL to the batch-built sketch, so the entry's audit (top-20
@@ -485,17 +416,15 @@ def countmin_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``foreachBatch`` is AT-LEAST-once: after a crash the restarted
     query re-delivers the last unacknowledged epoch, and a plain
     re-merge would double-count it (the sketch merge is additive, not
-    idempotent).  The epoch guard makes the merge idempotent: state
-    carries the last merged epoch_id and a re-delivered epoch is
-    skipped — the txn-sink discipline (streaming/txn_sink.py) applied
-    to linear-sketch state."""
+    idempotent).  The sink (streaming/txn_sink.py) commits each epoch's
+    counters and its id in one manifest and skips an id it has already
+    committed."""
     import os
 
     from play_bq_gcp_spark.operators.aggregates import cms_probe
     from play_bq_gcp_spark.streaming.stateful import _chunked_events_dir
 
-    state_dir = scratch_dir("cms_state_")
-    state_path = os.path.join(state_dir, "cms")
+    state_path = os.path.join(scratch_dir("cms_state_"), "cms")
     chunk_dir = _chunked_events_dir(spark, sf_dir, 4)
     schema = spark.read.parquet(chunk_dir).schema
     ev = (
@@ -503,13 +432,9 @@ def countmin_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(chunk_dir)
     )
+    run_available_now(ev, partial(merge_cms_state, spark, state_path))
 
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_cms_state(spark, state_path, batch_df, epoch_id)
-
-    run_available_now(ev, merge_batch)
-
-    sketch = spark.read.parquet(state_path)
+    sketch = tt.read(spark, state_path)
     toks = read_table(spark, sf_dir, "events").select(
         F.col("user_id").cast("string").alias("tok")
     )

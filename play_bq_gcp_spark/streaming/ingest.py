@@ -11,10 +11,10 @@ is what makes the whole stream differentially checkable against an
 unrolled SQL restatement.
 
 The index appends here are plain parquet (fresh work dir per run, run
-driven to completion with AvailableNow, so replays can't interleave);
-the exactly-once variant of the same pattern — batch-id-tagged atomic
-commits that make at-least-once replays idempotent — is
-``streaming/txn_sink.py``.
+driven to completion with AvailableNow, so replays can't interleave).
+The package's keyed streaming state tables instead commit through
+``streaming/txn_sink.py``, whose batch-id-tagged atomic commits make
+at-least-once replays idempotent.
 """
 
 from __future__ import annotations

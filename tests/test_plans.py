@@ -217,23 +217,39 @@ def join_keys(plan: str) -> set[str]:
     }
 
 
-# Jobs one call (build + collect) of a registry entry may run at
-# sf0.001: the count measured when the row was pinned.  A change that
-# adds an eager action or a query stage fails here; lowering a budget is
-# a one-line diff.
+def executed_shuffles(plans: list[str]) -> int:
+    """Shuffles the executions ran: each one is a ``ShuffleQueryStage``
+    of an AQE final plan.  The formatted plan lists every node once
+    (a cached relation's own plan included) and an initial plan holds
+    no stages, so counting the stage headers counts each shuffle once."""
+    return sum(
+        len(re.findall(r"^\(\d+\) ShuffleQueryStage", p, re.M)) for p in plans
+    )
+
+
+# Jobs and shuffles one call (build + collect) of a registry entry may
+# run at sf0.001, read from the status store — what ran, including the
+# work behind an eager checkpoint, which the returned DataFrame's plan
+# cannot show.  Each row is the count measured when it was pinned.  A
+# change that adds an eager action, a query stage or a shuffle fails
+# here; lowering a budget is a one-line diff.
 JOB_BUDGET = {
-    "dedup_containment_governed": 19,
+    # name: (jobs, shuffles)
+    "dedup_containment_governed": (19, 8),
+    "dedup_containment_pairs": (26, 9),
 }
 
 
 def test_job_budget_pinned(spark, sf_dir):
     from play_bq_gcp_spark import queries as q
 
-    for name, budget in JOB_BUDGET.items():
+    for name, (jobs, shuffles) in JOB_BUDGET.items():
         before = newest_execution_id(spark)
         q.QUERIES[name](spark, sf_dir).collect()
         got = executed_jobs(spark, after=before)
-        assert got <= budget, f"{name}: {got} jobs > budget {budget}"
+        assert got <= jobs, f"{name}: {got} jobs > budget {jobs}"
+        got = executed_shuffles(executed_plans(spark, after=before))
+        assert got <= shuffles, f"{name}: {got} shuffles > budget {shuffles}"
 
 
 def test_containment_never_joins_on_shingle_hash(spark, sf_dir):
@@ -476,13 +492,9 @@ def test_shuffle_budget_pinned(spark, sf_dir):
         "trend_daily_revenue": 3,         # day rollup + co-moments + order
         "q3_shipping_priority": 3,
         "quality_expectations_orders": 2, # one wide agg + order
-        # round-5 additions (pinned at observed counts, sf0.001):
-        # r8 re-pin 13 -> 25: the upper-bound candidate prune adds the
-        # per-pair rare-count agg plus bound/stat joins — every added
-        # exchange moves (doc_id, long) or (pair, long) rows, and they
-        # BUY the removal of the 22 GB verify explosion at 30x
-        # (SCALING.md round-8 containment section)
-        "dedup_containment_pairs": 25,
+        # round-5 additions (pinned at observed counts, sf0.001;
+        # dedup_containment_pairs checkpoints eagerly, so its shuffles
+        # are pinned from what ran, in JOB_BUDGET):
         "text_boilerplate_spans": 4,      # span hash agg + df threshold + order
         "events_ewma_daily": 6,           # daily rollup + rn window + span self-join
         "text_lang_confusion_matrix": 3,  # predicted×actual groupBy + order
@@ -521,36 +533,25 @@ def test_shuffle_budget_pinned(spark, sf_dir):
         assert got <= budget, f"{name}: {got} Exchanges > budget {budget}"
 
 
-def test_cms_merge_batch_plan_shuffle_budget(spark, sf_dir):
+def test_cms_merge_batch_plan_shuffle_budget(spark, tmp_path):
     """The streaming CMS merge (streaming/daily.py:merge_cms_state)
     can't be plan-pinned through the registry (foreachBatch plans live
-    inside the micro-batch), so pin its two batch-side shapes directly:
-    the per-batch sketch build is ONE bounded shuffle (d×w counter
-    rows), and the state merge (union + re-sum on (row, col)) adds
-    exactly one more — state stays ≤ d·w rows however many batches
-    land, so neither exchange grows with data."""
-    from pyspark.sql import functions as F
+    inside the micro-batch), so pin what two merges into a fresh state
+    table execute: the first lands the batch sketch (ONE bounded
+    shuffle of d×w counter rows), the second adds a batch into the
+    stored counters (the same shuffle, once per merge leg).  State stays
+    ≤ d·w rows however many batches land, so the count must not grow
+    with the batch size."""
+    from play_bq_gcp_spark.streaming import daily
 
-    from play_bq_gcp_spark.catalog import read_table
-    from play_bq_gcp_spark.operators.aggregates import cms_table
-
-    ev = read_table(spark, sf_dir, "events")
-    batch = cms_table(
-        ev.select(F.col("user_id").cast("string").alias("tok"))
-    ).withColumn("epoch", F.lit(0).cast("long"))
-    merged = (
-        batch.unionByName(batch)
-        .groupBy("row", "col")
-        .agg(F.sum("cnt").alias("cnt"), F.max("epoch").alias("epoch"))
-    )
-    n_batch = (
-        batch._jdf.queryExecution().executedPlan().toString().count("Exchange")
-    )
-    n_merged = (
-        merged._jdf.queryExecution().executedPlan().toString().count("Exchange")
-    )
-    assert n_batch <= 1, f"cms batch sketch: {n_batch} Exchanges > 1"
-    assert n_merged <= 2, f"cms state merge: {n_merged} Exchanges > 2"
+    for n in (10, 50_000):
+        state = str(tmp_path / f"cms_{n}")
+        batch = spark.range(n).selectExpr("id % 997 AS user_id")
+        before = newest_execution_id(spark)
+        daily.merge_cms_state(spark, state, batch, 0)
+        daily.merge_cms_state(spark, state, batch, 1)
+        got = executed_shuffles(executed_plans(spark, after=before))
+        assert got <= 3, f"cms merge of {n} rows: {got} shuffles > 3"
 
 
 def test_salted_join_splits_zipf_hot_key(spark):

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from play_bq_gcp_spark.catalog import read_table
@@ -7,13 +8,15 @@ from play_bq_gcp_spark.streaming import daily
 
 
 def test_windowed_counts_total(spark, sf_dir):
-    out = daily.windowed_counts(spark, sf_dir)
+    out = daily.windowed_deduped_counts(spark, sf_dir)
     batch_total = read_table(spark, sf_dir, "events").count()
     assert out.agg(F.sum("n")).first()[0] == batch_total
 
 
 def test_dedup_restores_exactly_once(spark, sf_dir):
-    out = daily.deduped_counts(spark, sf_dir)
+    out = daily.windowed_deduped_counts(spark, sf_dir).groupBy("event_type").agg(
+        F.sum("n").alias("n")
+    )
     batch = (
         read_table(spark, sf_dir, "events")
         .groupBy("event_type")
@@ -530,7 +533,7 @@ def test_stream_source_reads_directory_shaped_tables(spark, tmp_path, sf_dir):
     # write as a MULTI-FILE directory (the at-scale shape)
     src.repartition(4).write.parquet(f"{d}/events.parquet")
 
-    streamed = daily.windowed_counts(spark, d)
+    streamed = daily.windowed_deduped_counts(spark, d)
     batch = (
         src.groupBy(
             F.window("ts", "1 hour").alias("w"), "event_type"
@@ -663,7 +666,7 @@ def test_cms_merge_epoch_guard_is_idempotent(spark, tmp_path):
     NOT double-count (the additive sketch merge alone would).  Merge
     epoch 0, then epoch 1, then REPLAY epoch 1 — state must equal the
     two-epoch merge exactly; a genuinely new epoch still merges."""
-    import os
+    from play_bq_gcp_spark.storage import txn_table as tt
 
     state = str(tmp_path / "cms_state")
     b0 = spark.createDataFrame([(1,), (2,)], "user_id long")
@@ -672,7 +675,7 @@ def test_cms_merge_epoch_guard_is_idempotent(spark, tmp_path):
     def cells():
         return {
             (r.row, r.col): r.cnt
-            for r in spark.read.parquet(state).collect()
+            for r in tt.read(spark, state).collect()
         }
 
     daily.merge_cms_state(spark, state, b0, 0)
@@ -682,7 +685,106 @@ def test_cms_merge_epoch_guard_is_idempotent(spark, tmp_path):
     assert cells() == after_two
     daily.merge_cms_state(spark, state, b1, 2)  # genuinely new epoch
     assert sum(cells().values()) == sum(after_two.values()) + 2 * 4
-    assert os.path.isdir(state)
+
+
+def _crash_after_batch_1_then_restart(spark, sf_dir, tmp_path, sink):
+    """Drive ``sink(batch_df, batch_id)`` over the 4-chunk events
+    stream (one file per micro-batch, durable checkpoint).  The first
+    run dies after batch 1's commit and before the engine records the
+    batch; the restart from the same checkpoint re-delivers batch 1
+    and runs the rest.  Returns the chunked source directory."""
+    import os
+
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from play_bq_gcp_spark.streaming.available_now import run_available_now
+    from play_bq_gcp_spark.streaming.stateful import _chunked_events_dir
+
+    chunk_dir = _chunked_events_dir(spark, sf_dir, 4)
+    schema = spark.read.parquet(chunk_dir).schema
+    ckpt = str(tmp_path / "ckpt")
+    crash_flag = str(tmp_path / "crashed_once")
+
+    def crashy(batch_df, batch_id):
+        sink(batch_df, batch_id)
+        if batch_id == 1 and not os.path.exists(crash_flag):
+            open(crash_flag, "w").close()
+            raise RuntimeError("injected crash after commit, before ack")
+
+    def run():
+        ev = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(chunk_dir)
+        )
+        run_available_now(ev, crashy, checkpoint=ckpt)
+
+    with pytest.raises(StreamingQueryException):
+        run()
+    assert os.path.exists(crash_flag)
+    run()
+    return chunk_dir
+
+
+def _committed_batch_ids(state: str) -> list[int]:
+    from play_bq_gcp_spark.storage import txn_table as tt
+    from play_bq_gcp_spark.streaming.txn_sink import BATCH_KEY
+
+    return [s.meta[BATCH_KEY] for s in tt.history(state) if BATCH_KEY in s.meta]
+
+
+def test_user_stats_sink_exactly_once_across_crash_replay(
+    spark, sf_dir, tmp_path
+):
+    """The registry's foreachBatch user-stats sink under a crash
+    between batch 1's commit and its ack: the replayed batch 1 is
+    skipped, so the final totals equal the batch GROUP BY."""
+    from play_bq_gcp_spark.storage import txn_table as tt
+
+    state = str(tmp_path / "user_stats")
+    chunk_dir = _crash_after_batch_1_then_restart(
+        spark, sf_dir, tmp_path,
+        lambda b, i: daily.merge_user_stats(state, b, i),
+    )
+    want = {
+        r.user_id: (r.n, r.v)
+        for r in spark.read.parquet(chunk_dir).groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n"), F.sum("value").alias("v")
+        ).collect()
+    }
+    got = {
+        r.user_id: (r.n_events, r.total_value)
+        for r in tt.read(spark, state).collect()
+    }
+    assert got.keys() == want.keys()
+    for u, (n, v) in want.items():
+        assert got[u] == (n, pytest.approx(v, rel=1e-12, abs=1e-9)), u
+    assert _committed_batch_ids(state) == [0, 1, 2, 3]  # batch 1 once
+
+
+def test_cms_sink_exactly_once_across_crash_replay(spark, sf_dir, tmp_path):
+    """The registry's streaming Count-Min sink under a crash between
+    batch 1's commit and its ack: the final sketch equals the batch
+    sketch cell for cell."""
+    from play_bq_gcp_spark.operators.aggregates import cms_table
+    from play_bq_gcp_spark.storage import txn_table as tt
+
+    state = str(tmp_path / "cms")
+    chunk_dir = _crash_after_batch_1_then_restart(
+        spark, sf_dir, tmp_path,
+        lambda b, i: daily.merge_cms_state(spark, state, b, i),
+    )
+    want = {
+        (r.row, r.col): r.cnt
+        for r in cms_table(
+            spark.read.parquet(chunk_dir).select(
+                F.col("user_id").cast("string").alias("tok")
+            )
+        ).collect()
+    }
+    got = {(r.row, r.col): r.cnt for r in tt.read(spark, state).collect()}
+    assert got == want
+    assert _committed_batch_ids(state) == [0, 1, 2, 3]  # batch 1 once
 
 
 def test_funnel_fsm_every_transition_hand_corpus(spark, tmp_path):
