@@ -78,6 +78,23 @@ def test_merge_replay_is_skipped(spark, table):
     assert totals(spark, table) == after_two == {0: (36,), 1: (24,), 2: (30,)}
 
 
+@pytest.mark.parametrize("keys", [["k"], ["k", "j"]])
+def test_merge_sink_empty_batches(spark, tmp_path, keys):
+    """An empty micro-batch commits its id and changes no totals —
+    first into a table with no rows yet, and after rows have landed —
+    for a single key (range-pruned merge) and a composite one."""
+    table = str(tmp_path / "t")
+    fb = exactly_once_merge(table, keys, ["v"])
+    df = spark.range(0, 10).selectExpr("id % 3 AS k", "id % 2 AS j", "id AS v")
+    fb(df.limit(0), 0)
+    fb(df, 1)
+    fb(df.limit(0), 2)
+    want = df.groupBy(*keys).agg(F.sum("v").alias("v")).collect()
+    got = tt.read(spark, table).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert last_committed_batch_id(table) == 2
+
+
 def test_merge_sink_updates_inserts_and_skips_replay(spark, table):
     fb = exactly_once_merge(table, ["k"], ["total"])
 
