@@ -43,7 +43,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # (r14: checkpoint=False plan-view plumbing only on the execution
 # path's signature), dedup_lines_corpus, text_quality_classifier,
 # similarity_ann_lsh_exact / similarity_ann_ivf_exact (r14: the
-# signature_col 63-plane guard sits on their build path).  Then the
+# signature_sql 63-plane guard sits on their build path).  Then the
 # r14-changed entries: knn_join_lsh (dense_rank top-k — one candidate
 # exchange), text_bpe_token_stats (SQL-text train loop, V-derived
 # single-partition iterations), dedup_containment_pairs /

@@ -68,35 +68,6 @@ def tick_sum(tick_col: Column) -> Column:
     return F.sum(tick_col.cast("decimal(38,0)"))
 
 
-def overflow_guard(max_abs_col: str, count_col: str) -> Column:
-    """Exact no-wrap certificate for a LONG tick sum: for ticks of any
-    sign, ``|sum| <= max(|tick|) * n``, so if that product (computed in
-    decimal on the handful of OUTPUT rows — never per input row) stays
-    under 2^63-1, the long accumulation provably never wrapped and the
-    result equals the decimal sum bit-for-bit.
-
-    Why this exists: Spark's hash aggregate keeps its vectorized fast
-    path only while every buffer is primitive — ONE decimal(38,0) sum
-    column drops the whole aggregate off it (measured +55% on q1 at
-    sf0.1, ~0.25 s flat regardless of how many decimal columns follow).
-    Coarse-group money sums therefore come in two modes: guarded LONG
-    (fast path + this certificate; fails LOUDLY via assert_true when a
-    group's volume approaches wrap range) and DECIMAL (``tick_sum`` —
-    linear cost, exact to 1e38; the mode to ship when groups can hold
-    ~1e10+ rows, i.e. the 100 TB global aggregates).  Attach with
-    ``df.filter(overflow_guard(...).isNull())`` — assert_true yields
-    NULL on success, so the filter passes every row and cannot be
-    pruned."""
-    bound = F.col(max_abs_col).cast("decimal(38,0)") * F.col(count_col)
-    return F.assert_true(
-        (F.col(max_abs_col).isNull()) | (bound < F.lit(2**63 - 1)),
-        F.lit(
-            "long tick sum overflow risk: max|tick| * rows >= 2^63 — "
-            "rerun with decimal accumulation (money.tick_sum)"
-        ),
-    )
-
-
 def half_up_cents(sum_col: str, tick_scale: int) -> Column:
     """Round a non-negative tick sum to exact cents, half-up, in
     integer arithmetic: ``(S + tick_scale/2) div tick_scale``.

@@ -63,9 +63,9 @@ def bpe_token_count_udf():
     """§2.9 vectorized scalar ``pandas_udf``: BPE-ish unit count per
     text, computed on Arrow-batched pandas Series (the fast Python
     path; row-at-a-time ``F.udf`` is deliberately absent from this
-    engine).  Native twin: ``operators.text.token_stats``'s
-    regexp_extract_all count — the UDF exists to prove the vectorized
-    surface, not because the expression needs Python."""
+    engine).  Native twin: ``operators.text.doc_profile``'s
+    ``n_tokens_bpe`` regexp_extract_all count — the UDF exists to prove
+    the vectorized surface, not because the expression needs Python."""
 
     @F.pandas_udf("long")
     def _count(text: pd.Series) -> pd.Series:

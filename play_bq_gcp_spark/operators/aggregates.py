@@ -45,10 +45,10 @@ def pricing_summary(
     ``exact_mode``: a single decimal(38,0) sum buffer drops the hash
     aggregate off Spark's vectorized fast path (measured +55% wall at
     sf0.1), so the default accumulates LONG ticks on the fast path and
-    certifies no-wrap with ``money.overflow_guard`` on the six output
-    rows (max|tick| × n < 2^63 — exact, loud on failure).  Charge
-    ticks reach ~1.2e11/row, so the guard trips around 1e8 rows per
-    group; for the 100 TB global-aggregate regime pass
+    certifies no-wrap with an inline assert_true on the six output rows
+    (max|tick| × n, and every rounding numerator, < 2^63 — exact, loud
+    on failure).  Charge ticks reach ~1.2e11/row, so the guard trips
+    around 1e8 rows per group; for the 100 TB global-aggregate regime pass
     ``exact_mode="decimal"`` to take the linear decimal path instead
     (bit-identical values, exact to 1e38)."""
     cents = money.ticks("l_extendedprice")
@@ -221,21 +221,6 @@ def stats_percentiles(lineitem: DataFrame) -> DataFrame:
                 "price_per_qty"
             ),
             F.count(F.lit(1)).alias("n"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-def approx_aggregates(lineitem: DataFrame) -> DataFrame:
-    """Sketch-backed aggregates (HLL++ / GK quantiles) — the 100 TB path
-    where exact distinct would shuffle every key.  No SQL oracle (sketch
-    results are engine-specific); the driver records a rows-only check.
-    """
-    return (
-        lineitem.groupBy("l_returnflag")
-        .agg(
-            F.approx_count_distinct("l_orderkey").alias("approx_orders"),
-            F.percentile_approx("l_extendedprice", 0.5).alias("approx_median_price"),
         )
         .orderBy("l_returnflag")
     )

@@ -1,7 +1,7 @@
 """Byte-pair-encoding tokenizer: distributed training + encoding.
 
 The real token counter a training-data pipeline budgets with — the
-``text.token_stats`` BPE-ish regex approximates token counts; this
+``text.doc_profile`` BPE-ish regex approximates token counts; this
 module LEARNS the merge table (classic Sennrich BPE over the corpus's
 word-frequency table) and encodes documents with it.
 

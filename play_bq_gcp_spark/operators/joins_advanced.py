@@ -12,10 +12,8 @@ As-of join: Spark has no native ASOF JOIN.  Two implementations:
   ``pd.merge_asof`` for per-group imperative semantics (tolerance,
   nearest).  Arrow-batched; use when composition can't express it.
 
-Range/band join: the naive form is a broadcast-nested-loop over an
-inequality predicate — fine when one side is tiny (a literal band
-table).  At scale, bucketize the range key to convert it into an
-equi-join on bucket + residual filter (``range_join_bucketed``).
+Range/band join: a broadcast-nested-loop over an inequality
+predicate — fine when one side is tiny (a literal band table).
 """
 
 from __future__ import annotations
@@ -149,37 +147,6 @@ def full_outer_counts(
         .withColumn(l_cnt, F.coalesce(F.col(l_cnt), F.lit(0)))
         .withColumn(r_cnt, F.coalesce(F.col(r_cnt), F.lit(0)))
     )
-
-
-def range_join_bucketed(
-    facts: DataFrame,
-    ranges: DataFrame,
-    value_col: str,
-    lo_col: str = "lo",
-    hi_col: str = "hi",
-    bucket_width: float = 100_000.0,
-) -> DataFrame:
-    """Range join for when the range side is TOO BIG to broadcast: both
-    sides are tagged with coarse buckets of the range key — each range
-    explodes into every bucket it overlaps, each fact into the single
-    bucket containing its value — turning the non-equi join into a
-    shuffle-partitionable EQUI-join on bucket, with the exact [lo, hi)
-    predicate as a residual filter.  Cost scales with range-span /
-    bucket_width (replication factor of the ranges side), not with
-    |facts| × |ranges|."""
-    w = float(bucket_width)
-    r = ranges.withColumn(
-        "__bucket",
-        F.explode(
-            F.sequence(
-                F.floor(F.col(lo_col) / w).cast("long"),
-                F.floor((F.col(hi_col) - 1e-9) / w).cast("long"),
-            )
-        ),
-    )
-    f = facts.withColumn("__bucket", F.floor(F.col(value_col) / w).cast("long"))
-    cond = (F.col(value_col) >= F.col(lo_col)) & (F.col(value_col) < F.col(hi_col))
-    return f.join(r, "__bucket", "inner").filter(cond).drop("__bucket")
 
 
 def temporal_join(

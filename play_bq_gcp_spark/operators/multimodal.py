@@ -11,12 +11,14 @@ BITMAPINFOHEADER container by hand: bottom-up row order, 4-byte row
 padding, 8-bit palette and 24-bit BGR pixel formats — no codec
 library).  Video decode is REAL for uncompressed AVI (``decode_avi``
 walks the RIFF chunk tree and decodes ``00db`` DIB frame chunks).
-Compressed formats (PNG/JPEG/H.264/...) remain STUBBED
+Compressed video (H.264/...) and compressed BMP remain STUBBED
 (``NotImplementedError``) — those codec libraries are not in this
 container, and a wrong-but-quiet decode would be worse than a loud
-refusal.  Everything around the stubs is real and tested: schema,
-batching, partition behavior, deterministic featurization.  Swapping
-a stub for PIL/pyav is a one-function change.
+refusal; other image/audio bytes take a deterministic raw fallback
+(``decode_image`` / ``decode_audio``).  Everything around the stubs
+is real and tested: schema, batching, partition behavior,
+deterministic featurization.  Swapping a stub for PIL/pyav is a
+one-function change.
 """
 
 from __future__ import annotations
@@ -270,29 +272,6 @@ def decode_avi(payload: bytes):
         trip = raw.reshape(h, w, 3).astype(np.uint16)
         out.append((trip.sum(axis=2) // 3).astype(np.uint8))
     return np.stack(out) if out else np.zeros((0, h, w), dtype=np.uint8)
-
-
-def decode_media(payload: bytes, mime: str):
-    """Dispatch decode by container: REAL for PCM WAV (stdlib ``wave``),
-    uncompressed BMP, and uncompressed AVI video (hand-parsed RIFF/DIB
-    headers); compressed formats raise ``NotImplementedError`` — those
-    codec libraries (PIL, pyav, torchaudio) are deliberately absent
-    from this container, and everything downstream of decode is
-    decoder-agnostic."""
-    if mime == "audio/wav" or (
-        payload[:4] == b"RIFF" and payload[8:12] == b"WAVE"
-    ):
-        return decode_wav(payload)
-    if mime == "video/avi" or (
-        payload[:4] == b"RIFF" and payload[8:12] == b"AVI "
-    ):
-        return decode_avi(payload)
-    if mime == "image/bmp" or payload[:2] == b"BM":
-        return decode_bmp(payload)
-    raise NotImplementedError(
-        f"media decode for {mime!r} requires codec libraries not present "
-        "in this environment"
-    )
 
 
 FEATURE_SCHEMA = "doc_id long, byte_len long, n_chars long, mean_byte double"

@@ -67,7 +67,7 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     # no bit-width cap here: dedup._sign_bucket_keys legitimately draws
     # n_tables×bits planes from one call and folds each table's bits
     # separately — the 63-plane limit applies only where bits fold into
-    # ONE signed long (signature_sql / signature_col, guarded there)
+    # ONE signed long (signature_sql, guarded there)
     rng = np.random.RandomState(seed)
     return rng.randn(n_planes, dim)
 
@@ -79,15 +79,18 @@ EMB_SQL = "CAST(embedding AS ARRAY<DOUBLE>)"
 
 
 def signature_sql(vec_sql_text: str, planes) -> str:
-    """SQL text of ``signature_col`` over a vector given as SQL text.
+    """SQL text of the sign-bit signature of a vector given as SQL
+    text: bit i = (v · plane_i) > 0, folded into one long.  A single
+    bound pass: the vector is evaluated once, the plane dots run inside
+    one ``transform`` over the plane-matrix literal, and the bits fold
+    via ``aggregate`` — one interpreted HOF tree instead of n_planes
+    sibling subtrees (which Catalyst would re-expand per reference).
 
-    Why text (r13 optimization): the Column-built signature costs
+    Why text (r13 optimization): a Column-built signature costs
     ~500 Py4J round-trips per table (nested higher-order functions
     create one JVM call per lambda/node) — profiled at 2.6 s of
     driver-side build per ``lsh_topk`` call (8 tables, 4167 commands).
-    One parsed string per table is ~1 JVM call; the parsed tree — and
-    therefore every value — is identical (same zip_with/aggregate
-    shape, same fold order; only lambda variable names differ)."""
+    One parsed string per table is ~1 JVM call for the same tree."""
     from play_bq_gcp_spark.functions.vector import bind_sql, dot_sql, mat_sql
 
     if len(planes) > 63:
@@ -104,51 +107,6 @@ def signature_sql(vec_sql_text: str, planes) -> str:
         "0L, (accs, xs) -> accs + xs)"
     )
     return bind_sql(vec_sql_text, "vv", body)
-
-
-def signature_col(vec_col, planes: np.ndarray):
-    """Sign-bit signature: bit i = (v · plane_i) > 0, folded into one
-    long.  A single bound pass: the vector is evaluated once, the
-    plane dots run inside one ``transform`` over the plane-matrix
-    literal, and the bits fold via ``aggregate`` — one interpreted HOF
-    tree instead of n_planes sibling subtrees (which Catalyst would
-    re-expand per reference).  Pass the vector as SQL TEXT to build
-    the whole expression in one parse (``signature_sql``) instead of
-    per-node Py4J calls."""
-    if isinstance(vec_col, str):
-        return F.expr(signature_sql(vec_col, planes))
-    from play_bq_gcp_spark.functions.vector import mat_lit
-
-    if len(planes) > 63:
-        # bit weights are 1<<i in ONE signed long: 64+ planes would
-        # overflow the literal with no hint at the cause (r13 ADVICE)
-        raise ValueError(
-            f"signature_col: {len(planes)} planes exceed the 63-bit "
-            "signature domain (bit weights are 1<<i in one signed long)"
-        )
-    planes_lit = mat_lit(planes)
-    pows = F.array(
-        *[F.lit(1 << i).cast("long") for i in range(len(planes))]
-    )
-    return bind(
-        vec_col,
-        lambda vv: F.aggregate(
-            F.zip_with(
-                F.transform(
-                    planes_lit,
-                    lambda p: F.aggregate(
-                        F.zip_with(vv, p, lambda x, y: x * y),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    ),
-                ),
-                pows,
-                lambda d, w: F.when(d > 0, w).otherwise(F.lit(0).cast("long")),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ),
-    )
 
 
 def _sims_sql(vec_sql_text: str, cents: list) -> str:

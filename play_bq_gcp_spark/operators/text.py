@@ -100,33 +100,6 @@ def bind(arr: Column, f) -> Column:
     return F.element_at(F.transform(F.array(arr), f), 1)
 
 
-def shingles(col: Column | str, k: int = 3) -> Column:
-    """Distinct k-token shingles (Broder w-shingling): contiguous
-    k-grams joined with spaces.  Order-sensitive, so near-dup detection
-    over shingle sets ignores vocabulary overlap and keys on shared
-    *passages* — the standard unit for MinHash text dedup.  Docs
-    shorter than k tokens collapse to one whole-doc shingle.
-
-    Built as k-1 ``zip_with`` passes over shifted slices of the
-    once-bound token array — O(k·n) with cheap per-element work.  (A
-    per-index slice+join formulation is quadratic-ish and interpreted;
-    it measured 30× slower.)"""
-
-    def build(toks: Column) -> Column:
-        m = F.greatest(F.size(toks) - (k - 1), F.lit(1))
-        acc = F.slice(toks, 1, m)
-        for i in range(1, k):
-            # zip_with pads the shorter side with nulls; concat_ws
-            # skips nulls, so a <k-token doc yields its whole text as
-            # one shingle
-            acc = F.zip_with(
-                acc, F.slice(toks, 1 + i, m), lambda x, y: F.concat_ws(" ", x, y)
-            )
-        return F.array_distinct(acc)
-
-    return bind(tokens(col), build)
-
-
 def shingle_hashes(
     col: Column | str, k: int = 3, full_only: bool = False
 ) -> Column:
@@ -159,35 +132,12 @@ def shingle_hashes(
     return bind(F.transform(tokens(col), lambda t: F.xxhash64(t)), build)
 
 
-def token_stats(documents: DataFrame) -> DataFrame:
-    """Per-document token counting: whitespace tokens, BPE-ish units,
-    mean token length."""
-    from play_bq_gcp_spark.catalog import spread
-
-    documents = spread(documents)
-    toks = tokens("text")
-    return documents.select(
-        "doc_id",
-        F.size(toks).cast("bigint").alias("n_tokens_ws"),
-        F.size(F.regexp_extract_all("text", F.lit(_BPE_RE), 0))
-        .cast("bigint")
-        .alias("n_tokens_bpe"),
-        F.round(
-            F.aggregate(
-                toks, F.lit(0.0), lambda acc, t: acc + F.length(t).cast("double")
-            )
-            / F.greatest(F.size(toks), F.lit(1)).cast("double"),
-            4,
-        ).alias("avg_token_len"),
-    )
-
-
 def quality_columns(toks: Column | None = None) -> dict[str, Column]:
     """The quality-signal expressions as reusable named Columns (over a
     ``text`` column): doc length, punctuation ratio, stopword ratio,
-    composite score.  Shared by ``quality_score`` and inline pipeline
-    stages (pipeline_corpus_clean computes these in the SAME select as
-    the dedup digest so document bodies are scanned exactly once).
+    composite score.  Inline pipeline stages use them
+    (pipeline_corpus_clean computes these in the SAME select as the
+    dedup digest so document bodies are scanned exactly once).
 
     Pass ``toks`` (e.g. a ``bind`` lambda variable over
     ``tokens("text")``) to build every signal from ONE bound token
@@ -226,19 +176,6 @@ def quality_columns(toks: Column | None = None) -> dict[str, Column]:
     }
 
 
-def quality_score(documents: DataFrame) -> DataFrame:
-    """Heuristic quality signals: doc length, punctuation ratio,
-    stopword ratio, and a composite score — the standard cheap filters
-    before expensive dedup/training steps."""
-    from play_bq_gcp_spark.catalog import spread
-
-    documents = spread(documents)
-    cols = quality_columns()
-    return documents.select(
-        "doc_id", *[c.alias(name) for name, c in cols.items()]
-    )
-
-
 def lang_id(documents: DataFrame) -> DataFrame:
     """Heuristic language ID: CJK character presence → zh, else argmax
     of per-language stopword overlap (fixed tie order en>de>fr>es).
@@ -260,20 +197,6 @@ def lang_id(documents: DataFrame) -> DataFrame:
         .otherwise(F.lit("es"))
     )
     return documents.select("doc_id", "lang", pred.alias("pred_lang"))
-
-
-def fingerprint(documents: DataFrame) -> DataFrame:
-    """Deterministic document fingerprints: md5 of the normalized text
-    (exact-dup key) and md5 of the first-8-token shingle (prefix-dup
-    key).  Cheap, portable (same digests in any engine)."""
-    toks = tokens("text")
-    norm = F.array_join(toks, " ")
-    prefix = F.array_join(F.slice(toks, 1, 8), " ")
-    return documents.select(
-        "doc_id",
-        F.md5(norm).alias("text_fp"),
-        F.md5(prefix).alias("prefix_fp"),
-    )
 
 
 def doc_profile(documents: DataFrame) -> DataFrame:

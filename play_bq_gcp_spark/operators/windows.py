@@ -8,8 +8,7 @@ reformulation of the reference's join-based snapshot diff: the
 Scale notes: every window here partitions by a key (user, segment) —
 Spark shuffles once per distinct (partitionBy, orderBy) pair and sorts
 within partitions; avoid windows without PARTITION BY on big data (all
-rows to one task).  Top-k per group via row_number stays fully
-distributed and never materializes the full sort.
+rows to one task).
 """
 
 from __future__ import annotations
@@ -30,21 +29,6 @@ def lag_delta(
     reformulation of the reference's snapshot diff (main.py:197-203)."""
     w = Window.partitionBy(partition_by).orderBy(*order_by)
     return df.withColumn(alias, F.col(value_col) - F.lag(value_col).over(w))
-
-
-def topk_per_group(
-    df: DataFrame,
-    partition_by: str,
-    order_by: Sequence,
-    k: int,
-    rank_alias: str = "rn",
-) -> DataFrame:
-    """Top-k rows per group: row_number ≤ k.  Catalyst's
-    WindowGroupLimit pushes the limit below the sort at scale."""
-    w = Window.partitionBy(partition_by).orderBy(*order_by)
-    return df.withColumn(rank_alias, F.row_number().over(w)).filter(
-        F.col(rank_alias) <= k
-    )
 
 
 def running_sum(

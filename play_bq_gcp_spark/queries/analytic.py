@@ -275,8 +275,7 @@ def agg_approx_sketches(spark: SparkSession, sf: str) -> DataFrame:
     estimate (rsd 0.01) lands within 5% of exact and the GK approx
     median within 2% of the exact median — the oracle expects TRUE, so
     a sketch drifting out of tolerance is a driver-visible red, not a
-    silent rows-only pass.  ``aggregates.approx_aggregates`` remains
-    the raw-sketch surface for users."""
+    silent rows-only pass."""
     return aggregates.approx_sketch_bounds(_t(spark, sf, "lineitem"))
 
 

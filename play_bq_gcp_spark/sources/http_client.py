@@ -18,9 +18,6 @@ visible or testable there.  This module writes the seam down:
   behave identically), ``Retry-After`` honored when the server sends
   one, 429/5xx/transport errors retried, other 4xx raised immediately
   (a 401/404 never heals by retrying).
-* ``paged`` — cursor pagination as a generator: follows ``next`` until
-  the server stops supplying one, with a hard page cap against
-  cursor-loop server bugs.
 
 Scale shape: one ``RestClient`` per *executor task* (each input
 partition of the DataSource fetches its own page range), so the token
@@ -33,7 +30,7 @@ from __future__ import annotations
 import hashlib
 import json
 import time as _time
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 
@@ -199,22 +196,3 @@ class RestClient:
             raise HttpStatusError(resp)  # non-retryable 4xx: fail fast
         raise RetriesExhausted(self.max_attempts, last_exc)
 
-
-def paged(
-    client: RestClient,
-    first_url: str,
-    next_url: Callable[[dict], str | None],
-    max_pages: int = 10_000,
-) -> Iterator[dict]:
-    """Cursor pagination: yield each page's parsed JSON document,
-    following ``next_url(doc)`` until it returns None.  ``max_pages``
-    guards against a server echoing the same cursor forever — hitting
-    it raises rather than silently truncating the scan."""
-    url: str | None = first_url
-    for _ in range(max_pages):
-        if url is None:
-            return
-        doc = client.get(url).json()
-        yield doc
-        url = next_url(doc)
-    raise RuntimeError(f"pagination exceeded {max_pages} pages: cursor loop?")

@@ -1,15 +1,14 @@
 """Spark 4 Python Data Source for the paged external-API scan
 (SURVEY.md §1.1, §2.1 S1).
 
-The reference pulls API pages in a driver-side loop
-(/root/reference/main.py:85-91).  ``scan_records`` (rest_api.py)
-mirrors that shape; THIS module is the scale path: a registered
-``DataSource`` whose reader splits the page range into contiguous
-groups of at most ``BURST`` pages, one group per input partition, so a
-1000-page scan runs as 200 parallel tasks with no driver
-materialization.  Each task fetches its pages in order through the
-full HTTP seam (sources/http_client.py: injected transport,
-token-bucket rate limit, bounded retries with deterministic jitter);
+The reference pulls API pages in a driver-side loop (its main.py:85-91).
+THIS module is the scale path: a registered ``DataSource`` whose reader
+splits the page range into contiguous groups of at most ``BURST``
+pages, one group per input partition, so a 1000-page scan runs as 200
+parallel tasks with no driver materialization.  Each task fetches its
+pages in order through the full HTTP seam (sources/http_client.py:
+injected transport, token-bucket rate limit, bounded retries with
+deterministic jitter);
 this container has no network, so the TRANSPORT is a deterministic
 fake keyed by (seed, page, row) — the client machinery, partitioning,
 schema, and option plumbing are the real thing, and a deployment swaps

@@ -2,20 +2,13 @@
 
 The reference scans a paginated REST API (PSN title stats,
 /root/reference/main.py:85-91) and a nested profile JSON document
-(main.py:319-320).  The engine's adapter is a thin boundary: any
-iterable of records + a declared schema becomes a DataFrame; the
-network client is injected so tests substitute a deterministic fake.
-
-At scale, a REST source is driver-bottlenecked by nature; the adapter
-keeps the ingest honest by materializing straight into a distributed
-DataFrame (the only driver-side loop is over API pages, mirroring the
-reference).  For genuinely large external feeds, land to object
-storage first and scan as files.
+(main.py:319-320).  This module holds the declared schemas of both
+and the nested-document adapter; the paged scan itself is the Spark 4
+DataSource in ``psn_datasource``, which fetches page groups in
+parallel tasks through the ``http_client`` seam.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
@@ -42,25 +35,6 @@ TROPHY_SCHEMA = T.StructType(
         T.StructField("platinum", T.LongType(), True),
     ]
 )
-
-
-def scan_records(
-    spark: SparkSession,
-    fetch_pages: Callable[[], Iterable[list[tuple]]],
-    schema: T.StructType,
-) -> DataFrame:
-    """S1: materialize a paged record iterator into a DataFrame.
-
-    ``fetch_pages`` yields lists of row-tuples (one list per API page);
-    the adapter concatenates pages driver-side — the same shape as the
-    reference's ``for title in client.title_stats()`` loop — then hands
-    Spark a single createDataFrame so everything downstream is lazy and
-    distributed.
-    """
-    rows: list[tuple] = []
-    for page in fetch_pages():
-        rows.extend(page)
-    return spark.createDataFrame(rows, schema)
 
 
 def trophy_document(spark: SparkSession, doc: dict) -> DataFrame:

@@ -748,40 +748,6 @@ def read_at(
     return read(spark, path, version=v)
 
 
-def read_pruned(
-    spark: SparkSession,
-    path: str,
-    col: str,
-    lo=None,
-    hi=None,
-    version: int | None = None,
-) -> DataFrame:
-    """Manifest-level file skipping + exact residual filter: scan only
-    files whose footer [min, max] for ``col`` overlaps [lo, hi], then
-    apply the predicate exactly.  This is the move that matters at
-    100 TB: Spark's own row-group pruning still has to OPEN every file
-    and read its footer, while manifest stats skip files without any
-    I/O at all — planning cost is O(manifest), not O(files-opened).
-    Files with no recorded stats for ``col`` are conservatively kept.
-    Result equals ``read(...).filter(...)`` by construction (asserted
-    in tests)."""
-    from pyspark.sql import functions as F
-
-    snap = snapshot(path, version)
-    keep = _overlapping(snap, col, lo, hi)
-    if not keep:
-        # all files skipped: empty result with the table's real schema
-        base = read(spark, path, version=snap.version)
-        return base.filter(F.lit(False))
-    df = _read_files(spark, path, keep, snap)
-    pred = F.lit(True)
-    if lo is not None:
-        pred = pred & (F.col(col) >= F.lit(lo))
-    if hi is not None:
-        pred = pred & (F.col(col) <= F.lit(hi))
-    return df.filter(pred)
-
-
 def _overlapping(snap: Snapshot, col: str, lo, hi) -> list[str]:
     """Files whose recorded [min, max] for ``col`` may intersect
     [lo, hi]; files without stats are conservatively included.
@@ -884,19 +850,19 @@ def merge_into(
     source row, optionally insert unmatched source rows, commit as ONE
     atomic manifest.
 
-    Copy-on-write is range-pruned when ``key`` is a single column: the
-    source's [min, max] of the key — two values, computed in one tiny
-    aggregate — selects only base files whose footer range overlaps;
+    Copy-on-write is range-pruned: the source's [min, max] of every
+    key column — computed together in one tiny aggregate — selects
+    only base files whose footer ranges overlap on EVERY key column;
     every other file is carried into the new version BY REFERENCE,
     unrewritten.  Pruning is sound for the insert leg too: a file
     skipped by the stats cannot contain any source key, so match
-    detection over the touched files alone is exact.  One interval
-    carries a file only when the source keys are range-local (a day's
+    detection over the touched files alone is exact.  The intervals
+    carry a file only when the source keys are range-local (a day's
     keys in a key-ordered table); scattered keys span every file and
-    rewrite them all.  A source with no non-NULL key (empty, or NULL
-    keys only) matches no base row, so every base file is carried; it
-    lands only its rows, if any, and only with ``insert``.  A
-    composite key is not pruned.  Overwrite-style conflict semantics
+    rewrite them all.  A source with a key column that holds no
+    non-NULL value (empty, or NULL keys only) matches no base row, so
+    every base file is carried; it lands only its rows, if any, and
+    only with ``insert``.  Overwrite-style conflict semantics
     (raises on a racing commit rather than clobbering it); ``meta``
     rides the manifest (e.g. a streaming sink's batch id).
 
@@ -913,18 +879,19 @@ def merge_into(
     keys = [key] if isinstance(key, str) else list(key)
     targets = list(snap.files)
     has_rows = True
-    if len(keys) == 1 and targets:
+    if targets:
         bounds = source.agg(
-            F.min(keys[0]).alias("lo"), F.max(keys[0]).alias("hi"),
-            F.count(F.lit(1)).alias("n"),
+            F.count(F.lit(1)),
+            *[agg(k) for k in keys for agg in (F.min, F.max)],
         ).first()
-        has_rows = bounds["n"] > 0
-        # no non-NULL source key (empty source, or NULL keys only): no
-        # base row can match, so no base file is a target
-        targets = (
-            [] if bounds["lo"] is None
-            else _overlapping(snap, keys[0], bounds["lo"], bounds["hi"])
-        )
+        has_rows = bounds[0] > 0
+        for i, k in enumerate(keys):
+            lo, hi = bounds[1 + 2 * i], bounds[2 + 2 * i]
+            # a key column with no non-NULL source value (empty source,
+            # or NULL keys only): no base row can match, so no base
+            # file is a target
+            keep = set() if lo is None else set(_overlapping(snap, k, lo, hi))
+            targets = [f for f in targets if f in keep]
     untouched = [f for f in snap.files if f not in set(targets)]
 
     from play_bq_gcp_spark.operators.merge import (

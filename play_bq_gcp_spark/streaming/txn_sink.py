@@ -89,6 +89,10 @@ def exactly_once_merge(
                     for c in values
                 ],
             )
+        # merge_into reads its source three times (the key-bounds
+        # aggregate, then the update and insert legs); materialized
+        # once, the batch aggregate and the stored-rows join run once
+        source = source.localCheckpoint(eager=True)
         tt.merge_into(
             spark, path, source, keys, values, insert=True,
             expected_version=base.version, meta={BATCH_KEY: int(batch_id)},

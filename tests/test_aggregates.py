@@ -231,7 +231,7 @@ def test_pricing_summary_overflow_guard_fires(spark):
     """long_guarded mode must FAIL LOUDLY (never wrap silently) when a
     group's volume approaches 2^63: under Spark 4's default ANSI mode
     the accumulation itself raises ARITHMETIC_OVERFLOW, and on
-    ansi-off sessions the money.overflow_guard certificate ("overflow
+    ansi-off sessions pricing_summary's inline certificate ("overflow
     risk") catches the bound — either way the failure names overflow
     and the SAME data succeeds in decimal mode."""
     import pytest
@@ -259,7 +259,7 @@ def test_pricing_summary_guard_certificate_fires_before_wrap(spark):
     corpus where every raw long tick sum still fits int64 (so ANSI's
     ARITHMETIC_OVERFLOW never fires) but a rounding NUMERATOR
     (20000 * sum_price_cents) exceeds 2^63 — only the
-    money.overflow_guard certificate can catch this class, and it must
+    inline certificate in pricing_summary can catch this class, and it must
     fail loudly with its own message, never emit a wrapped average.
     600 rows x $1e10: charge-tick sum 6e18 < 2^63 (no raw overflow),
     numerator 1.2e19 > 2^63 (certificate trips)."""

@@ -15,7 +15,6 @@ from play_bq_gcp_spark.sources.http_client import (
     RetriesExhausted,
     TokenBucket,
     TransportError,
-    paged,
 )
 
 
@@ -130,28 +129,3 @@ def test_client_acquires_token_per_attempt():
     c, _ = _client(t, bucket=bucket, max_attempts=2)
     c.get("https://api.example/a")
     assert len(t.requests) == 2  # both attempts went through the bucket
-
-
-def test_paged_follows_cursor_until_none():
-    t = ScriptedTransport(
-        [
-            _ok({"items": [1, 2], "next": "https://api.example/p2"}),
-            _ok({"items": [3], "next": None}),
-        ]
-    )
-    c, _ = _client(t)
-    docs = list(paged(c, "https://api.example/p1", lambda d: d.get("next")))
-    assert [d["items"] for d in docs] == [[1, 2], [3]]
-    assert [r.url for r in t.requests] == [
-        "https://api.example/p1",
-        "https://api.example/p2",
-    ]
-
-
-def test_paged_raises_on_cursor_loop():
-    t = ScriptedTransport(
-        [_ok({"next": "https://api.example/same"}) for _ in range(10)]
-    )
-    c, _ = _client(t)
-    with pytest.raises(RuntimeError, match="cursor loop"):
-        list(paged(c, "https://api.example/same", lambda d: d["next"], max_pages=5))

@@ -134,16 +134,18 @@ def test_quality_score_ranks_prose_over_noise(spark):
         ],
         "doc_id long, text string",
     )
-    out = {r.doc_id: r.quality for r in text.quality_score(docs).collect()}
+    quality = text.quality_columns()["quality"].alias("quality")
+    out = {r.doc_id: r.quality for r in docs.select("doc_id", quality).collect()}
     assert out[1] > out[2]
     assert out[2] == 0.0 or out[2] < 0.05
 
 
 def test_multimodal_decode_is_stubbed():
-    """Compressed formats still raise: PNG/JPEG genuinely need codec
-    libraries absent from this container (WAV and BMP decode for real)."""
+    """Compressed video still raises: H.264/MP4 genuinely need codec
+    libraries absent from this container (AVI, WAV and BMP decode for
+    real)."""
     with pytest.raises(NotImplementedError):
-        multimodal.decode_media(b"\x89PNGbytes", "image/png")
+        multimodal.decode_video(b"\x00\x00\x00\x18ftypmp42bytes")
 
 
 def test_bmp_roundtrip_8_and_24_bit_with_padding():
@@ -159,8 +161,6 @@ def test_bmp_roundtrip_8_and_24_bit_with_padding():
         out = multimodal.decode_bmp(payload)
         assert out.dtype == np.uint8 and out.shape == (5, 5)
         assert (out == img).all(), f"{bits}-bit roundtrip mismatch"
-        # decode_media dispatches BMP for real now
-        assert (multimodal.decode_media(payload, "image/bmp") == img).all()
         # decode_image falls through to the same real path on magic
         assert (multimodal.decode_image(payload) == img).all()
 
@@ -2157,7 +2157,7 @@ def test_line_dedup_normalization_is_the_dedup_key(spark):
 
 def test_short_doc_whole_shingle_pairs(spark):
     """Docs shorter than the shingle width collapse to ONE whole-doc
-    shingle (operators/text.py shingles/shingle_hashes) — so two
+    shingle (operators/text.py shingle_hashes) — so two
     identical 1-token docs and two identical 2-token docs must pair in
     every shingle-keyed dedup path.  Round-10 short-doc audit: six
     oracles modeled 'short doc => zero shingles' and silently missed

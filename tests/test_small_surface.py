@@ -1,6 +1,6 @@
 """Unit coverage for the small SURVEY.md §2 rows not exercised by the
-pipeline golden test: the S1 page adapter, S4 schema fetch, S9/S10
-DDL, and the scalar edge semantics (F1 vs F1b, F7, F9, F11).
+pipeline golden test: the S4 schema fetch, S9/S10 DDL, and the scalar
+edge semantics (F1 vs F1b, F7, F9, F11).
 """
 
 from __future__ import annotations
@@ -11,17 +11,6 @@ from pyspark.sql import functions as F
 
 from play_bq_gcp_spark import catalog
 from play_bq_gcp_spark.functions import scalar
-from play_bq_gcp_spark.sources.rest_api import GAME_SNAPSHOT_SCHEMA, scan_records
-
-
-def test_scan_records_concatenates_pages(spark):
-    page1 = [("T_1", "A", "i", "cat_x", dt.datetime(2024, 1, 1),
-              dt.datetime(2024, 1, 2), 1, 60.0)]
-    page2 = [("T_2", "B", "i", "cat_y", dt.datetime(2024, 2, 1),
-              dt.datetime(2024, 2, 2), 2, 120.0)]
-    df = scan_records(spark, lambda: iter([page1, page2]), GAME_SNAPSHOT_SCHEMA)
-    assert df.count() == 2
-    assert df.schema == GAME_SNAPSHOT_SCHEMA
 
 
 def test_schema_fetch(spark, sf_dir):

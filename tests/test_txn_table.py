@@ -119,53 +119,85 @@ def test_manifest_stats_recorded_and_rows_from_footers(spark, table):
     assert (lo, hi) == (0, 99)
 
 
-def test_read_pruned_skips_files_and_matches_plain_filter(spark, table):
+def _sql_lit(v) -> str:
+    import datetime as dt
+
+    if isinstance(v, dt.datetime):
+        return f"TIMESTAMP'{v.isoformat(' ')}'"
+    if isinstance(v, dt.date):
+        return f"DATE'{v.isoformat()}'"
+    return repr(v)
+
+
+def _pruned_delete(spark, table, col, lo=None, hi=None):
+    """``delete_where`` of ``col`` within [lo, hi], pruned on ``col``
+    with the same bounds, then rolled back: (files rewritten, files
+    carried, surviving ids, ids of the unpruned complement — what an
+    unpruned read filtered on NOT [lo, hi] keeps)."""
+    terms = [f"{col} >= {_sql_lit(lo)}"] if lo is not None else []
+    terms += [f"{col} <= {_sql_lit(hi)}"] if hi is not None else []
+    cond = " AND ".join(terms)
+    before = tt.snapshot(table)
+    expect = sorted(
+        r.id for r in tt.read(spark, table).filter(f"NOT ({cond})").collect()
+    )
+    s = tt.delete_where(spark, table, cond, prune_col=col, lo=lo, hi=hi)
+    got = sorted(r.id for r in tt.read(spark, table).collect())
+    tt.restore(table, before.version)
+    return (
+        len(set(before.files) - set(s.files)),
+        len(set(before.files) & set(s.files)),
+        got,
+        expect,
+    )
+
+
+def test_delete_where_prunes_files_and_matches_plain_filter(spark, table):
     # three disjoint commits → disjoint id ranges per file set
     tt.append(_df(spark, 0, 100).coalesce(1), table)
     tt.append(_df(spark, 100, 200).coalesce(1), table)
     tt.append(_df(spark, 200, 300).coalesce(1), table)
 
-    pruned = tt.read_pruned(spark, table, "id", lo=120, hi=180)
-    # file skipping proven by the scan's input: only the middle file
-    scanned = {
-        f for f in pruned.inputFiles()
-    }
-    assert len(scanned) == 1
-
-    expect = sorted(
-        r.id
-        for r in tt.read(spark, table)
-        .filter("id >= 120 AND id <= 180")
-        .collect()
+    # file skipping proven by the manifest: only the middle file is
+    # rewritten, the outer two carry by reference
+    rewritten, carried, got, expect = _pruned_delete(
+        spark, table, "id", lo=120, hi=180
     )
-    assert sorted(r.id for r in pruned.collect()) == expect
+    assert (rewritten, carried) == (1, 2)
+    assert got == expect == [i for i in range(300) if not 120 <= i <= 180]
 
-    # fully-out-of-range predicate: zero files, correct (empty) result
-    none = tt.read_pruned(spark, table, "id", lo=10_000)
-    assert none.count() == 0
+    # fully-out-of-range predicate: zero files rewritten, no row lost
+    rewritten, carried, got, expect = _pruned_delete(
+        spark, table, "id", lo=10_000
+    )
+    assert (rewritten, carried) == (0, 3)
+    assert got == expect == list(range(300))
 
 
-def test_read_pruned_keeps_files_without_stats(spark, table, monkeypatch):
-    """A file lacking stats for the predicate column must be scanned,
-    never skipped — missing metadata degrades to a full read, not to
-    silent row loss."""
+def test_delete_where_rewrites_files_without_stats(spark, table, monkeypatch):
+    """A file lacking stats for the predicate column must be rewritten,
+    never carried — missing metadata degrades to a full rewrite, not
+    to matching rows that survive the delete."""
+    import dataclasses
+
     tt.append(_df(spark, 0, 50), table)
+    n_files = len(tt.snapshot(table).files)
     real = tt.snapshot
 
     def stripped(path, version=None):
-        s = real(path, version)
-        return tt.Snapshot(
-            s.version, s.files, s.rows, s.action, s.committed_at, s.meta, {}
-        )
+        return dataclasses.replace(real(path, version), file_stats={})
 
     monkeypatch.setattr(tt, "snapshot", stripped)
-    df = tt.read_pruned(spark, table, "id", lo=0, hi=9)
-    assert sorted(r.id for r in df.collect()) == list(range(10))
+    rewritten, carried, got, expect = _pruned_delete(
+        spark, table, "id", lo=0, hi=9
+    )
+    assert (rewritten, carried) == (n_files, 0)
+    assert got == expect == list(range(10, 50))
 
 
 def test_clustered_write_makes_stats_selective(spark, table):
     """Range-clustered commits give near-disjoint per-file ranges, so a
-    narrow predicate scans ~1 file; the same data committed shuffled
+    narrow predicate rewrites ~1 file; the same data committed shuffled
     spans the domain in every file and prunes nothing."""
     import pyspark.sql.functions as F
 
@@ -175,10 +207,13 @@ def test_clustered_write_makes_stats_selective(spark, table):
         .repartition(8)
     )
     tt.overwrite(df, table, cluster_by=["k"], target_files=8)
-    pruned = tt.read_pruned(spark, table, "k", lo=0, hi=10)
-    assert len(pruned.inputFiles()) < len(tt.snapshot(table).files)
-    expect = df.filter("k >= 0 AND k <= 10").count()
-    assert pruned.count() == expect
+    rewritten, carried, got, expect = _pruned_delete(
+        spark, table, "k", lo=0, hi=10
+    )
+    assert rewritten < len(tt.snapshot(table).files)
+    assert carried > 0
+    assert got == expect
+    assert len(got) == df.filter("NOT (k >= 0 AND k <= 10)").count()
 
 
 def test_delete_where_rewrites_only_overlapping_files(spark, table):
@@ -367,44 +402,32 @@ def _land_ts_days(spark, table, hour: int) -> None:
         )
 
 
-def _pruned_vs_filter(spark, table, lo, hi):
-    """``read_pruned`` on ``ts`` within [lo, hi]: (files scanned,
-    pruned ids, ids of the unpruned filter)."""
-    from pyspark.sql import functions as F
-
-    pruned = tt.read_pruned(spark, table, "ts", lo=lo, hi=hi)
-    expect = tt.read(spark, table).filter(
-        (F.col("ts") >= F.lit(lo)) & (F.col("ts") <= F.lit(hi))
-    )
-    return (
-        len(set(pruned.inputFiles())),
-        sorted(r.id for r in pruned.collect()),
-        sorted(r.id for r in expect.collect()),
-    )
-
-
-def test_read_pruned_timestamp_column(spark, table):
+def test_delete_where_prunes_timestamp_column(spark, table):
     """Timestamp stats are recorded as UTC-naive ISO strings (the
     ``_enc_stat`` canonicalization), so query-side bounds must enter
     the same domain: a raw datetime bound would compare
     str-vs-datetime (TypeError).  A ``date`` bound compares at that
     day's midnight, as Spark does: a fourth file holds one row at
     exactly 2024-03-03T00:00, which ``hi = date(2024, 3, 3)`` must
-    keep (its ISO day alone sorts before that instant).  Pins, for
-    both bound types: pruning actually skips files, and the result
-    equals the unpruned filter."""
+    rewrite (its ISO day alone sorts before that instant).  Pins, for
+    both bound types: pruning actually carries files, and the
+    surviving rows equal the unpruned complement."""
     import datetime as dt
 
     _land_ts_days(spark, table, 6)
     _land_ts_rows(spark, table, [(399, dt.datetime(2024, 3, 3))])
-    for lo, hi, n_kept, ids in [
+    all_ids = [100, 101, 102, 200, 201, 202, 300, 301, 302, 399]
+    for lo, hi, n_rewritten, deleted in [
         (dt.datetime(2024, 3, 2, 0, 0), dt.datetime(2024, 3, 2, 23, 59),
          1, [200, 201, 202]),
         (dt.date(2024, 3, 2), dt.date(2024, 3, 3), 2, [200, 201, 202, 399]),
     ]:
-        n_files, got, expect = _pruned_vs_filter(spark, table, lo, hi)
-        assert n_files == n_kept, (lo, hi)  # day-1/day-3 files skipped
-        assert got == expect == ids, (lo, hi)
+        rewritten, carried, got, expect = _pruned_delete(
+            spark, table, "ts", lo, hi
+        )
+        # day-1/day-3 files carried
+        assert (rewritten, carried) == (n_rewritten, 4 - n_rewritten), (lo, hi)
+        assert got == expect == [i for i in all_ids if i not in deleted], (lo, hi)
 
 
 def test_delete_where_date_bound_on_timestamp_column(spark, table):
@@ -446,31 +469,34 @@ path = sys.argv[1]
 tt.init_table(path)
 # rows at 20:00-22:00 New York time fall on the NEXT day in UTC
 T._land_ts_days(spark, path, 20)
-n_files, got, expect = T._pruned_vs_filter(
-    spark, path,
+stats = [tt.snapshot(path).file_stats[f]["cols"].get("ts")
+         for f in tt.snapshot(path).files]
+by_time = T._pruned_delete(
+    spark, path, "ts",
     dt.datetime(2024, 3, 2, 0, 0), dt.datetime(2024, 3, 2, 23, 59),
 )
 # date bounds compare at New York midnight, 05:00 UTC
-by_date = T._pruned_vs_filter(spark, path, dt.date(2024, 3, 2), dt.date(2024, 3, 3))
-stats = [tt.snapshot(path).file_stats[f]["cols"].get("ts")
-         for f in tt.snapshot(path).files]
-json.dump({"n_files": n_files, "got": got, "expect": expect,
-           "by_date": by_date, "stats": stats}, open(sys.argv[2], "w"))
+by_date = T._pruned_delete(
+    spark, path, "ts", dt.date(2024, 3, 2), dt.date(2024, 3, 3)
+)
+json.dump({"by_time": by_time, "by_date": by_date, "stats": stats},
+          open(sys.argv[2], "w"))
 spark.stop()
 """
 
 
-def test_read_pruned_timestamp_non_utc_tz(tmp_path):
+def test_delete_where_timestamp_non_utc_tz(tmp_path):
     """A NON-UTC driver/session timezone shifts Spark-collected (naive,
     local) timestamps away from the footers' UTC instants.  A fresh
     subprocess JVM pinned to America/New_York (TZ env + user.timezone
     + session tz) lands one file per local day at 20:00-22:00, which
-    is the next day in UTC, and prunes on a naive local-day bound.
+    is the next day in UTC, and deletes on a naive local-day bound.
     Without ``_enc_stat``'s naive->UTC conversion the bound would
-    compare as UTC wall time: it would keep day 1's file and skip day
-    2's, losing every matching row.  A ``date`` upper bound must
-    likewise widen to New York midnight (05:00 UTC): its ISO day alone
-    sorts before day 2's UTC stats and skipped that file."""
+    compare as UTC wall time: it would rewrite day 1's file and carry
+    day 2's, so every matching row would survive the delete.  A
+    ``date`` upper bound must likewise widen to New York midnight
+    (05:00 UTC): its ISO day alone sorts before day 2's UTC stats and
+    carried that file."""
     import json as _json
     import pathlib
     import subprocess
@@ -498,12 +524,14 @@ def test_read_pruned_timestamp_non_utc_tz(tmp_path):
     # footer stats are UTC-naive: local 2024-03-02 20:00 EST is
     # 2024-03-03 01:00 UTC
     assert ["2024-03-03T01:00:00", "2024-03-03T03:00:00"] in r["stats"]
-    assert r["n_files"] == 1, r
-    assert r["got"] == r["expect"] == [200, 201, 202], r
-    # the lower ISO-day bound keeps day 1's file too (conservative)
-    n_files, got, expect = r["by_date"]
-    assert n_files == 2, r
-    assert got == expect == [200, 201, 202], r
+    survivors = [100, 101, 102, 300, 301, 302]
+    rewritten, carried, got, expect = r["by_time"]
+    assert (rewritten, carried) == (1, 2), r
+    assert got == expect == survivors, r
+    # the lower ISO-day bound rewrites day 1's file too (conservative)
+    rewritten, carried, got, expect = r["by_date"]
+    assert (rewritten, carried) == (2, 1), r
+    assert got == expect == survivors, r
 
 
 def test_read_at_version_and_timestamp(spark, table):
@@ -795,6 +823,46 @@ def test_merge_into_empty_source_carries_every_file(spark, table):
     assert out.files == before.files
     got = sorted((r.id, r.v) for r in tt.read(spark, table).collect())
     assert got == [(i, i * 2) for i in range(300)]
+
+
+def test_merge_into_prunes_composite_key(spark, table):
+    """A ``(k, j)`` merge keeps a base file only when it overlaps the
+    source's [min, max] on EVERY key column: four files split k and j
+    into halves, the source's k range overlaps two of them and its j
+    range another two, and only the one file in both is rewritten.
+    The result equals an unpruned merge over the whole table; an empty
+    source carries every file."""
+    from play_bq_gcp_spark.operators.merge import merge_insert_and_upsert
+
+    for k0, j0 in [(0, 0), (0, 10), (100, 0), (100, 10)]:
+        tt.append(
+            spark.range(k0, k0 + 100)
+            .selectExpr("id AS k", f"{j0} + id % 10 AS j", "id AS v")
+            .coalesce(1),
+            table,
+        )
+    before = tt.snapshot(table)
+    assert len(before.files) == 4
+    src = spark.createDataFrame(
+        [(50, 0, -1), (57, 3, -2)],  # update (50, 0); insert (57, 3)
+        "k long, j long, v long",
+    )
+    expect = sorted(
+        map(tuple, merge_insert_and_upsert(
+            tt.read(spark, table), src, ["k", "j"], ["v"]
+        ).collect())
+    )
+    out = tt.merge_into(spark, table, src, ["k", "j"], ["v"])
+    assert len(set(before.files) - set(out.files)) == 1
+    assert len(set(before.files) & set(out.files)) == 3
+    got = sorted(map(tuple, tt.read(spark, table).collect()))
+    assert got == expect
+    assert (50, 0, -1) in got and (57, 3, -2) in got and len(got) == 401
+
+    mid = tt.snapshot(table)
+    empty = spark.createDataFrame([], "k long, j long, v long")
+    out = tt.merge_into(spark, table, empty, ["k", "j"], ["v"])
+    assert out.files == mid.files and out.rows == 401
 
 
 def test_every_commit_goes_through_the_commit_helper():

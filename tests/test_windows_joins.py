@@ -20,16 +20,6 @@ def test_lag_delta(spark):
     assert out[("v", 1)] is None
 
 
-def test_topk_per_group(spark):
-    df = spark.createDataFrame(
-        [("a", i, float(i)) for i in range(10)] + [("b", i, float(-i)) for i in range(5)],
-        "g string, id int, v double",
-    )
-    out = windows.topk_per_group(df, "g", [F.col("v").desc(), F.col("id")], 2).collect()
-    got = {(r.g, r.id) for r in out}
-    assert got == {("a", 9), ("a", 8), ("b", 0), ("b", 1)}
-
-
 def test_sessionize_gap(spark):
     t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
     rows = [
@@ -89,24 +79,6 @@ def test_range_join_bands(spark):
     )
     out = {r.id: r.band for r in joins_advanced.range_join_bands(facts, bands, "v").collect()}
     assert out == {1: "lo", 2: "hi", 3: "hi"}
-
-
-def test_range_join_bucketed_matches_broadcast_form(spark, sf_dir):
-    from play_bq_gcp_spark.catalog import read_table
-
-    bands = spark.createDataFrame(
-        [("low", 0.0, 150000.0), ("mid", 150000.0, 350000.0),
-         ("high", 350000.0, 1000000000.0)],
-        "band string, lo double, hi double",
-    )
-    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    a = joins_advanced.range_join_bands(orders, bands, "o_totalprice")
-    b = joins_advanced.range_join_bucketed(
-        orders, bands, "o_totalprice", bucket_width=250_000.0
-    )
-    got_a = sorted((r.o_orderkey, r.band) for r in a.collect())
-    got_b = sorted((r.o_orderkey, r.band) for r in b.collect())
-    assert got_a == got_b
 
 
 def test_funnel_min_of_firsts_requires_order(spark):
